@@ -333,6 +333,15 @@ object Dedup {
     * the bucketed base AND the build-time df sibling that freezes the
     * prefix order for incremental appends ([[graft.sources
     * .PpIndex.writeDf]]).
+    *
+    * Publish order is NOT atomic across the two siblings: `_df`'s
+    * generation is published by `writeDf` before the base's by
+    * `write`. A crash (or an append racing a rebuild) between the two
+    * pairs the NEW frozen df with the OLD base, so appends in that
+    * window rank under a prefix order the live base was not built
+    * with. The single-manifest publish of ROADMAP.md item 3 (both
+    * siblings under one commit) closes the window; until then a build
+    * that crashed must be re-run before anything appends.
     */
   def buildPpIndexOver(s: SparkSession, docs: DataFrame, table: String): Unit = {
     val ex = cp(ppExplode(docs))
@@ -388,7 +397,7 @@ object Dedup {
     *    BENCHNOTES r15. Rebuild when it drifts past budget — WHEN is
     *    [[ppArtifactProbe]]'s one-row reading (r20): threshold
     *    `appended_frac` / `crossed_mass_frac` the way
-    *    [[graft.streaming.BmIngest.startMaintained]] thresholds the
+    *    [[graft.streaming.IndexIngest.bm25Maintained]] thresholds the
     *    BmIndex probe.
     *
     * Appended files keep the bucket layout (same bucketBy spec), so
@@ -399,27 +408,28 @@ object Dedup {
   def appendToPpIndex(s: SparkSession, table: String, newDocs: DataFrame): Unit = {
     // loud-failure guard (the appendToIvfAdcIndex doctrine): a re-appended
     // doc_id would duplicate its base rows and double-count the verify
-    val dup = newDocs.select("doc_id")
-      .join(graft.sources.PpIndex.read(s, table).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .limit(1).collect()
-    require(dup.isEmpty, s"appendToPpIndex: doc_id ${dup.headOption.map(_.get(0)).getOrElse("")} " +
-      s"is already indexed in $table — appended ids must be disjoint " +
-      "(a duplicate would double-count the verify); rebuild instead")
+    graft.sources.AtomicSwap.requireDisjoint("appendToPpIndex", newDocs,
+      graft.sources.PpIndex.read(s, table), "doc_id", table)
     graft.sources.PpIndex.append(rankUnderFrozenOrder(s, table, newDocs), s, table)
   }
 
   /** Rank a `(doc_id, sh)` relation's fingerprint rows under `table`'s
     * BUILD-FROZEN total order — the append path's core, shared by
     * [[appendToPpIndex]] and the streaming ingest
-    * ([[graft.streaming.PpIngest]]). Deterministic given the docs and
-    * the frozen df sibling: the same doc always produces the SAME
-    * (doc_id, s, rk, n) rows regardless of batch boundaries or
-    * replays — what makes row-level replay absorption exact.
+    * ([[graft.streaming.IndexIngest.pp]], which loads the frozen df
+    * sibling once per stream and ranks through the overload below).
+    * Deterministic given the docs and the frozen df sibling: the same
+    * doc always produces the SAME (doc_id, s, rk, n) rows regardless
+    * of batch boundaries or replays — what makes row-level replay
+    * absorption exact.
     */
   private[graft] def rankUnderFrozenOrder(s: SparkSession, table: String,
+      newDocs: DataFrame): DataFrame =
+    rankUnderFrozenOrder(graft.sources.PpIndex.readDf(s, table), newDocs)
+
+  /** [[rankUnderFrozenOrder]] against an already-loaded df sibling. */
+  private[graft] def rankUnderFrozenOrder(frozen: DataFrame,
       newDocs: DataFrame): DataFrame = {
-    val frozen = graft.sources.PpIndex.readDf(s, table)
     val exNew = cp(ppExplode(newDocs))
     // the frozen order EXTENDED to never-seen fps at df 0 (rarest) —
     // left join, not inner: dropping unseen fps would shrink new docs'
@@ -682,7 +692,7 @@ object Dedup {
     // on the deterministic lower-75% doc_id prefix (freezing the df
     // order there), ingest the upper 25% through a REAL Structured
     // Streaming query (file source, one file per micro-batch,
-    // PpIngest's foreachBatch ranking each batch under the frozen
+    // the ingest loop's foreachBatch ranking each batch under the frozen
     // order with row-level replay absorption), and serve
     // jaccardPairsIndexed from the result. Batch-boundary-INDEPENDENT
     // by construction: ranking is per-doc under the build-frozen
@@ -691,7 +701,7 @@ object Dedup {
     // cap (d02c's verified precondition), so the assembled index
     // serves d02's oracle VERBATIM. A production ingest turns this
     // into the maintained loop by thresholding ppArtifactProbe per
-    // batch (the BmIngest.startMaintained shape; rebuild =
+    // batch (the IndexIngest.bm25Maintained shape; rebuild =
     // buildPpIndexOver, reader-safe through the pointer generations).
     // Mutable scratch (stage dir, stream checkpoint) is wiped at gate
     // start — a leftover checkpoint would mark the staged files
@@ -709,15 +719,15 @@ object Dedup {
         val cut = docs.agg(expr("percentile(doc_id, 0.75)"))
           .head().getDouble(0).toLong
         buildPpIndexOver(s, docs.filter(col("doc_id") <= cut), t)
-        // stage the upper quarter as (doc_id, text) — PpIngest owns
+        // stage the upper quarter as (doc_id, text) — the ingest owns
         // the shingling, exactly as a production stream would
         val raw = Tables(s, dir, "documents").select("doc_id", "text")
         raw.filter(col("doc_id") > cut).repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val q = graft.streaming.PpIngest.start(
+        val q = graft.streaming.IndexIngest.start(
           s.readStream.schema(raw.schema)
             .option("maxFilesPerTrigger", "1").parquet(stage),
-          t, checkpointDir = Some(ck))
+          graft.streaming.IndexIngest.pp(t), checkpointDir = Some(ck))
         q.processAllAvailable()
         q.stop()
         t

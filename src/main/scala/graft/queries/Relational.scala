@@ -73,10 +73,11 @@ object Relational {
     * aggregate; money columns are exact 2-decimal values
     * (CentsExactnessSpec pins it), so `round(x·100)` recovers the exact
     * cents long, the per-item product price_e2 · (100 − disc_e2) is an
-    * exact e4-units long, and the group sum stays far below 2^53 —
-    * whence `sum_e4.toDouble / 1e4` is the SAME correctly-rounded
-    * double the decimal sum's final cast yields (one rounding either
-    * way, of the same exact rational). SqlParitySpec + the oracle gate
+    * exact e4-units long, and the group sum stays below 2^53 up to
+    * SF ~15 (the scale bound on [[sumE2]]) — whence
+    * `sum_e4.toDouble / 1e4` is the SAME correctly-rounded double the
+    * decimal sum's final cast yields (one rounding either way, of the
+    * same exact rational). SqlParitySpec + the oracle gate
     * pin bit-equality; the oracle SQL keeps the decimal form.
     */
   private def revenueSumE4: Column =
@@ -99,10 +100,13 @@ object Relational {
     *
     * Scale bound (r21, r20 ADVICE): the worst consumer is a near-global
     * group of an e4-unit sum — q01's per-(returnflag, linestatus) Σ of
-    * price·(100−disc) holds ~1/6 of lineitem. At SF1000 (~6·10⁹ rows,
-    * ~3.7·10⁶ e4-units/row) that group reaches ~3.7·10¹⁵ ≈ 2^51.7, a
-    * ~2.5x margin; SF ≳ 2500 would cross 2^53 and the rewrite must
-    * revert to decimal for near-global e4 groups. CentsExactnessSpec's
+    * price·(100−disc) holds ~1/6 of lineitem. Measured on the fixtures
+    * a lineitem row carries ~5·10⁸ e4-units (sf0.001: Σ ≈ 3.17·10¹²
+    * over 6000 rows — cents × (100−disc), not cents alone), so that
+    * group grows by ~5·10¹⁴ per SF (10⁶ rows) and crosses 2^53 ≈
+    * 9·10¹⁵ near SF 15–20. That is the point where the rewrite must
+    * revert to decimal for near-global e4 groups; at SF100 it would
+    * already sit near 2^55.5. CentsExactnessSpec's
     * headroom test (table-total e4 < 2^53/8 at every checked SF,
     * including `$SPARK_GRAFT_SF_DIR`) turns a violation into a legible
     * failure instead of an opaque oracle hash mismatch.

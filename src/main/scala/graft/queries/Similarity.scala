@@ -110,7 +110,7 @@ object Similarity {
   /** v12d's gated recall floor — IVFADC assembled by the STREAMING
     * ingest (bootstrap on the lower vec_id half freezes the seed
     * codebook + coarse book there; the upper half arrives through
-    * VecIngest's foreachBatch appends). V12dProbe measured 19/22/20
+    * the ingest loop's foreachBatch appends). V12dProbe measured 19/22/20
     * of 30 across the SFs through the exact gate path — matching the
     * full-build seed book's 19/22/18 (identical at the small SFs, +2
     * at sf0.1): the book saw half the corpus, but the near-isotropic
@@ -328,26 +328,18 @@ object Similarity {
     * CODEBOOK would put them; retraining is a rebuild, not an append.
     */
   def appendToIvfIndex(s: SparkSession, newVecs: DataFrame, path: String): Unit = {
-    val dup = newVecs.select("vec_id")
-      .join(graft.sources.IvfIndex.read(s, path).select("vec_id"),
-        Seq("vec_id"), "left_semi")
-      .limit(1).collect()
-    require(dup.isEmpty, s"appendToIvfIndex: vec_id ${dup.headOption.map(_.get(0)).getOrElse("")} " +
-      s"is already indexed at $path — appended ids must be disjoint; rebuild instead")
-    appendToIvfIndexPreChecked(s, newVecs, path,
+    graft.sources.AtomicSwap.requireDisjoint("appendToIvfIndex", newVecs,
+      graft.sources.IvfIndex.read(s, path), "vec_id", path)
+    writeIvfAppend(s, newVecs, path,
       collectBook(graft.sources.IvfIndex.codebook(s, path)))
   }
 
-  /** [[appendToIvfIndex]]'s write half for rows the CALLER already
-    * proved disjoint from the store (r20, optimization: the streaming
-    * maintenance loop anti-joins every micro-batch against the store
-    * before appending, so re-probing disjointness here was a second
-    * full-store join per batch). `book` is the pre-collected codebook
-    * — callers appending under an unchanged frozen book across many
-    * batches collect it once; assignment is bit-identical either way
-    * (same rows, same argmax kernel).
+  /** [[appendToIvfIndex]]'s write half, for rows already disjoint from
+    * the store: assign under the collected codebook `book` and append.
+    * The streaming ingest ([[graft.streaming.IndexIngest]]) collects the
+    * frozen book once per stream and calls this every micro-batch.
     */
-  private[graft] def appendToIvfIndexPreChecked(s: SparkSession,
+  private[graft] def writeIvfAppend(s: SparkSession,
       newVecs: DataFrame, path: String,
       book: Seq[(Long, Seq[Double], Double)]): Unit = {
     val e = newVecs
@@ -373,7 +365,7 @@ object Similarity {
     * Reads ONLY the artifact, never the raw corpus — the shape a
     * streaming maintenance job needs, where the index IS the corpus of
     * record. Safe to run while READERS are live (generation layout);
-    * WRITERS must be serialized, which [[graft.streaming.IvfIngest]]
+    * WRITERS must be serialized, which [[graft.streaming.IndexIngest]]
     * guarantees by running this inside `foreachBatch` (micro-batches
     * are serial — SCALE.md's writer-serialization regime 1). The read
     * snapshot resolves the current generation, which `writeGen`'s
@@ -975,62 +967,45 @@ object Similarity {
       path: String): Unit = {
     // loud-failure guard (r15, ADVICE): the serving path relies on
     // "each vector lives in exactly one list" — a duplicate vec_id
-    // would silently serve duplicate neighbors. One semi-join probe of
-    // the new ids against the index, bounded by the batch size.
-    val dup = newVecs.select("vec_id")
-      .join(graft.sources.PqIndex.read(s, path).select("vec_id"),
-        Seq("vec_id"), "left_semi")
-      .limit(1).collect()
-    require(dup.isEmpty, s"appendToIvfAdcIndex: vec_id ${dup.head.get(0)} " +
-      s"is already indexed at $path — appended ids must be disjoint " +
-      "(a duplicate would serve twice; rebuild instead)")
-    appendToIvfAdcPreChecked(s, newVecs, path, adcAppendState(s, path))
+    // would silently serve duplicate neighbors
+    graft.sources.AtomicSwap.requireDisjoint("appendToIvfAdcIndex", newVecs,
+      graft.sources.PqIndex.read(s, path), "vec_id", path)
+    ivfAdcAppendWriter(s, path)(newVecs)
   }
 
-  /** The append's FROZEN inputs — PQ codebook, coarse routing book —
-    * collected once (r20, optimization): a streaming ingest appends
-    * under an unchanged artifact every micro-batch, so the per-batch
-    * driver collects of both books were pure overhead. */
-  private[graft] final case class AdcAppendState(cb: Array[Double], m: Int,
-      k: Int, centsFlat: Array[Double], cids: Array[Long],
-      coarse: Seq[(Long, Seq[Double], Double)])
-
-  private[graft] def adcAppendState(s: SparkSession,
-      path: String): AdcAppendState = {
+  /** [[appendToIvfAdcIndex]]'s write half: load the append's FROZEN
+    * inputs — PQ codebook, coarse routing book — once, and return the
+    * encode-and-append for rows already disjoint from the store. The
+    * streaming ingest ([[graft.streaming.IndexIngest]]) builds it once
+    * per stream and calls it every micro-batch.
+    */
+  private[graft] def ivfAdcAppendWriter(s: SparkSession,
+      path: String): DataFrame => Unit = {
     val (cb, m, k, centsFlat, cids) = graft.sources.PqIndex.codebook(s, path)
     require(centsFlat.nonEmpty,
       s"appendToIvfAdcIndex: $path is a flat PQ index, not IVFADC")
-    AdcAppendState(cb, m, k, centsFlat, cids,
-      collectBook(s.read.parquet(
-        graft.sources.AtomicSwap.dataDir(s, path + "_coarse"))))
-  }
-
-  /** [[appendToIvfAdcIndex]]'s write half for rows the CALLER already
-    * proved disjoint from the store (the streaming ingest anti-joins
-    * every micro-batch — r20, the appendToIvfIndexPreChecked shape).
-    * Encoding/placement is bit-identical to the checked path: same
-    * rows, same books, same kernels.
-    */
-  private[graft] def appendToIvfAdcPreChecked(s: SparkSession,
-      newVecs: DataFrame, path: String, st: AdcAppendState): Unit = {
-    val e = newVecs
-      .select(col("vec_id"), col("label"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val assign = assignToBook(e, st.coarse).select("vec_id", "c_id", "v", "nrm")
-    import s.implicits._
-    val cIdxDf = broadcast(st.cids.zipWithIndex.toSeq.toDF("c_id", "c_idx"))
-    // generation resolved ONCE; commitAppend fails loudly if a compact
-    // raced the append (r18, ADVICE: writers serialized, readers safe)
-    val intoDir = graft.sources.AtomicSwap.dataDir(s, path)
-    assign.join(cIdxDf, "c_id")
-      .select(col("vec_id"), col("c_id"),
-        pqEncodeResidual(col("v"), col("nrm"), col("c_idx"),
-          st.cb, st.centsFlat, st.m, st.k).as("pq"))
-      .repartition(col("c_id"))
-      .write.mode("append").partitionBy("c_id")
-      .parquet(intoDir)
-    // manifest bump last — the durable record that the append committed
-    graft.sources.AtomicSwap.commitAppend(s, path, intoDir)
+    val coarse = collectBook(s.read.parquet(
+      graft.sources.AtomicSwap.dataDir(s, path + "_coarse")))
+    newVecs => {
+      val e = newVecs
+        .select(col("vec_id"), col("label"), toDoubleVec(col("embedding")).as("v"))
+        .withColumn("nrm", norm(col("v")))
+      val assign = assignToBook(e, coarse).select("vec_id", "c_id", "v", "nrm")
+      import s.implicits._
+      val cIdxDf = broadcast(cids.zipWithIndex.toSeq.toDF("c_id", "c_idx"))
+      // generation resolved ONCE; commitAppend fails loudly if a compact
+      // raced the append (r18, ADVICE: writers serialized, readers safe)
+      val intoDir = graft.sources.AtomicSwap.dataDir(s, path)
+      assign.join(cIdxDf, "c_id")
+        .select(col("vec_id"), col("c_id"),
+          pqEncodeResidual(col("v"), col("nrm"), col("c_idx"),
+            cb, centsFlat, m, k).as("pq"))
+        .repartition(col("c_id"))
+        .write.mode("append").partitionBy("c_id")
+        .parquet(intoDir)
+      // manifest bump last — the durable record that the append committed
+      graft.sources.AtomicSwap.commitAppend(s, path, intoDir)
+    }
   }
 
   /** The build half of [[ivfAdcTop3]]: coarse book collect, residual
@@ -1835,8 +1810,8 @@ object Similarity {
     // IVFADC served from a STREAM-ASSEMBLED index (r16 — the t17
     // progression for the vector family, closing the streaming-
     // maintenance gate pair): [[v12dStreamIndex]] bootstraps on the
-    // lower vec_id half and ingests the upper half through VecIngest's
-    // foreachBatch appends under a real streaming query; serving is
+    // lower vec_id half and ingests the upper half through the ingest
+    // loop's foreachBatch appends under a real streaming query; serving is
     // ivfAdcServe, the production path, against the full query set.
     // Same within_bound contract as v12 (the exact ground-truth half
     // is index-independent — v12's oracle verbatim); the recall floor
@@ -1966,8 +1941,8 @@ object Similarity {
         assignToBook(eb, book0Rows).select("vec_id", "c_id", "v", "nrm"))
       graft.sources.IvfIndex.writeWithCodebook(bootAssign, book0, path)
       // appended ids (> cut) are disjoint from the bootstrap (<= cut)
-      // BY CONSTRUCTION — the prechecked append skips the probe (r20)
-      appendToIvfIndexPreChecked(s,
+      // BY CONSTRUCTION — the write half skips the guard's probe (r20)
+      writeIvfAppend(s,
         raw.filter(col("vec_id") > cut).select("vec_id", "label", "embedding"),
         path, book0Rows)
       // pre-rebuild readers: file lists resolve against the current
@@ -2034,7 +2009,7 @@ object Similarity {
     // the batch lifecycle; this gate runs it under LIVE ingest.
     // Bootstrap the IVF index on the lower vec_id half (seed book,
     // frozen stats), PIN a serving reader against that generation,
-    // then stream the upper half through [[graft.streaming.IvfIngest]]
+    // then stream the upper half through [[graft.streaming.IndexIngest]]
     // — whose foreachBatch appends each micro-batch AND runs the
     // maintenance policy: drift probe, and past the 0.3 threshold a
     // retrain-rebuild through writeGen WHILE THE STREAM KEEPS
@@ -2094,12 +2069,12 @@ object Similarity {
         d
       }
       val rebuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = graft.streaming.IvfIngest.startMaintained(
+      val q = graft.streaming.IndexIngest.start(
         s.readStream.schema(upper.schema)
           .option("maxFilesPerTrigger", "1").parquet(stage),
-        path, threshold = 0.3,
-        retrain = ss => trainedBook16(ss, dir),
-        onRebuild = () => { rebuilds.incrementAndGet(); () },
+        graft.streaming.IndexIngest.ivfMaintained(path, threshold = 0.3,
+          retrain = ss => trainedBook16(ss, dir),
+          onRebuild = () => { rebuilds.incrementAndGet(); () }),
         checkpointDir = Some(ck))
       q.processAllAvailable()
       q.stop()
@@ -2232,7 +2207,7 @@ object Similarity {
     * codebook, coarse book, and ranking artifacts freeze there — the
     * stale-index contract), then ingest the upper half through a REAL
     * Structured Streaming query (file source, one file per
-    * micro-batch, [[graft.streaming.VecIngest]]'s foreachBatch append
+    * micro-batch, [[graft.streaming.IndexIngest]]'s foreachBatch append
     * with anti-join replay absorption). Index CONTENT is
     * batch-boundary-independent: appends are placement-deterministic
     * against the persisted artifacts (IvfAdcAppendSpec) and ids are
@@ -2263,10 +2238,10 @@ object Similarity {
       val rest = e.filter(col("vec_id") > cut)
         .select("vec_id", "label", "embedding")
       rest.repartition(3).write.mode("overwrite").parquet(stage)
-      val q = graft.streaming.VecIngest.start(
+      val q = graft.streaming.IndexIngest.start(
         s.readStream.schema(rest.schema)
           .option("maxFilesPerTrigger", "1").parquet(stage),
-        p, checkpointDir = Some(ck))
+        graft.streaming.IndexIngest.ivfAdc(p), checkpointDir = Some(ck))
       q.processAllAvailable()
       q.stop()
       p

@@ -57,38 +57,26 @@ object TextAnalysis {
     */
   def appendToBm25Index(s: SparkSession, path: String,
       newDocs: DataFrame): Unit = {
-    val dup = newDocs.select("doc_id")
-      .join(graft.sources.BmIndex.doclens(s, path).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .limit(1).collect()
-    require(dup.isEmpty, s"appendToBm25Index: doc_id ${dup.headOption.map(_.get(0)).getOrElse("")} " +
-      s"is already indexed at $path — appended ids must be disjoint; rebuild instead")
-    val (postings, doclens) = bm25Derive(newDocs.select("doc_id", "text"))
-    graft.sources.BmIndex.append(postings, doclens, path)
+    graft.sources.AtomicSwap.requireDisjoint("appendToBm25Index", newDocs,
+      graft.sources.BmIndex.doclens(s, path), "doc_id", path)
+    writeBm25Append(path, newDocs)
   }
 
-  /** Append a batch's GENUINELY-NEW docs — anti-join replay absorption
-    * fused with the append (r20, optimization: the streaming ingest
-    * path ran an emptiness probe, a redundant disjointness probe, and
-    * a full-store drift scan per micro-batch; the anti-join here IS
-    * the disjointness guarantee). Returns the appended `(n_docs,
-    * sum_dl)` — exact longs the maintained ingest's policy state
-    * tracks instead of re-scanning the store every batch. Tokenization
-    * still runs once (bm25Derive's checkpointed base feeds the count,
-    * both writes, and the length sum).
+  /** [[appendToBm25Index]]'s write half, for docs already disjoint from
+    * the store: tokenize once (bm25Derive's checkpointed base feeds the
+    * count, both writes and the length sum) and append, skipping the
+    * write for an empty batch. Returns the appended `(n_docs, sum_dl)` —
+    * exact longs the maintained ingest ([[graft.streaming.IndexIngest]])
+    * tracks its drift state on instead of re-scanning the store every
+    * micro-batch (r20).
     */
-  private[graft] def appendFreshToBm25Index(s: SparkSession, path: String,
-      batch: DataFrame): (Long, Long) = {
-    val fresh = batch.select("doc_id", "text")
-      .join(graft.sources.BmIndex.doclens(s, path).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
-    val (postings, doclens) = bm25Derive(fresh)
+  private[graft] def writeBm25Append(path: String,
+      docs: DataFrame): (Long, Long) = {
+    val (postings, doclens) = bm25Derive(docs)
     val r = doclens.agg(count(lit(1)).as("n"),
       coalesce(sum(col("dl")), lit(0L)).as("s")).head()
-    val n = r.getLong(0)
-    if (n > 0) graft.sources.BmIndex.append(postings, doclens, path)
-    (n, if (n > 0) r.getLong(1) else 0L)
+    if (r.getLong(0) > 0) graft.sources.BmIndex.append(postings, doclens, path)
+    (r.getLong(0), r.getLong(1))
   }
 
   /** REBUILD the BM25 index from its own persisted state with REFRESHED
@@ -102,14 +90,14 @@ object TextAnalysis {
     * per-doc independently, the rebuilt artifact's CONTENT equals a
     * fresh [[buildBm25Index]] over the same documents, so post-rebuild
     * serving scores are bit-identical to a full-corpus build's
-    * (BmIngestMaintainedSpec pins it — the refreshed stats ARE the
+    * (BmMaintainedSpec pins it — the refreshed stats ARE the
     * full-corpus stats). Crash-window duplicate posting rows (see
     * [[graft.sources.BmIndex.append]]) are collapsed by the per-
     * (term, doc) max — the consumers' convention, applied once at the
     * rebuild so `_df` never counts a doc twice. Safe under live
     * READERS (generation layout, `retain` = the snapshot-expiry dial);
-    * WRITERS must be serialized, which [[graft.streaming.BmIngest
-    * .startMaintained]] guarantees by running this inside
+    * WRITERS must be serialized, which [[graft.streaming.IndexIngest
+    * .bm25Maintained]] guarantees by running this inside
     * `foreachBatch` (SCALE.md's writer-serialization regime 1).
     */
   def rebuildBm25Index(s: SparkSession, path: String,
@@ -1164,7 +1152,7 @@ object TextAnalysis {
     // df/n_docs/avgdl there), pin a reader on the bootstrap
     // generation, then ingest the upper half through a REAL Structured
     // Streaming file source (one file per micro-batch) via
-    // [[graft.streaming.BmIngest.startMaintained]] — each batch
+    // [[graft.streaming.IndexIngest.bm25Maintained]] — each batch
     // appends under the frozen stats, reads the drift probe, and when
     // appended_frac crosses 0.45 REBUILDS the index with REFRESHED
     // statistics inside foreachBatch. The threshold is sized so the
@@ -1205,11 +1193,11 @@ object TextAnalysis {
         docs.filter(col("doc_id") > cut).repartition(3)
           .write.mode("overwrite").parquet(stage)
         val rebuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-        val q = graft.streaming.BmIngest.startMaintained(
+        val q = graft.streaming.IndexIngest.start(
           s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "1").parquet(stage),
-          p, threshold = 0.45,
-          onRebuild = () => { rebuilds.incrementAndGet(); () },
+          graft.streaming.IndexIngest.bm25Maintained(p, threshold = 0.45,
+            onRebuild = () => { rebuilds.incrementAndGet(); () }),
           checkpointDir = Some(ck))
         q.processAllAvailable()
         q.stop()
@@ -1229,7 +1217,7 @@ object TextAnalysis {
     // doc_ids (freezing df/n_docs/avgdl there — the stale-index
     // serving contract), then ingest the upper half through a REAL
     // Structured Streaming query (file source, one file per
-    // micro-batch, BmIngest's foreachBatch append with replay
+    // micro-batch, the ingest loop's foreachBatch append with replay
     // absorption), and serve the fixed t14 query from the result. The
     // ORACLE mirrors the frozen-stats contract exactly: tf/dl over the
     // full corpus, df/n_docs/avgdl computed ONLY over the bootstrap
@@ -1239,7 +1227,7 @@ object TextAnalysis {
     // leave the stream nothing to do). Batch-boundary-independent:
     // appends commute (disjoint ids, per-doc rows, frozen stats), so
     // the file→batch split never moves the hash. Micro-batch append
-    // mechanics == batch append mechanics is BmIngestSpec's pin; this
+    // mechanics == batch append mechanics is the ingest specs' pin; this
     // gate adds the driver hash over the stream-assembled artifact.
     "t17_bm25_streamed" -> ((s, dir) => {
       val path = graft.SharedProjections.reuseArtifact("bm25s_idx", dir) {
@@ -1259,10 +1247,10 @@ object TextAnalysis {
         // stage the upper half as 3 files = 3 micro-batches
         docs.filter(col("doc_id") > cut).repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val q = graft.streaming.BmIngest.start(
+        val q = graft.streaming.IndexIngest.start(
           s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "1").parquet(stage),
-          p, checkpointDir = Some(ck))
+          graft.streaming.IndexIngest.bm25(p), checkpointDir = Some(ck))
         q.processAllAvailable()
         q.stop()
         p

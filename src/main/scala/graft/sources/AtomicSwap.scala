@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe AND reader-safe lifecycle for persisted index artifacts:
   * the manifest-pinned GENERATION layout (r17 — see the block comment
@@ -280,6 +280,21 @@ object AtomicSwap {
     val keep = Set(next) ++ committed
     numsOf(fs, rp, "g", dirs = true).filterNot(keep)
       .foreach(k => fs.delete(new Path(rp, s"g$k"), true))
+  }
+
+  /** The batch appends' disjointness guard, shared by every index
+    * family: fail loudly if any `key` of `rows` is already in `live`
+    * (the store's live rows) — a duplicate would be served or counted
+    * twice. One semi-join probe bounded by the batch. It checks caller
+    * input; the streaming ingest never trips it, since its anti-join
+    * already dropped the live keys.
+    */
+  def requireDisjoint(op: String, rows: DataFrame, live: DataFrame,
+      key: String, at: String): Unit = {
+    val dup = rows.select(key).join(live.select(key), Seq(key), "left_semi")
+      .limit(1).collect()
+    require(dup.isEmpty, s"$op: $key ${dup.head.get(0)} is already " +
+      s"indexed at $at — appended ids must be disjoint; rebuild instead")
   }
 
   /** Record an append into the current generation — a manifest bump

@@ -141,7 +141,7 @@ object BmIndex {
     * over the new rows, existing files untouched.
     *
     * The two writes are separate jobs, NOT atomic together, and replay
-    * absorption (the [[graft.streaming.BmIngest]] anti-join and
+    * absorption (the [[graft.streaming.IndexIngest]] anti-join and
     * `appendToBm25Index`'s dup guard) keys on DOCLENS — so a crash in
     * the window between them leaves this batch's postings durable with
     * no doclens rows, and the replayed batch re-appends the SAME
@@ -150,7 +150,8 @@ object BmIndex {
     * exact-copy posting rows — which every consumer collapses by
     * aggregating per-(doc, term) tf with max() instead of sum()
     * (duplicates are bit-identical rows; max is idempotent where sum
-    * silently doubles tf). BmIngestSpec pins the partial-crash replay.
+    * silently doubles tf). The BM25 ingest spec pins the partial-crash
+    * replay.
     */
   def append(postingsNew: DataFrame, doclensNew: DataFrame,
       path: String): Unit = {
@@ -202,7 +203,7 @@ object BmIndex {
   /** Rewrite postings back to one file per bucket directory and the
     * doclens relation to `doclensFiles` files (r16, verdict ask #2 —
     * the maintenance companion to [[append]] behind [[graft.streaming
-    * .BmIngest]]): every micro-batch appends up to [[Buckets]] posting
+    * .IndexIngest]]): every micro-batch appends up to [[Buckets]] posting
     * files plus one doclens file, so a long-running stream accretes
     * tiny files and the per-query posting fetch opens batches × files.
     * Rows and the frozen `_df`/`_stats` siblings are untouched

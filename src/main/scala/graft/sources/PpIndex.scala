@@ -130,8 +130,8 @@ object PpIndex {
     * untuned session (Spark's default 200 partitions) building a small
     * corpus would otherwise produce hundreds of near-empty bucket files
     * and a 200-task merge join over them (r20 ADVICE). A base row is
-    * ~24 bytes; 256k rows ≈ a few MB parquet, the floor where a bucket
-    * stops being worth its per-file + per-task cost.
+    * ~24 bytes; 64k rows ≈ 1.5 MB before compression, the floor where
+    * a bucket stops being worth its per-file + per-task cost.
     */
   private val RowsPerBucket = 64L << 10
 

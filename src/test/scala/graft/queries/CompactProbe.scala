@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Dev measurement main (test scope): serve latency before/after
   * [[graft.sources.BmIndex.compact]] on a MANY-APPEND index at the
   * 100× replica (r16, verdict ask #2) — the tiny-file problem a
-  * long-running [[graft.streaming.BmIngest]] accretes, and what the
+  * long-running [[graft.streaming.IndexIngest]] accretes, and what the
   * swap-based compact buys back. Builds on half the corpus, appends
   * the rest in 16 micro-batch-sized chunks (each lands up to 64
   * posting files + one doclens file), then prices the fixed query

@@ -145,12 +145,12 @@ class MaintenanceLoopSpec extends SparkSpec {
       .select("vec_id", "label", "embedding")
     upper.repartition(3).write.mode("overwrite").parquet(stage)
     val rebuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = graft.streaming.IvfIngest.startMaintained(
+    val q = graft.streaming.IndexIngest.start(
       spark.readStream.schema(upper.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage),
-      path, threshold = 0.3,
-      retrain = ss => Similarity.ivfTrainOver(ss, e, 16, 3),
-      onRebuild = () => { rebuilds.incrementAndGet(); () },
+      graft.streaming.IndexIngest.ivfMaintained(path, threshold = 0.3,
+        retrain = ss => Similarity.ivfTrainOver(ss, e, 16, 3),
+        onRebuild = () => { rebuilds.incrementAndGet(); () }),
       checkpointDir = Some(ck))
     q.processAllAvailable()
     q.stop()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Dev measurement main (test scope): recall@3 of the v12d gate path
   * EXACTLY as gated — IVFADC bootstrapped on the lower vec_id half and
-  * assembled by VecIngest's streaming appends, served via ivfAdcServe
+  * assembled by the ingest loop's streaming appends, served via ivfAdcServe
   * — vs v12's full-build seed-book path, per SF. The numbers behind
   * V12dFloor; table in BENCHNOTES r16.
   *

@@ -6,7 +6,7 @@ import graft.SparkSpec
 import graft.queries.TextAnalysis
 
 /** Streaming BM25 maintenance (r15): documents streamed through
-  * [[BmIngest]] must produce EXACTLY the index a batch append gives —
+  * [[IndexIngest.bm25]] must produce EXACTLY the index a batch append gives —
   * including with a fully replayed batch (at-least-once absorption) —
   * and serving over the streamed index must equal serving over the
   * batch-appended one row for row.
@@ -36,8 +36,8 @@ class BmIngestSpec extends SparkSpec {
       import spark.implicits._
       val b = chunk.toSeq.map(r => (r.getLong(0), r.getString(1)))
         .toDF("doc_id", "text")
-      BmIngest.processBatch(b, streamed)
-      if (i == 1) BmIngest.processBatch(b, streamed) // crash replay
+      IndexIngest.processBatch(b, IndexIngest.bm25(streamed))
+      if (i == 1) IndexIngest.processBatch(b, IndexIngest.bm25(streamed)) // crash replay
     }
 
     def serve(p: String) = TextAnalysis.bm25Indexed(spark, p, qterms, k = 1 << 20)
@@ -73,7 +73,7 @@ class BmIngestSpec extends SparkSpec {
     TextAnalysis.appendToBm25Index(spark, crashed, rest)
     dlDir.listFiles().filterNot(f => beforeFiles(f.getName)).foreach(_.delete())
     // replay the whole batch, as at-least-once foreachBatch would
-    BmIngest.processBatch(rest, crashed)
+    IndexIngest.processBatch(rest, IndexIngest.bm25(crashed))
 
     def serve(p: String) = TextAnalysis.bm25Indexed(spark, p, qterms, k = 1 << 20)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),

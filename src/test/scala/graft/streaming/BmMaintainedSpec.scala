@@ -5,7 +5,7 @@ import graft.SparkSpec
 import graft.queries.TextAnalysis
 
 /** The BM25 maintenance loop (r20, verdict ask #1 — the v15 pattern
-  * applied to the search family): [[BmIngest.startMaintained]] appends
+  * applied to the search family): [[IndexIngest.bm25Maintained]] appends
   * per micro-batch under frozen statistics, thresholds the drift
   * probe, and rebuilds with REFRESHED `_df`/`_stats` inside
   * `foreachBatch`. Pinned here, on a corpus where staleness is
@@ -63,12 +63,13 @@ class BmMaintainedSpec extends SparkSpec {
     val ck = root + "/ck"
     docs.repartition(files).write.mode("overwrite").parquet(stage)
     val rebuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = BmIngest.startMaintained(
+    val q = IndexIngest.start(
       spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage),
-      path, threshold = threshold, avgdlThreshold = avgdlThreshold,
-      onRebuild = () => { rebuilds.incrementAndGet(); () },
-      checkpointDir = Some(ck), retain = retain)
+      IndexIngest.bm25Maintained(path, threshold = threshold,
+        avgdlThreshold = avgdlThreshold,
+        onRebuild = () => { rebuilds.incrementAndGet(); () }, retain = retain),
+      checkpointDir = Some(ck))
     q.processAllAvailable()
     q.stop()
     rebuilds.get()

@@ -8,7 +8,7 @@ import graft.queries.Dedup
 import graft.sources.PpIndex
 
 /** Streaming PPJoin-index maintenance (r17): documents streamed
-  * through [[PpIngest]] must produce EXACTLY the index a batch append
+  * through [[IndexIngest.pp]] must produce EXACTLY the index a batch append
   * gives — including with a fully replayed batch AND with a
   * half-committed batch (the mid-job-commit crash window, where part
   * of a doc's fingerprint rows are visible) — and serving over the
@@ -52,8 +52,8 @@ class PpIngestSpec extends SparkSpec {
       import spark.implicits._
       val b = chunk.toSeq.map(r => (r.getLong(0), r.getString(1)))
         .toDF("doc_id", "text")
-      PpIngest.processBatch(b, str)
-      if (i == 1) PpIngest.processBatch(b, str) // at-least-once replay
+      IndexIngest.processBatch(b, IndexIngest.pp(str))
+      if (i == 1) IndexIngest.processBatch(b, IndexIngest.pp(str)) // at-least-once replay
     }
 
     assert(baseRows(str) === baseRows(ref),
@@ -83,7 +83,7 @@ class PpIngestSpec extends SparkSpec {
       .localCheckpoint(eager = false)
     PpIndex.append(ranked.filter(pmod(hash(col("s")), lit(2)) === 0),
       spark, crashed)
-    PpIngest.processBatch(rest, crashed)
+    IndexIngest.processBatch(rest, IndexIngest.pp(crashed))
 
     assert(baseRows(crashed) === baseRows(ref),
       "half-committed replay produced different base rows than a clean append")

@@ -4,14 +4,15 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.PqIndex
+import graft.queries.Similarity
+import graft.sources.{IvfIndex, PqIndex}
 
 /** One embedding event on the ingest stream. */
 case class VecEvent(vec_id: Long, label: Int, embedding: Seq[Float])
 
-/** Streaming IVFADC maintenance (r15): vectors streamed through
-  * [[VecIngest]] must land in EXACTLY the index a batch
-  * append-over-the-same-artifacts produces, replayed batches must be
+/** Streaming vector-index maintenance (r15): vectors streamed through
+  * [[IndexIngest]] (IVFADC, float IVF) must land in EXACTLY the index a
+  * batch append-over-the-same-artifacts produces, replayed batches must be
   * absorbed (at-least-once → exactly-once index content), and a killed
   * stream resumed from its checkpoint must converge to the same index.
   */
@@ -49,16 +50,39 @@ class VecIngestSpec extends SparkSpec {
     val rest = emb.filter(col("vec_id") > cut)
       .select("vec_id", "label", "embedding").orderBy("vec_id").collect()
     val chunks = rest.grouped(math.max(1, rest.length / 3)).toSeq
-    for ((chunk, i) <- chunks.zipWithIndex) {
-      import spark.implicits._
-      val b = chunk.toSeq
-        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
-        .toDF("vec_id", "label", "embedding")
-      VecIngest.processBatch(b, streamed)
-      if (i == 1) VecIngest.processBatch(b, streamed) // crash replay
-    }
+    def stream(target: IndexIngest.Target): Unit =
+      for ((chunk, i) <- chunks.zipWithIndex) {
+        import spark.implicits._
+        val b = chunk.toSeq
+          .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
+          .toDF("vec_id", "label", "embedding")
+        IndexIngest.processBatch(b, target)
+        if (i == 1) IndexIngest.processBatch(b, target) // crash replay
+      }
+    stream(IndexIngest.ivfAdc(streamed))
     assert(cmap(streamed) === expected,
       "streamed ingest diverged from the batch append")
+
+    // the float IVF family through the same chunks and replay, against
+    // one Similarity.appendToIvfIndex batch append under the same book
+    val book = Similarity.ivfTrain(spark, halfDir, nlist = 16, iters = 1)
+    def ivfBootstrap(p: String): Unit = IvfIndex.writeWithCodebook(
+      Similarity.ivfAssignWith(spark, halfDir, book), book, p)
+    // a Seq, not a Map: a replay that slipped through shows as a
+    // duplicated vec_id
+    def ivfRows(p: String) = IvfIndex.read(spark, p)
+      .select("vec_id", "c_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val ivfRef = s"$base/ivfref"
+    ivfBootstrap(ivfRef)
+    Similarity.appendToIvfIndex(spark, emb.filter(col("vec_id") > cut), ivfRef)
+    val ivfStreamed = s"$base/ivfstreamed"
+    ivfBootstrap(ivfStreamed)
+    // threshold 1.0 never fires: appended/(frozen+appended) < 1
+    stream(IndexIngest.ivfMaintained(ivfStreamed, threshold = 1.0,
+      retrain = _ => fail("the rebuild policy must not fire")))
+    assert(ivfRows(ivfStreamed) === ivfRows(ivfRef),
+      "streamed IVF ingest diverged from the batch append")
   }
 
   test("kill mid-stream, resume from checkpoint: index converges to the batch append") {
@@ -82,7 +106,7 @@ class VecIngestSpec extends SparkSpec {
       .map(r => VecEvent(r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
     val ckpt = s"$base/ckpt"
     val mem1 = MemoryStream[VecEvent]
-    val q1 = VecIngest.start(mem1.toDF(), idx, Some(ckpt))
+    val q1 = IndexIngest.start(mem1.toDF(), IndexIngest.ivfAdc(idx), Some(ckpt))
     try {
       mem1.addData(rest.take(rest.length / 2).toSeq)
       q1.processAllAvailable()
@@ -90,7 +114,7 @@ class VecIngestSpec extends SparkSpec {
 
     val mem2 = MemoryStream[VecEvent]
     mem2.addData(rest.toSeq) // the full tail re-offered on resume
-    val q2 = VecIngest.start(mem2.toDF(), idx, Some(s"$base/ckpt2"))
+    val q2 = IndexIngest.start(mem2.toDF(), IndexIngest.ivfAdc(idx), Some(s"$base/ckpt2"))
     try q2.processAllAvailable() finally q2.stop()
 
     assert(cmap(idx) === cmap(ref),
