@@ -5,9 +5,13 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe AND reader-safe lifecycle for persisted index artifacts:
-  * the manifest-pinned GENERATION layout (r17 — see the block comment
-  * below) plus healing for its two predecessors.
+/** Crash-safe AND reader-safe lifecycle for persisted artifacts: the
+  * manifest-pinned GENERATION layout (r17 — see the block comment
+  * below). It is the one way `graft.sources` replaces persisted state:
+  * every parquet index family and the weather locations snapshot
+  * ([[TableStore.replaceSnapshot]]) write through [[writeGen]], and
+  * [[PpIndex]] runs its catalog-table generations on the same
+  * [[currentGen]]/[[publish]] pointer mechanics.
   *
   * Lineage of the mechanism, because each step closed a real hazard:
   *
@@ -17,16 +21,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    window lost the index irrecoverably (r15 ADVICE).
   *  - r16 replaced that with a rename swap (write a committed
   *    `.compact` sibling from the durable source, rename live away,
-  *    rename the sibling in, [[recover]] healing the one crash
-  *    window). Crash-safe — but NOT reader-safe: a Spark scan resolves
-  *    its concrete file list at plan time, and the renames moved those
-  *    files out from under any open reader, forcing "never compact
-  *    concurrently with a reader".
+  *    rename the sibling in). Crash-safe — but NOT reader-safe: a
+  *    Spark scan resolves its concrete file list at plan time, and the
+  *    renames moved those files out from under any open reader,
+  *    forcing "never compact concurrently with a reader".
   *  - r17 (verdict ask #4): generations + a tiny rename-committed
   *    manifest. Nothing a reader has resolved is ever moved or
-  *    deleted until a full compaction cycle later. [[recover]] and the
-  *    legacy branches of [[heal]] remain only so pre-r17 artifacts in
-  *    any interrupted state migrate losslessly on first touch.
+  *    deleted until a full compaction cycle later. A pre-r17 artifact
+  *    is not migrated: rebuild it.
   *
   * FENCE (r18, verdict ask #7): [[I8Index]] and [[BandIndex]] are
   * WRITE-ONCE BY CONTRACT — they have no append path and write their
@@ -44,58 +46,21 @@ object AtomicSwap {
 
   /** Hadoop's FileSystem.rename signals failure by RETURNING FALSE
     * (destination exists after a failed delete, cross-FS move, …), not
-    * by throwing (r17, ADVICE) — an unchecked rename lets a swap
-    * "succeed" half-done and serve the stale layout silently. Every
-    * rename in this file goes through here so a failed one fails loudly
-    * at the swap, not as a wrong answer downstream.
+    * by throwing (r17, ADVICE) — an unchecked rename lets a commit
+    * "succeed" half-done and serve the stale state silently. It is the
+    * one rename in `graft.sources`: the manifest commit in [[publish]].
     */
   private def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
     require(fs.rename(src, dst),
       s"AtomicSwap: rename($src, $dst) returned false — swap aborted")
 
-  /** Heal an interrupted pre-r17 `swapIn` rename swap (the operation
-    * itself is gone — see the note below [[recover]]): the live path
-    * absent with a `.compact`/`.old` sibling on disk. Idempotent and
-    * cheap (one exists() when healthy) — call before reading a
-    * swappable artifact.
-    *
-    * REMOVAL HORIZON (r18): this and [[heal]]'s legacy branches exist
-    * only to migrate PRE-R17 artifacts (rename-swap siblings, flat
-    * layouts) on first touch. They are dead code the moment every
-    * artifact in a deployment has been touched once under r17+; keep
-    * them through one more migration-relevant release, then delete
-    * down to the manifest-only paths rather than accreting further
-    * generations of healing logic.
-    */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val p = new Path(path)
-    if (!fs.exists(p)) {
-      val tmp = new Path(path + ".compact")
-      val old = new Path(path + ".old")
-      if (fs.exists(new Path(tmp, "_SUCCESS"))) {
-        renameOrDie(fs, tmp, p)
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        renameOrDie(fs, old, p)
-        fs.delete(tmp, true)
-      }
-    }
-  }
-
-  // (The r16 `swapIn` rename swap — write a `.compact` sibling, rename
-  // live away, rename the sibling in — is GONE: every artifact now
-  // writes through the generation layout below, and [[recover]] remains
-  // only to heal pre-r17 artifacts interrupted mid-swap before they
-  // migrate.)
-
   // -------------------------------------------------------------------
   // Manifest-pinned generation layout (r17, verdict ask #4).
   //
-  // The rename swap above is crash-safe but NOT reader-safe: a Spark
-  // scan resolves its concrete file list when the DataFrame is planned,
-  // and the swap's rename moves those very files out from under it —
-  // hence the old "run between appends, not concurrently with a reader"
+  // A rename swap is crash-safe but NOT reader-safe: a Spark scan
+  // resolves its concrete file list when the DataFrame is planned, and
+  // the swap's rename moves those very files out from under it — hence
+  // the old "run between appends, not concurrently with a reader"
   // restriction. The generation layout removes it:
   //
   //   root/
@@ -126,7 +91,6 @@ object AtomicSwap {
   // file, never resolved. There is no window in which a reader can
   // observe a half-written generation.
   // -------------------------------------------------------------------
-
   private val MfPrefix = "mf-"
 
   private def numsOf(fs: FileSystem, root: Path, prefix: String,
@@ -191,58 +155,29 @@ object AtomicSwap {
       .foreach(k => fs.delete(new Path(root, MfPrefix + k), false))
   }
 
-  /** Heal the artifact at `root` into a consistent manifest state.
-    * Covers, in order: an interrupted LEGACY rename swap (pre-r17
-    * `.compact`/`.old` siblings); an interrupted legacy→manifest
-    * migration (the `.mig` sibling); a legacy FLAT artifact (data at
-    * `root` itself, no manifest) — migrated whole into generation `g0`
-    * by renames, never a copy, never a delete; and a migrated
-    * generation missing its manifest (crash before publish) — the
-    * newest `_SUCCESS`-committed generation is published. Idempotent;
-    * a few exists() calls when healthy.
+  /** The current generation of `root`, after finishing an interrupted
+    * FIRST build: with no manifest, the newest `_SUCCESS`-committed
+    * generation is published (the crash fell between the data commit
+    * and the first publish). A half-written generation has no
+    * `_SUCCESS` and stays invisible, and a root with a manifest is
+    * never touched. Idempotent.
     */
-  private def heal(spark: SparkSession, root: String): Unit = {
-    recover(spark, root)
-    val fs = fsOf(spark, root)
-    val rp = new Path(root)
-    val mig = new Path(root + ".mig")
-    if (fs.exists(mig)) { // resume an interrupted migration
-      if (!fs.exists(rp)) fs.mkdirs(rp)
-      renameOrDie(fs, mig, new Path(rp, "g0"))
-    }
-    if (currentGen(fs, rp).isEmpty && fs.exists(rp)) {
-      val entries = fs.listStatus(rp).toSeq
-      val isGenOrMf = (n: String) => n.startsWith(MfPrefix) ||
-        (n.startsWith("g") && n.stripPrefix("g").toIntOption.isDefined)
-      if (entries.nonEmpty && !entries.exists(e => isGenOrMf(e.getPath.getName))) {
-        // legacy flat data: rename the whole dir out, back in as g0
-        renameOrDie(fs, rp, mig)
-        fs.mkdirs(rp)
-        renameOrDie(fs, mig, new Path(rp, "g0"))
-      }
-      // publish the newest COMMITTED generation (migration lands here
-      // too); a half-written crash generation has no _SUCCESS and
-      // stays invisible
+  private def heal(fs: FileSystem, rp: Path): Option[String] =
+    currentGen(fs, rp).orElse(
       numsOf(fs, rp, "g", dirs = true).sorted.reverse
         .find(k => fs.exists(new Path(rp, s"g$k/_SUCCESS")))
-        .foreach(k => publish(fs, rp, s"g$k"))
-    }
-  }
+        .map { k => publish(fs, rp, s"g$k"); s"g$k" })
 
   /** Resolve the artifact at `root` to its current committed data
-    * directory: heal (including migrating a pre-r17 flat artifact into
-    * the generation layout), then follow the newest manifest. A root
-    * with no data at all resolves to itself — the downstream read
-    * fails as loudly as it always did.
+    * directory: heal, then follow the newest manifest. A root with no
+    * manifest resolves to itself — an unmanifested directory (the
+    * weather facts table, which only ever appends) reads as it is, and
+    * a root with no data at all fails the downstream read as loudly as
+    * it always did.
     */
   def dataDir(spark: SparkSession, root: String): String = {
-    heal(spark, root)
-    val fs = fsOf(spark, root)
     val rp = new Path(root)
-    currentGen(fs, rp) match {
-      case Some(g) => new Path(rp, g).toString
-      case None => root
-    }
+    heal(fsOf(spark, root), rp).map(g => new Path(rp, g).toString).getOrElse(root)
   }
 
   /** Write a NEW GENERATION of the artifact at `root` and make it
@@ -264,10 +199,9 @@ object AtomicSwap {
   def writeGen(spark: SparkSession, root: String, retain: Int = 1)(
       write: String => Unit): Unit = {
     require(retain >= 1, s"writeGen($root): retain must be >= 1, got $retain")
-    heal(spark, root)
     val fs = fsOf(spark, root)
     val rp = new Path(root)
-    val cur = currentGen(fs, rp)
+    val cur = heal(fs, rp)
     val curNum = cur.flatMap(_.stripPrefix("g").toIntOption)
     val next = (numsOf(fs, rp, "g", dirs = true) ++ curNum :+ -1).max + 1
     write(new Path(rp, s"g$next").toString)
@@ -301,7 +235,8 @@ object AtomicSwap {
     * naming the SAME generation, written as the append's last step.
     * Appends only ever ADD files (a reader's resolved snapshot stays
     * correct), so the bump is the durable record that the append
-    * committed, not a visibility gate. No-op on a legacy flat artifact.
+    * committed, not a visibility gate. No-op on a root with no
+    * manifest (nothing was ever built there).
     *
     * `wroteInto` is the data directory the append resolved via
     * [[dataDir]] BEFORE writing. WRITERS (append vs compact/rebuild)
@@ -320,14 +255,12 @@ object AtomicSwap {
     val rp = new Path(root)
     currentGen(fs, rp).foreach { g =>
       val cur = new Path(rp, g).toString
-      // no `wroteInto == root` escape (r19, ADVICE): dataDir only ever
-      // resolves to the bare root when the artifact is empty and
-      // unmanifested, and the one way a manifest can exist NOW after
-      // the append resolved root THEN is a concurrent first build —
-      // exactly the writer race this check exists to fail loudly on
-      // (the root-level flat files are invisible to manifest-resolving
-      // readers). A true legacy/no-manifest artifact never reaches
-      // this branch: currentGen is None there and the bump no-ops.
+      // no `wroteInto == root` escape (r19, ADVICE): dataDir resolves
+      // to the bare root only when there is no manifest, and the one
+      // way a manifest can exist NOW after the append resolved root
+      // THEN is a concurrent first build — exactly the writer race this
+      // check exists to fail loudly on (files written at the root are
+      // invisible to manifest-resolving readers)
       require(cur == wroteInto,
         s"AtomicSwap.commitAppend($root): the append wrote into " +
           s"$wroteInto but the current generation is $cur — a " +

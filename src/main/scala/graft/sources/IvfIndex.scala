@@ -43,9 +43,27 @@ object IvfIndex {
       // One shuffle of the assignment at build time (the Iceberg
       // write.distribution-mode=hash story, guide §6) leaves one
       // well-formed file per list directory.
-      assign.repartition(col("c_id"))
-        .write.mode("overwrite").partitionBy("c_id").parquet(gen)
+      writeLists(assign, gen)
     }
+
+  /** Write `rows` (carrying `c_id`) as a list-partitioned generation
+    * directory: hash-distributed on `c_id` first, so each `c_id=`
+    * directory gets one file instead of one per input partition.
+    * Shared by the IVF and PQ (IVFADC) build and compact paths.
+    */
+  private[sources] def writeLists(rows: DataFrame, gen: String): Unit =
+    rows.repartition(col("c_id"))
+      .write.mode("overwrite").partitionBy("c_id").parquet(gen)
+
+  /** One-row list statistics of a list-partitioned relation:
+    * `(n_now, n_lists, max_list, mean_list)` — the routing half of the
+    * IVF and PQ drift probes.
+    */
+  private[sources] def listStats(rows: DataFrame): DataFrame =
+    rows.groupBy("c_id").agg(count(lit(1)).as("n"))
+      .agg(sum(col("n")).as("n_now"), count(lit(1)).as("n_lists"),
+        max(col("n")).as("max_list"),
+        (sum(col("n")).cast("double") / count(lit(1))).as("mean_list"))
 
   /** Persist an assignment relation TOGETHER with the codebook that
     * produced it (r12): the codebook lands as an nlist-row parquet at
@@ -90,10 +108,7 @@ object IvfIndex {
     * frozen count — never the vectors.
     */
   def driftProbe(spark: SparkSession, path: String): DataFrame = {
-    val lists = read(spark, path).groupBy("c_id").agg(count(lit(1)).as("n"))
-      .agg(sum(col("n")).as("n_now"), count(lit(1)).as("n_lists"),
-        max(col("n")).as("max_list"),
-        (sum(col("n")).cast("double") / count(lit(1))).as("mean_list"))
+    val lists = listStats(read(spark, path))
     spark.read.parquet(AtomicSwap.dataDir(spark, path + "_stats"))
       .crossJoin(lists)
       .select(col("n_vecs").as("n_frozen"), col("n_now"),
@@ -183,9 +198,6 @@ object IvfIndex {
     */
   def compact(spark: SparkSession, path: String, retain: Int = 1): Unit = {
     val src = spark.read.parquet(AtomicSwap.dataDir(spark, path))
-    AtomicSwap.writeGen(spark, path, retain) { gen =>
-      src.repartition(col("c_id"))
-        .write.mode("overwrite").partitionBy("c_id").parquet(gen)
-    }
+    AtomicSwap.writeGen(spark, path, retain)(gen => writeLists(src, gen))
   }
 }

@@ -35,9 +35,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so a reader that resolved the pre-compact table keeps complete,
   * untouched files for one full compaction cycle (the same
   * snapshot-expiry contract as the parquet index families), instead
-  * of the old drop-and-rename swap moving its files mid-scan.
-  * Pre-r17 flat tables (`<table>` with no pointer) read as before and
-  * migrate on the first write/compact.
+  * of the old drop-and-rename swap moving its files mid-scan. A name
+  * with no pointer was never built: [[read]], [[readDf]], [[append]]
+  * and [[compact]] fail loudly on it.
   */
 object PpIndex {
 
@@ -57,20 +57,16 @@ object PpIndex {
       name.stripPrefix(table + "_g").toIntOption
     else None
 
-  /** Next free generation number: one past everything visible in the
-    * warehouse directory (strays from crashed builds included — a
-    * fresh JVM's in-memory catalog forgets tables, their dirs don't)
-    * and the pointer.
+  /** Generation numbers of `table` that have a warehouse directory
+    * (strays from crashed builds included — a fresh JVM's in-memory
+    * catalog forgets tables, their dirs don't).
     */
-  private def nextGen(spark: SparkSession, table: String): Int = {
+  private def genDirs(spark: SparkSession, table: String): Seq[Int] = {
     val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
     val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirNums =
-      if (fs.exists(wh)) fs.listStatus(wh).toSeq.filter(_.isDirectory)
-        .flatMap(s => genNum(table, s.getPath.getName))
-      else Seq.empty
-    (dirNums ++ currentTable(spark, table).flatMap(genNum(table, _))
-      :+ -1).max + 1
+    if (fs.exists(wh)) fs.listStatus(wh).toSeq.filter(_.isDirectory)
+      .flatMap(s => genNum(table, s.getPath.getName))
+    else Seq.empty
   }
 
   /** Publish `liveName` as the pointer's target — the commit point of
@@ -84,42 +80,47 @@ object PpIndex {
     AtomicSwap.publish(fs, root, liveName)
   }
 
-  /** Drop every generation table of `table` whose number is not in
-    * `keep` (catalog entry AND warehouse dir — strays may have either
-    * without the other).
+  /** The catalog twin of [[AtomicSwap.writeGen]]: write a NEW
+    * generation of the logical artifact `logical` and make it live.
+    * `write` receives the next free generation table name
+    * `<logical>_gN` (one past every generation directory and the
+    * pointer) and must save a complete table there; the pointer
+    * publish is the commit. The previous generation survives one cycle
+    * for open readers; older ones and crash strays (catalog entry AND
+    * warehouse dir — strays may have either without the other) are
+    * dropped.
     */
-  private def pruneGens(spark: SparkSession, table: String, keep: Set[Int]): Unit = {
-    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirNums =
-      if (fs.exists(wh)) fs.listStatus(wh).toSeq.filter(_.isDirectory)
-        .flatMap(s => genNum(table, s.getPath.getName))
-      else Seq.empty
-    dirNums.filterNot(keep).distinct
-      .foreach(k => resetTable(spark, s"${table}_g$k"))
+  private def writeGen(spark: SparkSession, logical: String)(
+      write: String => Unit): Unit = {
+    val prev = currentTable(spark, logical).flatMap(genNum(logical, _))
+    val k = (genDirs(spark, logical) ++ prev :+ -1).max + 1
+    val gt = s"${logical}_g$k"
+    resetTable(spark, gt) // stray from a crashed build
+    write(gt)
+    publish(spark, logical, gt)
+    (genDirs(spark, logical).toSet -- prev - k)
+      .foreach(g => resetTable(spark, s"${logical}_g$g"))
   }
 
-  /** Persist a PPJoin base relation bucketed + sorted on the
-    * fingerprint join key, as a NEW generation: the pointer publish is
-    * the commit, the previous generation (if any) survives one cycle
-    * for open readers, older ones are dropped. A leftover pre-r17
-    * flat table gets the SAME one-cycle grace as a superseded
-    * generation (r18, ADVICE — rebuild-over-legacy previously dropped
-    * it in the same call, deleting a pinned reader's files mid-scan
-    * where compact-over-legacy didn't): it survives this write and is
-    * dropped by the NEXT write/compact, so migration has a uniform
-    * reader contract.
+  /** The live generation table of the logical artifact `table`. With
+    * no pointer nothing was ever built there: fail loudly rather than
+    * serve, or append into, a pointer-less table.
     */
-  /** Bucket count for a NEW layout (build, or a resizing compact):
+  private def liveTable(spark: SparkSession, table: String): String =
+    currentTable(spark, table).getOrElse(throw new IllegalStateException(
+      s"PpIndex: no generation of $table is published at " +
+        s"${ptrRoot(spark, table)} — build it with write/writeDf first"))
+
+  /** Bucket count for a NEW layout (a [[write]] without `buckets`):
     * the session's shuffle-partition dial (r20, optimization guide §2
     * — partitioning derives from the parameterized dial, not a frozen
     * constant: `bucketBy(8)` capped the zero-exchange candidate
     * self-join at 8 tasks REGARDLESS of cluster width; production sets
     * `spark.sql.shuffle.partitions` to cluster width and gets a
     * matching bucket count, the bench runner sets it to
-    * `$SPARK_GRAFT_CPUS`). Appends and layout-preserving compacts
-    * never choose — they read the LIVE table's recorded spec
-    * ([[liveBuckets]]), so a mixed layout is unconstructible.
+    * `$SPARK_GRAFT_CPUS`). Appends and compacts never choose — they
+    * read the LIVE table's recorded spec ([[liveBuckets]]), so a mixed
+    * layout is unconstructible.
     */
   private def sessionBuckets(spark: SparkSession): Int =
     spark.sessionState.conf.numShufflePartitions
@@ -146,29 +147,26 @@ object PpIndex {
     math.max(1L, math.min(sessionBuckets(spark).toLong,
       (rows + RowsPerBucket - 1) / RowsPerBucket)).toInt
 
-  /** The live generation's recorded bucket count, if any. */
-  private def liveBuckets(spark: SparkSession, name: String): Option[Int] =
-    if (spark.catalog.tableExists(name))
-      spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-        .bucketSpec.map(_.numBuckets)
-    else None
+  /** The live generation's recorded bucket count — the only source
+    * of the layout for [[append]] and [[compact]].
+    */
+  private def liveBuckets(spark: SparkSession, name: String): Int = {
+    val spec = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .bucketSpec
+    require(spec.isDefined, s"PpIndex: $name has no bucket spec")
+    spec.get.numBuckets
+  }
 
+  /** Persist a PPJoin base relation bucketed + sorted on the
+    * fingerprint join key as a NEW generation ([[writeGen]]). `buckets`
+    * (default: the session dial, [[sessionBuckets]]) fixes the layout
+    * every later [[append]] and [[compact]] of this generation keeps.
+    */
   def write(base: DataFrame, table: String, buckets: Int = 0): Unit = {
-    val spark = base.sparkSession
-    val n = if (buckets > 0) buckets else sessionBuckets(spark)
-    val prev = currentTable(spark, table)
-    val k = nextGen(spark, table)
-    val gt = s"${table}_g$k"
-    resetTable(spark, gt) // stray from a crashed build
-    Bucketing.writeBucketed(base.select("doc_id", "s", "rk", "n"),
-      gt, "s", n)
-    publish(spark, table, gt)
-    pruneGens(spark, table, Set(k) ++ prev.flatMap(genNum(table, _)))
-    // a legacy flat table is only dropped once it is 2+ cycles old
-    // (prev nonEmpty means this write superseded a generation, not the
-    // legacy table) — the compact() contract, applied uniformly
-    if (prev.nonEmpty && spark.catalog.tableExists(table)) resetTable(spark, table)
+    val n = if (buckets > 0) buckets else sessionBuckets(base.sparkSession)
+    writeGen(base.sparkSession, table)(gt =>
+      Bucketing.writeBucketed(base.select("doc_id", "s", "rk", "n"), gt, "s", n))
   }
 
   /** Drop `table` AND delete its leftover warehouse directory — an
@@ -183,30 +181,8 @@ object PpIndex {
     wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
   }
 
-  /** Finish an interrupted PRE-R17 [[compact]] swap, if one is
-    * detected: the live table absent with the compacted `_c` sibling
-    * present → rename the sibling in. Kept for legacy flat artifacts
-    * only; pointer-layout generations never rename.
-    */
-  private def recoverSwap(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(table + "_c")) {
-      // the old compact's resetTable(live) was a DROP then a directory
-      // delete — a crash BETWEEN them left the live warehouse dir on
-      // disk with no catalog entry; clear it before the rename (the
-      // catalog says the live table does not exist, so the directory
-      // is provably orphaned)
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-      spark.sql(s"ALTER TABLE ${table}_c RENAME TO $table")
-    }
-
   def read(spark: SparkSession, table: String): DataFrame =
-    currentTable(spark, table) match {
-      case Some(live) => spark.table(live)
-      case None => recoverSwap(spark, table); spark.table(table)
-    }
+    spark.table(liveTable(spark, table))
 
   /** Persist the BUILD-time per-fingerprint document frequency —
     * every fp seen at build, capped and uncapped alike (the base alone
@@ -215,26 +191,13 @@ object PpIndex {
     * the same pointer-generation mechanics as the base (r17): a
     * rebuild-over-live must not drop the table under an open reader.
     */
-  def writeDf(dfAll: DataFrame, table: String): Unit = {
-    val spark = dfAll.sparkSession
-    val logical = table + "_df"
-    val prev = currentTable(spark, logical)
-    val k = nextGen(spark, logical)
-    val gt = s"${logical}_g$k"
-    resetTable(spark, gt) // stray from a crashed build
-    dfAll.select("s", "df").write.mode("overwrite")
-      .format("parquet").saveAsTable(gt)
-    publish(spark, logical, gt)
-    pruneGens(spark, logical, Set(k) ++ prev.flatMap(genNum(logical, _)))
-    // one-cycle grace for a legacy flat table, as in [[write]] (r18)
-    if (prev.nonEmpty && spark.catalog.tableExists(logical)) resetTable(spark, logical)
-  }
+  def writeDf(dfAll: DataFrame, table: String): Unit =
+    writeGen(dfAll.sparkSession, table + "_df")(gt =>
+      dfAll.select("s", "df").write.mode("overwrite")
+        .format("parquet").saveAsTable(gt))
 
   def readDf(spark: SparkSession, table: String): DataFrame =
-    currentTable(spark, table + "_df") match {
-      case Some(live) => spark.table(live)
-      case None => spark.table(table + "_df")
-    }
+    spark.table(liveTable(spark, table + "_df"))
 
   /** Staleness probe for a maintained PPJoin index (r20, verdict ask
     * #3 — the one-row health reading every other persisted family
@@ -317,14 +280,11 @@ object PpIndex {
     * plans carry in-partition Sorts — still zero shuffle
     * (PpAppendSpec).
     */
-  def append(rows: DataFrame, spark: SparkSession, table: String,
-      buckets: Int = 0): Unit = {
-    val live = currentTable(spark, table).getOrElse(table)
-    // the LIVE layout's count wins (r20): an append must match the
-    // build's spec whatever dial the build ran under — the parameter
-    // survives only as a test hook / legacy fallback
+  def append(rows: DataFrame, spark: SparkSession, table: String): Unit = {
+    val live = liveTable(spark, table)
+    // the LIVE layout's count (r20): an append must match the build's
+    // spec whatever dial the build ran under
     val n = liveBuckets(spark, live)
-      .getOrElse(if (buckets > 0) buckets else sessionBuckets(spark))
     // repartition on the bucket key (r20, the writeBucketed argument):
     // one file per TOUCHED bucket per append, instead of one per
     // (input partition × touched bucket)
@@ -339,14 +299,13 @@ object PpIndex {
     // appended rows silently; writers (append vs compact) must be
     // serialized, and a violation fails loudly here (r18, ADVICE —
     // the BmIndex/commitAppend contract applied to the catalog tier)
-    currentTable(spark, table).foreach { cur =>
-      require(cur == live,
-        s"PpIndex.append($table): appended into $live but the live " +
-          s"generation is now $cur — a compact/rebuild ran concurrently " +
-          "(writers must be serialized; only readers are compact-safe). " +
-          "Re-run the append against the current generation.")
-      publish(spark, table, cur)
-    }
+    val cur = liveTable(spark, table)
+    require(cur == live,
+      s"PpIndex.append($table): appended into $live but the live " +
+        s"generation is now $cur — a compact/rebuild ran concurrently " +
+        "(writers must be serialized; only readers are compact-safe). " +
+        "Re-run the append against the current generation.")
+    publish(spark, table, cur)
   }
 
   /** Rewrite the index back to one sorted file per bucket — the
@@ -358,36 +317,16 @@ object PpIndex {
     * same data, same bucket spec (PpAppendSpec pins row identity and
     * the Sort nodes' disappearance).
     *
-    * r17: generation-based and READER-SAFE — the compacted rows land
-    * in table `_g(N+1)` read straight from the live generation, the
-    * pointer publish is the commit, and the superseded generation
-    * survives until the compact after this one (see the class note).
-    * A legacy flat artifact is migrated: it serves as the "previous
-    * generation" for one cycle and is dropped by the next write or
-    * compact.
+    * r17: generation-based and READER-SAFE ([[writeGen]]) — the
+    * compacted rows land in table `_g(N+1)` read straight from the
+    * live generation, the pointer publish is the commit, and the
+    * superseded generation survives until the compact after this one
+    * (see the class note).
     */
-  def compact(spark: SparkSession, table: String, buckets: Int = 0): Unit = {
-    val prev = currentTable(spark, table)
-    val srcName = prev.getOrElse { recoverSwap(spark, table); table }
-    // layout-preserving by default ("restores the build-time plan");
-    // pass an explicit count to RESIZE — compact is the one safe
-    // resizing point (a new generation, readers keep the old layout)
-    val n = if (buckets > 0) buckets
-      else liveBuckets(spark, srcName).getOrElse(
-        // no recorded spec (legacy flat table): derive from the data —
-        // a parquet count is metadata-cheap — instead of trusting an
-        // untuned session dial (r20 ADVICE)
-        adaptiveBuckets(spark, spark.table(srcName).count()))
-    val k = nextGen(spark, table)
-    val gt = s"${table}_g$k"
-    resetTable(spark, gt) // stray from a crashed compact
-    Bucketing.writeBucketed(
-      spark.table(srcName).select("doc_id", "s", "rk", "n"),
-      gt, "s", n)
-    publish(spark, table, gt)
-    pruneGens(spark, table, Set(k) ++ prev.flatMap(genNum(table, _)))
-    // a legacy flat table that is no longer the source is 2+ cycles
-    // old — drop it (prev nonEmpty means the source was a generation)
-    if (prev.nonEmpty && spark.catalog.tableExists(table)) resetTable(spark, table)
+  def compact(spark: SparkSession, table: String): Unit = {
+    val src = liveTable(spark, table)
+    val n = liveBuckets(spark, src)
+    writeGen(spark, table)(gt => Bucketing.writeBucketed(
+      spark.table(src).select("doc_id", "s", "rk", "n"), gt, "s", n))
   }
 }

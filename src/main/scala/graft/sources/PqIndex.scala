@@ -53,9 +53,7 @@ object PqIndex {
     // lands as a generation under `path`, the manifest publish is the
     // commit, readers resolve through [[AtomicSwap.dataDir]]
     AtomicSwap.writeGen(spark, path) { gen =>
-      if (codes.columns.contains("c_id"))
-        codes.repartition(col("c_id")).write.mode("overwrite")
-          .partitionBy("c_id").parquet(gen)
+      if (codes.columns.contains("c_id")) IvfIndex.writeLists(codes, gen)
       else codes.write.mode("overwrite").parquet(gen)
     }
     import spark.implicits._
@@ -89,11 +87,7 @@ object PqIndex {
     val codes = read(spark, path)
     val frozen = spark.read.parquet(AtomicSwap.dataDir(spark, path + "_stats"))
     if (codes.columns.contains("c_id")) {
-      val lists = codes.groupBy("c_id").agg(count(lit(1)).as("n"))
-        .agg(sum(col("n")).as("n_now"), count(lit(1)).as("n_lists"),
-          max(col("n")).as("max_list"),
-          (sum(col("n")).cast("double") / count(lit(1))).as("mean_list"))
-      frozen.crossJoin(lists)
+      frozen.crossJoin(IvfIndex.listStats(codes))
         .select(col("n_codes").as("n_frozen"), col("n_now"),
           ((col("n_now") - col("n_codes")).cast("double") / col("n_now"))
             .as("appended_frac"),
@@ -143,9 +137,7 @@ object PqIndex {
     val snap = spark.read.parquet(AtomicSwap.dataDir(spark, path))
     AtomicSwap.writeGen(spark, path) { gen =>
       if (snap.columns.contains("c_id"))
-        snap.withColumn("c_id", col("c_id").cast("long"))
-          .repartition(col("c_id")).write.mode("overwrite")
-          .partitionBy("c_id").parquet(gen)
+        IvfIndex.writeLists(snap.withColumn("c_id", col("c_id").cast("long")), gen)
       else snap.write.mode("overwrite").parquet(gen)
     }
   }

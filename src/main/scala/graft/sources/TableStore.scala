@@ -22,16 +22,21 @@ import org.apache.spark.sql.types.StructType
   *    time-range queries prune partitions (SURVEY.md §4 partitioning row).
   *
   * Atomicity note: the reference wraps delete-all + re-insert in one
-  * transaction (`:228-229`); Spark's `Overwrite` gives the same
-  * all-or-nothing visibility via staging-directory rename.
+  * transaction (`:228-229`). Here a snapshot is a generation directory
+  * under its path ([[AtomicSwap.writeGen]]) and the manifest publish is
+  * the commit: a reader sees the whole old snapshot or the whole new
+  * one, and a crash before the publish leaves the old one live.
   */
 object TableStore {
 
-  /** Missing path → empty frame WITH the declared schema (`:373-374`). */
+  /** Missing path → empty frame WITH the declared schema (`:373-374`).
+    * Reads the current generation ([[AtomicSwap.dataDir]]); a path with
+    * no manifest (the facts table, which only appends) reads as is.
+    */
   def readSnapshot(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
+    if (fs.exists(p)) spark.read.schema(schema).parquet(AtomicSwap.dataDir(spark, path))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
@@ -40,8 +45,9 @@ object TableStore {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(path)
+      AtomicSwap.writeGen(spark, path)(gen =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+          .write.mode(SaveMode.Overwrite).parquet(gen))
   }
 
   /** Full-refresh overwrite with dense 1-based `idColumn` regenerated
@@ -64,27 +70,18 @@ object TableStore {
   /** [[overwriteSnapshot]] when `df`'s lineage READS the same `path` it
     * replaces — the refresh cycle's shape (carry-forward rows come from
     * the old snapshot, `weather_data_fetcher.py:426` re-writes the same
-    * Excel file). A direct overwrite would delete the input before the
-    * job reads it (Spark rejects the plan); instead the new snapshot is
-    * fully written to a staging directory, then swapped in with two
-    * renames — the same all-or-nothing visibility the reference gets
-    * from its transaction (`:228-229`), at any snapshot size (nothing
-    * funnels through the driver).
+    * Excel file). The new snapshot is written whole as the next
+    * generation beside the one `df` reads, and the manifest publish
+    * swaps it in ([[AtomicSwap.writeGen]]) — the same all-or-nothing
+    * visibility the reference gets from its transaction (`:228-229`),
+    * at any snapshot size (nothing funnels through the driver). The
+    * superseded generation survives one more replace, so a frame read
+    * before this one keeps its files.
     */
   def replaceSnapshot(
-      df: DataFrame, path: String, idColumn: String, stableKey: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    val retired = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(staging, true)
-    fs.delete(retired, true)
-    overwriteSnapshot(df, staging.toString, idColumn, stableKey)
-    if (fs.exists(p)) fs.rename(p, retired)
-    fs.rename(staging, p)
-    fs.delete(retired, true)
-  }
+      df: DataFrame, path: String, idColumn: String, stableKey: Seq[String]): Unit =
+    AtomicSwap.writeGen(df.sparkSession, path)(gen =>
+      overwriteSnapshot(df, gen, idColumn, stableKey))
 
   /** One-time migration for a user holding the reference's Excel
     * snapshot (`all_locations.xlsx`, `weather_data_fetcher.py:36,:365`):
@@ -98,7 +95,7 @@ object TableStore {
       spark: SparkSession, csvPath: String, snapshotPath: String,
       schema: StructType, idColumn: String, stableKey: Seq[String]): Unit = {
     val df = spark.read.option("header", "true").schema(schema).csv(csvPath)
-    overwriteSnapshot(df, snapshotPath, idColumn, stableKey)
+    replaceSnapshot(df, snapshotPath, idColumn, stableKey)
   }
 
   /** One-time xlsx migration — the reference's ACTUAL snapshot format
@@ -110,7 +107,7 @@ object TableStore {
   def importSnapshotXlsx(
       spark: SparkSession, xlsxPath: String, snapshotPath: String,
       schema: StructType, idColumn: String, stableKey: Seq[String]): Unit =
-    overwriteSnapshot(Xlsx.read(spark, xlsxPath, schema), snapshotPath, idColumn, stableKey)
+    replaceSnapshot(Xlsx.read(spark, xlsxPath, schema), snapshotPath, idColumn, stableKey)
 
   /** Export a snapshot back to the reference's Excel format
     * (`weather_data_fetcher.py:365,:426` writes `all_locations.xlsx` /

@@ -181,8 +181,8 @@ object WeatherMain {
     if (refreshed) {
       val snap = LocationRefresh.refresh(spark, cities, provinces, old, geocoder(cfg))
       // K2/K3: full replace with dense ids reseeded over the stable key
-      // — staging-swap because the refresh's carry-forward lineage
-      // reads the path being replaced.
+      // — a new generation, because the refresh's carry-forward lineage
+      // reads the snapshot being replaced.
       TableStore.replaceSnapshot(snap.drop("location_id"), cfg.snapshotPath,
         "location_id", Seq("name", "province_name"))
     }

@@ -65,24 +65,6 @@ class PpIndexSpec extends SparkSpec {
     }
   }
 
-  test("legacy flat artifact: interrupted pre-r17 swap (_c present) heals on read") {
-    import spark.implicits._
-    val table = "ppjoin_swap_spec"
-    wipe(table)
-    val base = Seq((1L, 10L, 1, 2), (1L, 11L, 2, 2), (2L, 10L, 1, 1))
-      .toDF("doc_id", "s", "rk", "n")
-    // a PRE-R17 artifact: flat bucketed table, no pointer
-    graft.sources.Bucketing.writeBucketed(base, table, "s")
-    // simulate the old compact's crash window between its drop and
-    // rename: the compacted sibling exists, the live table does not
-    spark.sql(s"ALTER TABLE $table RENAME TO ${table}_c")
-    val rows = graft.sources.PpIndex.read(spark, table)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(rows === Seq((1L, 10L), (1L, 11L), (2L, 10L)))
-    assert(spark.catalog.tableExists(table) &&
-      !spark.catalog.tableExists(table + "_c"))
-  }
-
   test("a reader pinned pre-compact survives the swap; fresh reads see the new generation") {
     import spark.implicits._
     val table = "ppjoin_reader_spec"

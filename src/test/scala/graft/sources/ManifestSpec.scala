@@ -81,29 +81,20 @@ class ManifestSpec extends SparkSpec {
     assert(!fs.exists(new Path(root, "g1")), "stray generation pruned")
     assert(spark.read.parquet(AtomicSwap.dataDir(spark, root))
       .as[Long].collect().toSeq === Seq(2L))
-  }
 
-  test("legacy flat artifact migrates whole into g0 on first resolve") {
-    val root = tmp("mflegacy")
-    Seq(4L, 5L).toDF("x").write.parquet(root) // pre-r17 layout
-    val d = AtomicSwap.dataDir(spark, root)
-    assert(d.endsWith("g0"), s"expected migration into g0, got $d")
-    assert(spark.read.parquet(d).as[Long].collect().sorted.toSeq === Seq(4L, 5L))
-    // and the migrated artifact compacts like a native one
-    val src = spark.read.parquet(AtomicSwap.dataDir(spark, root))
-    AtomicSwap.writeGen(spark, root) { gen => src.write.parquet(gen) }
-    assert(spark.read.parquet(AtomicSwap.dataDir(spark, root))
-      .as[Long].collect().sorted.toSeq === Seq(4L, 5L))
-  }
-
-  test("interrupted migration (.mig sibling) resumes on next resolve") {
-    val root = tmp("mfmig")
-    Seq(6L).toDF("x").write.parquet(root)
-    // simulate the crash window: the flat dir renamed out, nothing back
-    assert(fs.rename(new Path(root), new Path(root + ".mig")))
-    assert(spark.read.parquet(AtomicSwap.dataDir(spark, root))
-      .as[Long].collect().toSeq === Seq(6L))
-    assert(!fs.exists(new Path(root + ".mig")))
+    // a FIRST build that crashed between its data commit and its first
+    // publish: with no manifest at all, the committed g0 is published
+    // on the next resolve …
+    val first = tmp("mffirst")
+    Seq(3L).toDF("x").write.parquet(first + "/g0")
+    assert(AtomicSwap.dataDir(spark, first).endsWith("g0"))
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, first))
+      .as[Long].collect().toSeq === Seq(3L))
+    // … while a g0 that never committed (no _SUCCESS) stays invisible
+    val half = tmp("mfhalf")
+    Seq(3L).toDF("x").write.parquet(half + "/g0")
+    assert(fs.delete(new Path(half, "g0/_SUCCESS"), false))
+    assert(AtomicSwap.dataDir(spark, half) === half)
   }
 
   test("commitAppend bumps the manifest without changing the generation") {

@@ -63,11 +63,38 @@ class TableStoreSpec extends SparkSpec {
       StructField("province_name", StringType)))
     val path = tmp()
     TableStore.importSnapshotCsv(spark, csv.toString, path, schema, "location_id", Seq("name"))
-    val out = spark.read.parquet(path).orderBy("location_id")
+    val out = TableStore.readSnapshot(spark, path, schema.add("location_id", LongType)).orderBy("location_id")
       .select("location_id", "code", "name").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     // schema-first read: '012802000' survives as a string, ids dense from 1
     assert(out.toSeq === Seq((1L, "012802000", "Bacarra"), (2L, "137404000", "Taguig")))
+  }
+
+  test("replaceSnapshot: a frame read before a replace keeps the old rows; " +
+      "an unpublished generation never shows") {
+    val path = tmp()
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("location_id", "long").add("name", "string").add("province_name", "string")
+    def names(df: org.apache.spark.sql.DataFrame) =
+      df.select("name").as[String].collect().sorted.toSeq
+    def replace(rows: Seq[(String, String)]): Unit = TableStore.replaceSnapshot(
+      rows.toDF("name", "province_name"), path, "location_id", Seq("name", "province_name"))
+
+    replace(Seq(("Cebu", "Cebu"), ("Manila", "NCR")))
+    // planned now: its file list is resolved before the replace below
+    val before = TableStore.readSnapshot(spark, path, schema)
+    replace(Seq(("Davao", "Davao")))
+    assert(names(before) === Seq("Cebu", "Manila"),
+      "a frame read before the replace must keep the old rows")
+    assert(names(TableStore.readSnapshot(spark, path, schema)) === Seq("Davao"))
+
+    // a replace that crashed after its data commit, before the publish:
+    // the next generation is complete (with _SUCCESS) but unnamed
+    TableStore.overwriteSnapshot(Seq(("Iloilo", "Iloilo")).toDF("name", "province_name"),
+      path + "/g2", "location_id", Seq("name"))
+    assert(new java.io.File(path + "/g2/_SUCCESS").exists())
+    assert(names(TableStore.readSnapshot(spark, path, schema)) === Seq("Davao"),
+      "an unpublished replace must leave readers on the old rows")
   }
 
   test("overwriteSnapshotLarge assigns the same dense ids as the windowed variant") {

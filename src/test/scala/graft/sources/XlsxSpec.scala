@@ -79,7 +79,7 @@ class XlsxSpec extends SparkSpec {
     writeWorkbook(p)
     val out = java.nio.file.Files.createTempDirectory("xlsx_snap").toString + "/locations"
     TableStore.importSnapshotXlsx(spark, p, out, schema, "location_id", Seq("code_city"))
-    val got = spark.read.parquet(out).collect()
+    val got = TableStore.readSnapshot(spark, out, schema.add("location_id", LongType)).collect()
       .map(r => (r.getAs[Long]("location_id"), r.getAs[String]("code_city"),
         r.getAs[String]("name"), Option(r.getAs[java.lang.Boolean]("isCapital")),
         Option(r.getAs[java.lang.Double]("lat")))).sortBy(_._1)
@@ -113,7 +113,7 @@ class XlsxSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("xlsx_rt").toString + "/locations"
     val full = StructType(StructField("location_id", LongType) +: schema.fields)
     TableStore.importSnapshotXlsx(spark, x, out, full, "location_id", Seq("code_city"))
-    val got = spark.read.parquet(out)
+    val got = TableStore.readSnapshot(spark, out, full)
       .select("location_id", "code_city", "name", "isCapital", "lat")
       .orderBy(col("location_id")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getBoolean(3), r.getDouble(4)))
