@@ -7,11 +7,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe AND reader-safe lifecycle for persisted artifacts: the
   * manifest-pinned GENERATION layout (r17 — see the block comment
-  * below). It is the one way `graft.sources` replaces persisted state:
-  * every parquet index family and the weather locations snapshot
-  * ([[TableStore.replaceSnapshot]]) write through [[writeGen]], and
-  * [[PpIndex]] runs its catalog-table generations on the same
-  * [[currentGen]]/[[publish]] pointer mechanics.
+  * below). It is the one way the engine replaces persisted state:
+  * every parquet index family, the weather locations snapshot
+  * ([[TableStore.replaceSnapshot]]) and the four state stores of
+  * [[graft.streaming.DocPipeline]] write through [[writeGen]] and
+  * [[commitAppend]], and [[PpIndex]] runs its catalog-table
+  * generations on the same [[currentGen]]/[[publish]] pointer
+  * mechanics.
   *
   * Lineage of the mechanism, because each step closed a real hazard:
   *
@@ -48,7 +50,7 @@ object AtomicSwap {
     * (destination exists after a failed delete, cross-FS move, …), not
     * by throwing (r17, ADVICE) — an unchecked rename lets a commit
     * "succeed" half-done and serve the stale state silently. It is the
-    * one rename in `graft.sources`: the manifest commit in [[publish]].
+    * one rename in the engine: the manifest commit in [[publish]].
     */
   private def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
     require(fs.rename(src, dst),

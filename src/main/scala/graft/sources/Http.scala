@@ -17,10 +17,11 @@ import scala.util.{Failure, Success, Try}
   * failures (5xx / IO errors) that the reference's scheduler-rerun
   * model implies.
   *
-  * Scale note: per-partition fan-out belongs under
-  * [[Throttle.mapThrottled]] — executors each hold one shared client;
-  * the connector itself is a plain function so it serializes into the
-  * existing seams unchanged.
+  * Scale note: executors call it from a plain `map`, each call behind
+  * [[Throttle.acquire]] (the shape of the weather connectors in
+  * [[graft.weather.WeatherMain]]) — executors each hold one shared
+  * client; the connector itself is a plain function so it serializes
+  * into the existing seams unchanged.
   */
 object Http {
 

@@ -1,38 +1,30 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, Encoder}
-
-/** Rate-limited distributed fetch — the Spark shape of the reference's
-  * throttled per-row HTTP loops (`weather_data_fetcher.py:132-143`
+/** Rate limiting for the connector seams — the Spark shape of the
+  * reference's throttled per-row HTTP loops (`weather_data_fetcher.py:132-143`
   * geocode lookup, `:260-263` weather fetch: one request per row with an
   * inter-call sleep).
   *
-  * `mapPartitions` keeps ONE limiter (and, in a real deployment, one
-  * connection/session) per partition; rows stream through lazily, so a
-  * partition never buffers more than one in-flight element. The global
-  * request rate is `perSecPerPartition × numPartitions` — size the
-  * partition count to the provider's quota (`df.repartition(quota /
-  * perSecPerPartition)`), which is also how the work spreads across a
-  * 1000-executor cluster without any coordinator.
-  *
-  * The transport `f` is injected (same seam as
-  * [[JsonSource.fromPayload]] and the geocoder in
-  * [[graft.weather.GeocodeMatcher]]): the engine stays sandbox-testable
-  * and deployment supplies the real HTTP client.
+  * The limiter sits INSIDE the injected connector function
+  * ([[acquire]]), so it bounds every CALL, however many a row makes;
+  * the connectors run in a plain `map` on the executors and spread
+  * across a 1000-executor cluster without any coordinator. The
+  * transport stays injected (same seam as [[JsonSource.fromPayload]]
+  * and the geocoder in [[graft.weather.GeocodeMatcher]]): the engine
+  * stays sandbox-testable and deployment supplies the real HTTP client.
   */
 object Throttle {
 
   /** JVM-wide named token buckets for throttling per-CALL seams — the
     * shape [[graft.weather.WeatherMain]] needs: the geocode resolver
     * calls its connector a variable number of times per row (one per
-    * name variant), so a per-ROW limiter ([[mapThrottled]]) cannot
-    * bound the request rate; this one sits inside the injected function
-    * and bounds every call. One bucket per key per executor JVM
-    * (`ConcurrentHashMap` of reservation timestamps, CAS-reserved, so
-    * concurrent task threads in one executor share the budget); the
-    * cluster-wide rate is `perSecPerJvm × executors` — size the
-    * per-JVM rate to `quota / numExecutors`, same sizing rule as
-    * [[mapThrottled]]'s partition count.
+    * name variant), so a per-ROW limiter cannot bound the request rate;
+    * this one sits inside the injected function and bounds every call.
+    * One bucket per key per executor JVM (`ConcurrentHashMap` of
+    * reservation timestamps, CAS-reserved, so concurrent task threads
+    * in one executor share the budget); the cluster-wide rate is
+    * `perSecPerJvm × executors` — size the per-JVM rate to
+    * `quota / numExecutors` ([[perJvmShare]]).
     */
   private val buckets =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
@@ -71,27 +63,5 @@ object Throttle {
     }
     val waitNs = slot - System.nanoTime()
     if (waitNs > 0) Thread.sleep(waitNs / 1000000L, (waitNs % 1000000L).toInt)
-  }
-
-  /** Map `f` over `ds` with at most `perSecPerPartition` calls per
-    * second per partition (token-bucket: the first call in an idle
-    * window is immediate; sustained calls space by `1/rate`).
-    */
-  def mapThrottled[I, O: Encoder](ds: Dataset[I], perSecPerPartition: Double)(
-      f: I => O): Dataset[O] = {
-    require(perSecPerPartition > 0, "rate must be positive")
-    val intervalNs = (1e9 / perSecPerPartition).toLong
-    ds.mapPartitions { it =>
-      var nextAllowed = 0L // ns timestamp the next call may start at
-      it.map { i =>
-        val now = System.nanoTime()
-        if (now < nextAllowed) {
-          val waitNs = nextAllowed - now
-          Thread.sleep(waitNs / 1000000L, (waitNs % 1000000L).toInt)
-        }
-        nextAllowed = math.max(now, nextAllowed) + intervalNs
-        f(i)
-      }
-    }
   }
 }

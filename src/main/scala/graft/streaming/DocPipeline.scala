@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -8,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Text
 import graft.queries.Dedup
+import graft.sources.AtomicSwap
 
 /** Incremental (streaming) form of the p01 training-data pipeline —
   * the "real-time" half of the north star applied to the LLM-pipeline
@@ -103,59 +105,59 @@ object DocPipeline {
   private val edgesSchema = StructType(Seq(
     StructField("a_id", LongType), StructField("b_id", LongType)))
 
-  /** Finish an interrupted [[compact]] swap, if one is detected. A crash
-    * between `rename(p, old)` and `rename(tmp, p)` leaves the live path
-    * absent with both siblings on disk; without recovery the next read
-    * would treat history as EMPTY and re-admit previously deduped docs.
-    * The `.compact` sibling is preferred (it is the post-rewrite store,
-    * and its `_SUCCESS` marker proves the write committed); `.old` is
-    * the untouched pre-rewrite store — either is the same data.
+  /** The current data directory of the store at `root`, or None for the
+    * empty store. Every store is an [[AtomicSwap]] generation root. A
+    * root that is absent, holds only hidden entries (the `_temporary` a
+    * crash during its very first write leaves) or only an unpublished
+    * generation has no committed data: it reads as empty and the next
+    * batch's first write recovers it. A root holding data but no
+    * manifest was written by an older, flat layout and fails loudly —
+    * read with the current schema it could serve silent nulls for
+    * columns it lacks (state is cheap to rebuild, silent nulls are not).
     */
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) {
-      val tmp = new org.apache.hadoop.fs.Path(path + ".compact")
-      val old = new org.apache.hadoop.fs.Path(path + ".old")
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-        fs.rename(tmp, p)
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        fs.rename(old, p)
-        fs.delete(tmp, true)
+  private def liveDir(spark: SparkSession, root: String): Option[String] = {
+    val rp = new Path(root)
+    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(rp)) None
+    else {
+      val dir = AtomicSwap.dataDir(spark, root)
+      if (dir != root) Some(dir)
+      else {
+        val flat = fs.listStatus(rp).map(_.getPath.getName)
+          .filterNot(n => n.startsWith("_") || n.startsWith(".") || n.matches("g\\d+"))
+        require(flat.isEmpty, s"DocPipeline state at $root was written by an " +
+          "older layout (data files but no generation manifest). Wipe the " +
+          "state dir and re-ingest (state is derived data).")
+        None
       }
     }
   }
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, path)
-    if (fs.exists(p)) {
-      // Reading with an EXPLICIT schema silently yields NULL for any
-      // column the files don't carry — so a state dir written by an
-      // older layout (e.g. docs before n_windows/n_kept, r14) would
-      // serve null verdicts instead of failing (r15, ADVICE). Compare
-      // the on-disk footer schema first and fail loudly: state is
-      // cheap to rebuild, silent nulls are not. Footer inference is
-      // one driver-side read per store per batch. A dir that EXISTS
-      // but holds no committed data files (crash during the very first
-      // write leaves only _temporary) has no footers to infer from —
-      // that is the empty store, not a layout violation, so fall
-      // through to the explicit-schema read (which returns empty) and
-      // let the replay recover as it did pre-r15 (r16, ADVICE).
-      val onDisk =
-        try Some(spark.read.parquet(path).schema.fieldNames.toSet)
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      onDisk.foreach { fields =>
-        val missing = schema.fieldNames.filterNot(fields.contains)
-        require(missing.isEmpty, s"DocPipeline state at $path was written " +
-          s"by an older layout: missing column(s) ${missing.mkString(", ")}. " +
-          "Wipe the state dir and re-ingest (state is derived data).")
-      }
-      spark.read.schema(schema).parquet(path)
-    }
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private def read(spark: SparkSession, live: Option[String],
+      schema: StructType): DataFrame =
+    live.fold(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))(
+      spark.read.schema(schema).parquet(_))
+
+  /** The store at `root` as of its current generation; the empty frame
+    * when it has none. Fails loudly on an older layout ([[liveDir]]).
+    */
+  private def readOrEmpty(spark: SparkSession, root: String,
+      schema: StructType): DataFrame =
+    read(spark, liveDir(spark, root), schema)
+
+  /** Append `rows` to the store at `root`, whose data directory `live`
+    * was resolved before this batch read it: into that generation, then
+    * the [[AtomicSwap.commitAppend]] bump — which fails loudly if a
+    * compact ran in between (writers must be serialized) — or, for an
+    * empty store, as its first generation through [[AtomicSwap.writeGen]],
+    * so no data file ever lands at the root itself.
+    */
+  private def append(spark: SparkSession, root: String, live: Option[String],
+      rows: DataFrame): Unit = live match {
+    case Some(dir) =>
+      rows.write.mode("append").parquet(dir)
+      AtomicSwap.commitAppend(spark, root, dir)
+    case None => AtomicSwap.writeGen(spark, root)(rows.write.parquet(_))
   }
 
   /** Start the incremental pipeline over a document stream with an
@@ -194,7 +196,13 @@ object DocPipeline {
         Window.partitionBy("text_hash").orderBy("doc_id")))
       .filter(col("rk") === 1)
       .select("doc_id", "text", "lang", "source", "text_hash")
-    val store = readOrEmpty(spark, docsPath(stateDir), docsSchema)
+    // each store's current generation, resolved once: the batch reads
+    // it and appends into it
+    val docsDir = liveDir(spark, docsPath(stateDir))
+    val bandsDir = liveDir(spark, bandsPath(stateDir))
+    val winfpsDir = liveDir(spark, winfpsPath(stateDir))
+    val edgesDir = liveDir(spark, edgesPath(stateDir))
+    val store = read(spark, docsDir, docsSchema)
     // stage 1b: exact dedup against ALL history (the watermark stage
     // already dropped duplicates within its horizon; this closes it)
     // ONE batch text pass for BOTH dedup granularities (r15, verdict
@@ -238,7 +246,7 @@ object DocPipeline {
     val newBands = Dedup.bandKeys(fresh.select("doc_id", "sh"))
       .localCheckpoint(eager = false)
     val histBands = graft.sources.BandIndex.withBand(
-      readOrEmpty(spark, bandsPath(stateDir), bandsSchema)).select("doc_id", "band")
+      read(spark, bandsDir, bandsSchema)).select("doc_id", "band")
     val cand = graft.sources.BandIndex.candidatesAgainstDf(histBands, newBands)
     val corpusSh = store.select(col("doc_id"), col("sh"))
       .union(fresh.select(col("doc_id"), col("sh")))
@@ -271,7 +279,7 @@ object DocPipeline {
     val occ = fresh
       .select(col("doc_id"), posexplode(col("wfps")))
       .select(col("doc_id"), col("pos").cast("long").as("seq"), col("col").as("wfp"))
-    val histWin = readOrEmpty(spark, winfpsPath(stateDir), winfpsSchema)
+    val histWin = read(spark, winfpsDir, winfpsSchema)
       .select(col("wfp"), struct(col("doc_id"), col("seq")).as("hwin"))
     // batch-local winners; the GLOBAL winner per fp is the history row
     // when one exists (in-order arrival: history ids are smaller —
@@ -317,55 +325,43 @@ object DocPipeline {
     // replay reproduces identically (the coalesce above prefers the
     // stored winner, which IS the replayed batch's own minimum) and
     // compact's distinct sweeps.
-    batchWin.filter(col("isNew"))
-      .select(col("wfp"), col("win.doc_id").as("doc_id"), col("win.seq").as("seq"))
-      .write.mode("append").parquet(winfpsPath(stateDir))
-    newBands.write.mode("append").parquet(bandsPath(stateDir))
+    append(spark, winfpsPath(stateDir), winfpsDir, batchWin.filter(col("isNew"))
+      .select(col("wfp"), col("win.doc_id").as("doc_id"), col("win.seq").as("seq")))
+    append(spark, bandsPath(stateDir), bandsDir, newBands)
     // edges are index state like bands/winfps, so they too write BEFORE
     // docs: a crash after this write leaves orphan pairs (endpoints not
     // yet in docs), which replay re-appends identically — duplicates
     // collapse in edgesStore's distinct and compact's sweep. Written
     // every batch (even empty) so the directory's EXISTENCE marks the
     // r19+ layout — see the loud guard in [[edgesStore]].
-    verified.write.mode("append").parquet(edgesPath(stateDir))
-    marked.write.mode("append").parquet(docsPath(stateDir))
+    append(spark, edgesPath(stateDir), edgesDir, verified)
+    append(spark, docsPath(stateDir), docsDir, marked)
   }
 
   /** Compact the append-only state stores: every micro-batch appends a
     * file, so a long-running pipeline accretes small files and store
-    * reads slow down. Rewrites each store to `targetFiles` files and
-    * swaps it in with a rename (write-new → rename-old-away →
-    * rename-new-in → delete-old). A crash mid-swap leaves either the
-    * old or the new store recoverable — the window where the live path
-    * is absent but a `.old`/`.compact` sibling holds the data is healed
-    * automatically by [[recoverSwap]] on the next read (and on the next
-    * compact), so history is never silently treated as empty. Run
-    * between batches (e.g. every N batches from the driving loop) —
-    * not concurrently with one.
+    * reads slow down. Each store is rewritten to `targetFiles` files as
+    * its next generation ([[AtomicSwap.writeGen]]); the manifest
+    * publish is the commit, so a crash before it leaves readers on the
+    * old generation and the next compact prunes the stray. Reader-safe:
+    * a frame planned before the compact keeps its files for one more
+    * compaction cycle. Writers must still be serialized — run it
+    * between batches, not concurrently with one; a batch that races it
+    * fails loudly in its commitAppend instead of losing rows.
     */
   def compact(spark: SparkSession, stateDir: String, targetFiles: Int = 4): Unit =
-    // the bands store additionally dedups: a crash between the two
-    // state writes (bands land, docs don't) leaves orphan band rows
-    // that replay re-appends — harmless to the candidate join (it
-    // distincts) but worth sweeping here so they don't accrete
+    // the index stores additionally dedup: a crash between the state
+    // writes (bands/winfps/edges land, docs don't) leaves orphan rows
+    // that replay re-appends — harmless to the readers (they distinct
+    // or re-match) but worth sweeping here so they don't accrete
     Seq((docsPath(stateDir), docsSchema, false), (bandsPath(stateDir), bandsSchema, true),
         (winfpsPath(stateDir), winfpsSchema, true),
         (edgesPath(stateDir), edgesSchema, true))
-      .foreach { case (path, schema, dedup) =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverSwap(fs, path)
-        if (fs.exists(p)) {
-          val tmp = new org.apache.hadoop.fs.Path(path + ".compact")
-          val old = new org.apache.hadoop.fs.Path(path + ".old")
-          val base = spark.read.schema(schema).parquet(path)
-          (if (dedup) base.distinct() else base)
-            .repartition(targetFiles)
-            .write.mode("overwrite").parquet(tmp.toString)
-          fs.delete(old, true)
-          fs.rename(p, old)
-          fs.rename(tmp, p)
-          fs.delete(old, true)
+      .foreach { case (root, schema, dedup) =>
+        liveDir(spark, root).foreach { live =>
+          val base = spark.read.schema(schema).parquet(live)
+          AtomicSwap.writeGen(spark, root)(
+            (if (dedup) base.distinct() else base).repartition(targetFiles).write.parquet(_))
         }
       }
 
@@ -393,18 +389,14 @@ object DocPipeline {
     readOrEmpty(spark, edgesPath(stateDir), edgesSchema).distinct()
   }
 
-  /** Heal a crashed compact swap on the edges path, then fail loudly on
-    * a pre-r19 layout (docs present, edges absent) — shared by
-    * [[edgesStore]] and [[edgesProbe]] (r20, ADVICE: the probe used to
-    * skip the guard and would report an all-zero artifact over a state
-    * dir the store itself refuses to read).
+  /** Fail loudly on a pre-r19 layout (docs present, edges absent) —
+    * shared by [[edgesStore]] and [[edgesProbe]] (r20, ADVICE: the probe
+    * used to skip the guard and would report an all-zero artifact over
+    * a state dir the store itself refuses to read).
     */
   private def edgesLayoutGuard(spark: SparkSession, stateDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(edgesPath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, edgesPath(stateDir))
-    val docsExist = fs.exists(new org.apache.hadoop.fs.Path(docsPath(stateDir)))
-    require(!docsExist || fs.exists(p),
+    val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(new Path(docsPath(stateDir))) || fs.exists(new Path(edgesPath(stateDir))),
       s"DocPipeline state at $stateDir was written by a pre-edge-store " +
         "layout (docs present, edges absent). Wipe the state dir and " +
         "re-ingest (state is derived data).")

@@ -151,6 +151,30 @@ object WeatherMain {
         .map(Throttle.perJvmShare(_, jvms)).getOrElse(cfg.weatherPerSec))
   }
 
+  /** Stage C of a tick (`:436-453`): fetch+shred on executors,
+    * broadcast id lookup, IDENTITY-continuing `weather_id`,
+    * day-partitioned bulk append to `factsPath`. Returns the appended
+    * facts and the miss audit. [[run]] and the streaming tick
+    * ([[WeatherStream.ingestStream]]) both append through it, so every
+    * fact row carries a dense id.
+    */
+  private[weather] def appendTick(spark: SparkSession, snapshot: DataFrame,
+      fetchJson: (Double, Double) => String, factsPath: String,
+      now: Timestamp): (DataFrame, DataFrame) = {
+    val (facts, missed) = WeatherIngest.ingest(spark, snapshot, fetchJson, now)
+    val baseId = TableStore.readSnapshot(spark, factsPath, Schemas.weatherData)
+      .agg(coalesce(max(col("weather_id")), lit(0L))).head().getLong(0)
+    // reference-scale id assignment (one window over a 146-row batch);
+    // a fact-scale batch would use the overwriteSnapshotLarge pattern
+    val ordered = facts.withColumn("weather_id",
+      (row_number().over(Window.orderBy(col("location_name"), col("province_name")))
+        .cast("long")) + lit(baseId))
+      .select(Schemas.weatherData.fieldNames.map(col).toSeq: _*)
+    TableStore.appendFacts(
+      ordered.withColumn("day", to_date(col("data_datetime"))), factsPath, Seq("day"))
+    (ordered, missed)
+  }
+
   /** One full pipeline run (the reference's `main`). `now` is injected
     * for determinism, as in the jobs (SURVEY.md §7.4 #3).
     */
@@ -188,20 +212,8 @@ object WeatherMain {
     }
 
     // C: ingest weather over the (possibly refreshed) snapshot
-    // (`:436-453`): fetch+shred on executors, broadcast id lookup,
-    // IDENTITY-continuing weather_id, day-partitioned bulk append.
     val snapshot = TableStore.readSnapshot(spark, cfg.snapshotPath, Schemas.locationsSnapshot)
-    val (facts, missed) = WeatherIngest.ingest(spark, snapshot, weatherFetcher(cfg), now)
-    val baseId = TableStore.readSnapshot(spark, cfg.factsPath, Schemas.weatherData)
-      .agg(coalesce(max(col("weather_id")), lit(0L))).head().getLong(0)
-    // reference-scale id assignment (one window over a 146-row batch);
-    // a fact-scale batch would use the overwriteSnapshotLarge pattern
-    val ordered = facts.withColumn("weather_id",
-      (row_number().over(Window.orderBy(col("location_name"), col("province_name")))
-        .cast("long")) + lit(baseId))
-      .select(Schemas.weatherData.fieldNames.map(col).toSeq: _*)
-    TableStore.appendFacts(
-      ordered.withColumn("day", to_date(col("data_datetime"))), cfg.factsPath, Seq("day"))
+    val (ordered, missed) = appendTick(spark, snapshot, weatherFetcher(cfg), cfg.factsPath, now)
 
     Report(
       refreshed = refreshed,

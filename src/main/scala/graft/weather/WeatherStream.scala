@@ -3,22 +3,17 @@ package graft.weather
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-import graft.sources.TableStore
 
 /** The reference's "real-time" mode is an external scheduler re-running
   * the batch script (`README.md:25`, SURVEY.md §2.10). This is its
   * Structured Streaming twin: a trigger tick drives one ingest pass per
   * micro-batch through `foreachBatch` — `Trigger.ProcessingTime` is the
   * Task-Scheduler cadence, `Trigger.AvailableNow` the run-once catch-up.
-  * Identical batch semantics (same `WeatherIngest.ingest`), but
-  * checkpointed, exactly-once per batch id, and without the external
-  * scheduler.
-  *
-  * Facts append day-partitioned so the analytics layer's time-range
-  * queries prune partitions (SURVEY.md §4).
+  * Identical batch semantics — each tick runs the batch job's stage C
+  * ([[WeatherMain.appendTick]]: ingest, dense `weather_id`,
+  * day-partitioned append) — but checkpointed, exactly-once per batch
+  * id, and without the external scheduler.
   */
 object WeatherStream {
 
@@ -39,9 +34,8 @@ object WeatherStream {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        val (facts, _) = WeatherIngest.ingest(spark, snapshot(), fetchJson, clock())
-        TableStore.appendFacts(
-          facts.withColumn("day", to_date(col("data_datetime"))), factsPath, Seq("day"))
+        WeatherMain.appendTick(spark, snapshot(), fetchJson, factsPath, clock())
+        () // foreachBatch's Scala overload takes a Unit-returning function
       }
       .start()
   }

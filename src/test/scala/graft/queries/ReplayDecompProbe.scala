@@ -62,7 +62,8 @@ object ReplayDecompProbe {
     println(f"[replaydecomp] b2 newBands (+checkpoint): ${time(mat(newBands))}%.1fs")
 
     val histBands = graft.sources.BandIndex.withBand(
-      spark.read.parquet(s"$stateDir/bands")).select("doc_id", "band")
+      spark.read.parquet(graft.sources.AtomicSwap.dataDir(spark, s"$stateDir/bands")))
+      .select("doc_id", "band")
     val cand = graft.sources.BandIndex.candidatesAgainstDf(histBands, newBands)
       .localCheckpoint(eager = false)
     println(f"[replaydecomp] b2 band candidate join: ${time(mat(cand))}%.1fs")
@@ -80,7 +81,8 @@ object ReplayDecompProbe {
     val occ = fresh
       .select(col("doc_id"), posexplode(col("wfps")))
       .select(col("doc_id"), col("pos").cast("long").as("seq"), col("col").as("wfp"))
-    val histWin = spark.read.parquet(s"$stateDir/winfps")
+    val histWin = spark.read.parquet(
+        graft.sources.AtomicSwap.dataDir(spark, s"$stateDir/winfps"))
       .select(col("wfp"), struct(col("doc_id"), col("seq")).as("hwin"))
     val batchWin = occ.groupBy("wfp")
       .agg(min(struct(col("doc_id"), col("seq"))).as("bwin"))

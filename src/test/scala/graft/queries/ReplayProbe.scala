@@ -63,8 +63,10 @@ object ReplayProbe {
       if (!d.exists()) 0
       else d.listFiles().count(f => f.getName.endsWith(".parquet"))
     }
-    println(s"[replayprobe] state files: docs=${fileCount(s"$stateDir/docs")} " +
-      s"bands=${fileCount(s"$stateDir/bands")}")
+    def storeFiles(store: String): Int =
+      fileCount(graft.sources.AtomicSwap.dataDir(spark, s"$stateDir/$store"))
+    println(s"[replayprobe] state files: docs=${storeFiles("docs")} " +
+      s"bands=${storeFiles("bands")}")
     spark.stop()
     new scala.reflect.io.Directory(new java.io.File(stateDir)).deleteRecursively()
   }

@@ -12,8 +12,8 @@ import graft.SparkSpec
   * actual status codes, no network egress. Proves the production
   * function that plugs into the fetch seams: 200→body, non-200→empty
   * (F4), bounded retries on 5xx with eventual success, no retry on
-  * 4xx — and the full deployment composition, executors fetching
-  * through [[Throttle.mapThrottled]].
+  * 4xx — and the full deployment composition, executors fetching in a
+  * plain `map` behind [[Throttle.acquire]].
   */
 class HttpSpec extends SparkSpec {
 
@@ -82,7 +82,11 @@ class HttpSpec extends SparkSpec {
       }
     )) { port =>
       val ids = spark.range(0, 8).as[Long].repartition(2)
-      val bodies = Throttle.mapThrottled(ids, perSecPerPartition = 1000.0) { id =>
+      // the production shape of WeatherMain.weatherFetcher: acquire the
+      // per-JVM bucket, then fetch
+      val key = s"spec-loc-${System.nanoTime()}"
+      val bodies = ids.map { id =>
+        Throttle.acquire(key, 1000.0)
         Http.getJson(s"http://127.0.0.1:$port/loc?id=$id").getOrElse("")
       }.collect().sorted
       assert(calls.get() === 8)

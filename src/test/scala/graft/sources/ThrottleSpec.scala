@@ -1,28 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.{CountDownLatch, Executors}
+
 import graft.SparkSpec
 
-object ThrottleSpec {
-  /** Static transport stub (companion object so Spark closures don't
-    * capture the scalatest Engine — see SparkSpec conventions).
-    */
-  val echo: String => String = u => s"ok:$u"
-}
-
 class ThrottleSpec extends SparkSpec {
-
-  import spark.implicits._
-
-  test("mapThrottled paces calls to the per-partition rate") {
-    val ds = spark.createDataset(Seq("a", "b", "c", "d", "e")).repartition(1)
-    val t0 = System.nanoTime()
-    val out = Throttle.mapThrottled(ds, perSecPerPartition = 50.0)(ThrottleSpec.echo)
-      .collect().sorted
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(out === Array("ok:a", "ok:b", "ok:c", "ok:d", "ok:e"))
-    // 5 calls at 50/s: first immediate, 4 spaced by >= 20ms each
-    assert(elapsedMs >= 75.0, s"finished in ${elapsedMs}ms — throttle not applied")
-  }
 
   test("perJvmShare splits a cluster budget so the executor-sum equals the quota") {
     // the reference's 1 req/s geocode quota over 100 executors: each
@@ -40,12 +22,24 @@ class ThrottleSpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e6 >= 95.0)
   }
 
-  test("an effectively-unthrottled rate adds no meaningful wait") {
-    val ds = spark.createDataset((1 to 100).map(_.toString)).repartition(2)
-    val t0 = System.nanoTime()
-    val n = Throttle.mapThrottled(ds, perSecPerPartition = 1e6)(ThrottleSpec.echo).count()
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(n === 100)
-    assert(elapsedMs < 5000.0)
+  test("concurrent task threads share one acquire bucket per key") {
+    // 8 threads (an executor's task slots) acquire a fresh key at once:
+    // the first slot is immediate and the other 7 queue on the SAME
+    // bucket, so together they take at least 7/R — per-thread buckets
+    // would all finish at once
+    val rate = 40.0
+    val key = s"spec-shared-${System.nanoTime()}"
+    val pool = Executors.newFixedThreadPool(8)
+    val go = new CountDownLatch(1)
+    try {
+      val t0 = System.nanoTime()
+      val done = (1 to 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit = { go.await(); Throttle.acquire(key, rate) }
+      }))
+      go.countDown()
+      done.foreach(_.get())
+      val elapsedMs = (System.nanoTime() - t0) / 1e6
+      assert(elapsedMs >= 7 * 1000.0 / rate, s"8 acquisitions took ${elapsedMs}ms")
+    } finally pool.shutdown()
   }
 }

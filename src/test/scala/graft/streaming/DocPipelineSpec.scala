@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
+import graft.sources.AtomicSwap
 
 /** One document event on the incremental pipeline's input stream. */
 case class DocEvent(doc_id: Long, ts: Timestamp,
@@ -59,7 +60,7 @@ class DocPipelineSpec extends SparkSpec {
     import spark.implicits._
     // a docs store written before the n_windows/n_kept columns existed:
     // reading it with the explicit current schema would silently yield
-    // NULL for both — the r15 guard must reject it instead
+    // NULL for both — the older-layout guard must reject it instead
     val stateDir = java.nio.file.Files.createTempDirectory("docpipelegacy").toString
     Seq((1L, "t", "en", "s", "h", Seq("sh"), false))
       .toDF("doc_id", "text", "lang", "source", "text_hash", "sh", "is_neardup")
@@ -68,7 +69,7 @@ class DocPipelineSpec extends SparkSpec {
       DocPipeline.docsStore(spark, stateDir).collect()
     }
     assert(e.getMessage.contains("older layout") &&
-      e.getMessage.contains("n_windows"))
+      e.getMessage.contains("no generation manifest"))
   }
 
   test("compaction shrinks the store file count and changes nothing observable") {
@@ -88,9 +89,9 @@ class DocPipelineSpec extends SparkSpec {
     def parquetFiles(p: String): Int =
       new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
     val before = DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq
-    val filesBefore = parquetFiles(s"$stateDir/docs")
+    val filesBefore = parquetFiles(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
     DocPipeline.compact(spark, stateDir, targetFiles = 1)
-    assert(parquetFiles(s"$stateDir/docs") < filesBefore)
+    assert(parquetFiles(AtomicSwap.dataDir(spark, s"$stateDir/docs")) < filesBefore)
     assert(DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq === before)
   }
 
@@ -139,12 +140,12 @@ class DocPipelineSpec extends SparkSpec {
     DocPipeline.processBatch(mkBatch(0L to 20L), stateDir)
     val b2 = mkBatch(21L to 40L)
     DocPipeline.processBatch(b2, stateDir)
-    val docsAfter = spark.read.parquet(s"$stateDir/docs")
+    val docsAfter = spark.read.parquet(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     val aggAfter = DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq
     // the crash: batch 2 replays wholesale
     DocPipeline.processBatch(b2, stateDir)
-    assert(spark.read.parquet(s"$stateDir/docs")
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
       .collect().map(_.toSeq).sortBy(_.toString).toSeq === docsAfter)
     assert(DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq === aggAfter)
   }
@@ -165,21 +166,25 @@ class DocPipelineSpec extends SparkSpec {
     // then the batch replays in full
     DocPipeline.processBatch(b1, dirB)
     val orphanBands = graft.queries.Dedup.bandKeys(
-      b2.join(spark.read.parquet(s"$dirB/docs").select("text_hash"),
+      b2.join(spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirB/docs")).select("text_hash"),
           Seq("text_hash"), "left_anti")
         .withColumn("sh", graft.functions.Text.distinctShingles($"text"))
         .select("doc_id", "sh"))
-    orphanBands.write.mode("append").parquet(s"$dirB/bands")
+    orphanBands.write.mode("append").parquet(AtomicSwap.dataDir(spark, s"$dirB/bands"))
     DocPipeline.processBatch(b2, dirB) // the replay
     // observable state agrees with the no-crash run
     assert(DocPipeline.aggregate(spark, dirB).collect().map(_.toSeq).toSeq ===
       DocPipeline.aggregate(spark, dirA).collect().map(_.toSeq).toSeq)
-    assert(spark.read.parquet(s"$dirB/docs").collect().map(_.toSeq).sortBy(_.toString).toSeq ===
-      spark.read.parquet(s"$dirA/docs").collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirB/docs"))
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq ===
+      spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirA/docs"))
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq)
     // the orphan band duplicates exist until compaction sweeps them
     DocPipeline.compact(spark, dirB, targetFiles = 1)
-    assert(spark.read.parquet(s"$dirB/bands").collect().map(_.toSeq).sortBy(_.toString).toSeq ===
-      spark.read.parquet(s"$dirA/bands").collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirB/bands"))
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq ===
+      spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirA/bands"))
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq)
   }
 
   test("the maintained edge store equals the lshVerifiedPairs recompute " +
@@ -240,40 +245,62 @@ class DocPipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("in-order"))
     // a wholesale replay of an already-processed batch is NOT an
     // ordering violation — its rows anti-join away before the check
-    val docsAfter = spark.read.parquet(s"$stateDir/docs")
+    val docsAfter = spark.read.parquet(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     DocPipeline.processBatch(mkBatch(21L to 40L), stateDir)
-    assert(spark.read.parquet(s"$stateDir/docs")
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
       .collect().map(_.toSeq).sortBy(_.toString).toSeq === docsAfter)
   }
 
-  test("crash mid-compact swap (live store absent, sibling present) self-heals on read") {
+  test("a docsStore frame planned before compact returns the same rows after it") {
+    import spark.implicits._
+    val stateDir = java.nio.file.Files.createTempDirectory("docpipereader").toString
+    def mkBatch(ids: Seq[Long]) = graft.Tables(spark, dir, "documents")
+      .filter($"doc_id".isin(ids: _*))
+      .select($"doc_id", $"text", $"lang", $"source",
+        org.apache.spark.sql.functions.md5($"text").as("text_hash"))
+    DocPipeline.processBatch(mkBatch(0L to 20L), stateDir)
+    DocPipeline.processBatch(mkBatch(21L to 40L), stateDir)
+    // the frame resolves its file list now; compact publishes a new
+    // generation and must leave the planned one's files in place
+    val frame = DocPipeline.docsStore(spark, stateDir)
+    val before = frame.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    DocPipeline.compact(spark, stateDir, targetFiles = 1)
+    assert(frame.collect().map(_.toSeq).sortBy(_.toString).toSeq === before)
+    assert(DocPipeline.docsStore(spark, stateDir)
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq === before)
+  }
+
+  test("crash mid-compact (next generation written, never published) leaves readers on the live one") {
     import spark.implicits._
     val stateDir = java.nio.file.Files.createTempDirectory("docpipeswap").toString
     def mkBatch(ids: Seq[Long]) = graft.Tables(spark, dir, "documents")
       .filter($"doc_id".isin(ids: _*))
       .select($"doc_id", $"text", $"lang", $"source",
         org.apache.spark.sql.functions.md5($"text").as("text_hash"))
-    def move(a: String, b: String): Unit =
-      java.nio.file.Files.move(java.nio.file.Paths.get(a), java.nio.file.Paths.get(b))
     DocPipeline.processBatch(mkBatch(0L to 30L), stateDir)
     val before = DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq
-    val bandsBefore = spark.read.parquet(s"$stateDir/bands").count()
-    // window A: crash right after rename(p, old) with the rewrite lost —
-    // only .old holds the data; a naive read would see EMPTY history
-    move(s"$stateDir/docs", s"$stateDir/docs.old")
+    val nDocs = DocPipeline.docsStore(spark, stateDir).count()
+    // the crash: compact committed docs/g<next> (with _SUCCESS) but not
+    // its manifest. The stray holds a strict subset, so a reader that
+    // wrongly followed it would see history shrink.
+    val live = new org.apache.hadoop.fs.Path(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
+    val stray = new java.io.File(s"$stateDir/docs/g${live.getName.stripPrefix("g").toInt + 1}")
+    spark.read.parquet(live.toString).filter($"doc_id" <= 10L)
+      .write.parquet(stray.toString)
+    assert(new java.io.File(stray, "_SUCCESS").exists)
     assert(DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq === before)
-    assert(new java.io.File(s"$stateDir/docs").exists)
-    assert(!new java.io.File(s"$stateDir/docs.old").exists)
-    // window B: crash between the two renames — live absent, completed
-    // .compact (with _SUCCESS) present; the rewrite is preferred
-    move(s"$stateDir/docs", s"$stateDir/docs.compact")
-    assert(DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq === before)
-    // the bands store heals the same way via processBatch's read — the
-    // next batch must still see history (no re-admitted duplicates)
-    move(s"$stateDir/bands", s"$stateDir/bands.old")
-    DocPipeline.processBatch(mkBatch(31L to 35L), stateDir)
-    assert(spark.read.parquet(s"$stateDir/bands").count() > bandsBefore)
+    // the next batch still sees history: its replayed rows anti-join
+    // away (no re-admitted duplicates) and only the new ids land
+    DocPipeline.processBatch(mkBatch(0L to 35L), stateDir)
+    val ids = DocPipeline.docsStore(spark, stateDir).select("doc_id").as[Long].collect()
+    assert(ids.length === ids.distinct.length, "history re-admitted")
+    assert(ids.length > nDocs && ids.count(_ <= 30L) === nDocs)
+    // the next compact prunes the stray
+    val after = DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq
+    DocPipeline.compact(spark, stateDir, targetFiles = 1)
+    assert(!stray.exists, "compact must prune the unpublished generation")
+    assert(DocPipeline.aggregate(spark, stateDir).collect().map(_.toSeq).toSeq === after)
   }
 
   test("a duplicate text arriving in a later batch is dropped (exact stage)") {
@@ -291,7 +318,7 @@ class DocPipelineSpec extends SparkSpec {
       mem.addData(ev(1, txt)); q.processAllAvailable()
       mem.addData(ev(2, txt)); q.processAllAvailable() // exact dup, later batch
     } finally q.stop()
-    val store = spark.read.parquet(s"$stateDir/docs")
+    val store = spark.read.parquet(AtomicSwap.dataDir(spark, s"$stateDir/docs"))
     assert(store.count() === 1L)
     assert(store.select("doc_id").collect().head.getLong(0) === 1L)
   }
@@ -344,35 +371,46 @@ class DocPipelineSpec extends SparkSpec {
     // replay must reproduce n_kept (the stored winners ARE the replayed
     // batch's own minima, so the keep-first verdicts re-match)
     DocPipeline.processBatch(b1, dirB)
-    val freshB2 = b2.join(spark.read.parquet(s"$dirB/docs").select("text_hash"),
+    val freshB2 = b2.join(spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirB/docs"))
+        .select("text_hash"),
         Seq("text_hash"), "left_anti")
       .select($"doc_id", posexplode(graft.functions.Text.windowFps($"text")))
       .select($"doc_id", $"pos".cast("long").as("seq"), $"col".as("wfp"))
-    val histFps = spark.read.parquet(s"$dirB/winfps").select("wfp")
+    val histFps = spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirB/winfps")).select("wfp")
     freshB2.join(histFps, Seq("wfp"), "left_anti")
       .groupBy("wfp").agg(min(struct($"doc_id", $"seq")).as("w"))
       .select($"wfp", $"w.doc_id".as("doc_id"), $"w.seq".as("seq"))
-      .write.mode("append").parquet(s"$dirB/winfps")
+      .write.mode("append").parquet(AtomicSwap.dataDir(spark, s"$dirB/winfps"))
     DocPipeline.processBatch(b2, dirB) // the replay
-    def verdicts(d: String) = spark.read.parquet(s"$d/docs")
+    def verdicts(d: String) = spark.read.parquet(AtomicSwap.dataDir(spark, s"$d/docs"))
       .select("doc_id", "n_windows", "n_kept").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     assert(verdicts(dirB) === verdicts(dirA),
       "winfps-orphan crash replay changed substring verdicts")
     // compaction sweeps the duplicate winner rows
     DocPipeline.compact(spark, dirB, targetFiles = 1)
-    assert(spark.read.parquet(s"$dirB/winfps").collect().map(_.toSeq).sortBy(_.toString).toSeq ===
-      spark.read.parquet(s"$dirA/winfps").collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirB/winfps"))
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq ===
+      spark.read.parquet(AtomicSwap.dataDir(spark, s"$dirA/winfps"))
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq)
   }
 
   test("a state dir with no committed data files reads as the empty store") {
     // crash during the very first write of a store leaves the dir with
-    // only _temporary — the footer-schema layout check must not turn
-    // that into a permanent 'unable to infer schema' failure (r16,
-    // ADVICE): it is the empty store, and replay recovers it
+    // only _temporary — the older-layout guard must not turn that into
+    // a permanent failure (r16, ADVICE): it is the empty store, and
+    // replay recovers it
     val stateDir = java.nio.file.Files.createTempDirectory("dpempty").toString
     assert(new java.io.File(s"$stateDir/docs/_temporary").mkdirs())
     assert(DocPipeline.docsStore(spark, stateDir).isEmpty,
       "an uncommitted state dir should read as empty, not fail")
+    // and the next batch recovers it: its first write publishes a
+    // generation beside the leftover _temporary
+    import spark.implicits._
+    DocPipeline.processBatch(graft.Tables(spark, dir, "documents")
+      .filter($"doc_id" <= 20L)
+      .select($"doc_id", $"text", $"lang", $"source",
+        org.apache.spark.sql.functions.md5($"text").as("text_hash")), stateDir)
+    assert(!DocPipeline.docsStore(spark, stateDir).isEmpty)
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
 
 /** Crash-recovery proof for the STATEFUL event streams (verdict ask:
-  * DocPipeline has crash-swap healing; sessionize and watermark dedup
-  * had none). Shape per operator:
+  * DocPipeline has checkpointed crash replay; sessionize and watermark
+  * dedup had none). Shape per operator:
   *
   *  - drive a file-source stream (maxFilesPerTrigger=1, so state and
   *    watermark build across several micro-batches), kill the

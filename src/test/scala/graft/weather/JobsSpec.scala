@@ -100,6 +100,16 @@ class JobsSpec extends SparkSpec {
       assert(facts.select("day").distinct().head.getDate(0).toString === "2024-12-20")
       assert(facts.select("weather_main").head.getString(0) === "Clear")
     } finally q.stop()
+    // each tick runs run's stage C, so stream-written facts carry the
+    // non-null keys Schemas.weatherData declares and dense weather_ids
+    val ids = spark.read.parquet(base.resolve("facts").toString)
+      .agg(count(lit(1)), count(col("weather_id")), count(col("location_id")),
+        min(col("weather_id")), max(col("weather_id")), countDistinct(col("weather_id")))
+      .head()
+    val n = ids.getLong(0)
+    assert(ids.getLong(1) === n && ids.getLong(2) === n, "null weather_id/location_id")
+    assert(ids.getLong(3) === 1L)
+    assert(ids.getLong(4) === n && ids.getLong(5) === n, "weather_id not dense from 1")
   }
 
   test("weather ingest: shred, broadcast lookup, miss audit (entry point C)") {
