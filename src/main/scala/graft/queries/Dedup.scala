@@ -294,10 +294,6 @@ object Dedup {
     verifyPairs(base, prefixCands(base, t, positional = true, merge = true), t)
   }
 
-  /** Build + persist the PPJoin base as a bucketed table — the
-    * write-once production form of d02's index ([[graft.sources
-    * .PpIndex]]); rebuild when the corpus changes.
-    */
   /** The PPJoin base's building blocks, shared by the in-query build,
     * the persisted-index build, and the INCREMENTAL append (r15):
     * per-doc distinct fingerprint explode, global document frequency,
@@ -322,6 +318,10 @@ object Dedup {
         count(lit(1)).over(byDoc).as("n"))
   }
 
+  /** Build + persist the PPJoin base as a bucketed table — the
+    * write-once production form of d02's index ([[graft.sources
+    * .PpIndex]]); rebuild when the corpus changes.
+    */
   // no threshold parameter (r16, ADVICE): the persisted base is
   // threshold-INDEPENDENT — t shapes only the candidate side at query
   // time (jaccardPairsIndexed takes it), so a t here would mislead
@@ -330,35 +330,14 @@ object Dedup {
     buildPpIndexOver(s, shingleDocs(s, dir), table)
 
   /** [[buildPpIndex]] over an explicit (doc_id, sh) corpus — persists
-    * the bucketed base AND the build-time df sibling that freezes the
-    * prefix order for incremental appends ([[graft.sources
-    * .PpIndex.writeDf]]).
-    *
-    * Publish order is NOT atomic across the two siblings: `_df`'s
-    * generation is published by `writeDf` before the base's by
-    * `write`. A crash (or an append racing a rebuild) between the two
-    * pairs the NEW frozen df with the OLD base, so appends in that
-    * window rank under a prefix order the live base was not built
-    * with. The single-manifest publish of ROADMAP.md item 3 (both
-    * siblings under one commit) closes the window; until then a build
-    * that crashed must be re-run before anything appends.
+    * the bucketed base AND the build-time df part that freezes the
+    * prefix order for incremental appends, published together
+    * ([[graft.sources.PpIndex.writeWithDf]]).
     */
   def buildPpIndexOver(s: SparkSession, docs: DataFrame, table: String): Unit = {
     val ex = cp(ppExplode(docs))
     val dfAll = ppDf(ex)
-    // _df first: the base's exact row count is Σ df over df ≤ MaxDf
-    // (exactly the rows the capped ppRank writes), so one aggregate
-    // over the just-persisted two-column sibling sizes the bucketed
-    // layout from the DATA (r21, r20 ADVICE — adaptiveBuckets clamps
-    // the session dial so fixture-scale builds don't splinter into
-    // `shuffle.partitions` near-empty buckets) with zero extra passes
-    // over the heavy exploded relation.
-    graft.sources.PpIndex.writeDf(dfAll, table)
-    val kept = graft.sources.PpIndex.readDf(s, table)
-      .filter(col("df") <= MaxDf)
-      .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0)
-    graft.sources.PpIndex.write(ppRank(ex, dfAll), table,
-      buckets = graft.sources.PpIndex.adaptiveBuckets(s, kept))
+    graft.sources.PpIndex.writeWithDf(ppRank(ex, dfAll), dfAll, table, MaxDf.toLong)
   }
 
   /** INCREMENTAL maintenance of a persisted PPJoin base (r15, verdict
@@ -417,8 +396,8 @@ object Dedup {
     * BUILD-FROZEN total order — the append path's core, shared by
     * [[appendToPpIndex]] and the streaming ingest
     * ([[graft.streaming.IndexIngest.pp]], which loads the frozen df
-    * sibling once per stream and ranks through the overload below).
-    * Deterministic given the docs and the frozen df sibling: the same
+    * part once per stream and ranks through the overload below).
+    * Deterministic given the docs and the frozen df part: the same
     * doc always produces the SAME (doc_id, s, rk, n) rows regardless
     * of batch boundaries or replays — what makes row-level replay
     * absorption exact.
@@ -427,7 +406,7 @@ object Dedup {
       newDocs: DataFrame): DataFrame =
     rankUnderFrozenOrder(graft.sources.PpIndex.readDf(s, table), newDocs)
 
-  /** [[rankUnderFrozenOrder]] against an already-loaded df sibling. */
+  /** [[rankUnderFrozenOrder]] against an already-loaded df part. */
   private[graft] def rankUnderFrozenOrder(frozen: DataFrame,
       newDocs: DataFrame): DataFrame = {
     val exNew = cp(ppExplode(newDocs))
@@ -439,6 +418,18 @@ object Dedup {
       .select(col("s"), coalesce(col("df"), lit(0L)).as("df"))
     ppRank(exNew, dfEff)
   }
+
+  /** The artifact-level staleness reading for a persisted PPJoin index
+    * (r20, verdict ask #3): [[graft.sources.PpIndex.driftProbe]] bound
+    * to the engine's df cap — appended row mass vs the build (the
+    * frozen `df` part recovers the build-time base size), the
+    * never-seen-at-build vocabulary sliver, the cap's corpus-shaped
+    * build-time coverage, and the row MASS in cap-crossing posting
+    * lists (the per-fingerprint crossing count is [[ppIndexDrift]]).
+    * The d02c/d02d maintenance story's rebuild trigger.
+    */
+  def ppArtifactProbe(s: SparkSession, table: String): DataFrame =
+    graft.sources.PpIndex.driftProbe(s, table, MaxDf.toLong)
 
   /** Staleness probe for a persisted PPJoin index's frozen order (r16,
     * verdict ask #6): one row `(n_fps, n_crossed, crossed_frac,
@@ -452,18 +443,6 @@ object Dedup {
     * and the divergence budget. Reads only the index base (count per
     * fp), never the corpus.
     */
-  /** The artifact-level staleness reading for a persisted PPJoin index
-    * (r20, verdict ask #3): [[graft.sources.PpIndex.driftProbe]] bound
-    * to the engine's df cap — appended row mass vs the build (the
-    * frozen `_df` sibling recovers the build-time base size), the
-    * never-seen-at-build vocabulary sliver, the cap's corpus-shaped
-    * build-time coverage, and the row MASS in cap-crossing posting
-    * lists (the per-fingerprint crossing count is [[ppIndexDrift]]).
-    * The d02c/d02d maintenance story's rebuild trigger.
-    */
-  def ppArtifactProbe(s: SparkSession, table: String): DataFrame =
-    graft.sources.PpIndex.driftProbe(s, table, MaxDf.toLong)
-
   def ppIndexDrift(s: SparkSession, table: String): DataFrame = {
     graft.sources.PpIndex.read(s, table)
       .groupBy("s").agg(count(lit(1)).as("df_now"))

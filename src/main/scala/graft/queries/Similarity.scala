@@ -368,7 +368,7 @@ object Similarity {
     * WRITERS must be serialized, which [[graft.streaming.IndexIngest]]
     * guarantees by running this inside `foreachBatch` (micro-batches
     * are serial — SCALE.md's writer-serialization regime 1). The read
-    * snapshot resolves the current generation, which `writeGen`'s
+    * snapshot resolves the current generation, which `writeParts`'
     * prune retains through this publish, so the source files outlive
     * the write.
     */
@@ -940,16 +940,8 @@ object Similarity {
     val (codes, cbR, centsUnit, cids) = ivfAdcBuild(s, dir, m, k,
       residual = true, nlist = nlist, coarse = coarse)
     graft.sources.PqIndex.write(codes, cbR, m, k, path,
-      centsUnit.flatten, cids.toArray)
-    // the RAW coarse book (cv, cn — not just the unit form the serving
-    // LUTs need) rides a sibling so INCREMENTAL ADDS can reproduce the
-    // build's assignment argmax bit-for-bit (same IEEE sequence as the
-    // build: dot(v, cv)/(nrm·cn), the IvfIndex.writeWithCodebook story)
-    graft.sources.AtomicSwap.writeGen(s, path + "_coarse") { gen =>
-      coarse.getOrElse(centroids(emb(s, dir), nlist))
-        .select("c_id", "cv", "cn").repartition(1)
-        .write.mode("overwrite").parquet(gen)
-    }
+      centsUnit.flatten, cids.toArray,
+      Some(coarse.getOrElse(centroids(emb(s, dir), nlist))))
   }
 
   /** INCREMENTAL index maintenance (r14): encode `newVecs` — rows of
@@ -984,8 +976,7 @@ object Similarity {
     val (cb, m, k, centsFlat, cids) = graft.sources.PqIndex.codebook(s, path)
     require(centsFlat.nonEmpty,
       s"appendToIvfAdcIndex: $path is a flat PQ index, not IVFADC")
-    val coarse = collectBook(s.read.parquet(
-      graft.sources.AtomicSwap.dataDir(s, path + "_coarse")))
+    val coarse = collectBook(graft.sources.PqIndex.coarse(s, path))
     newVecs => {
       val e = newVecs
         .select(col("vec_id"), col("label"), toDoubleVec(col("embedding")).as("v"))

@@ -50,7 +50,7 @@ object TextAnalysis {
   }
 
   /** INCREMENTAL maintenance (r15): index `newDocs` (doc_id, text)
-    * without re-tokenizing the corpus. `_df`/`_stats` stay FROZEN —
+    * without re-tokenizing the corpus. `df`/`stats` stay FROZEN —
     * appended docs are scored under build-time idf/avgdl (stale-index
     * serving, the contract [[graft.sources.BmIndex]] documents);
     * already-indexed docs' scores are provably unchanged.
@@ -82,9 +82,9 @@ object TextAnalysis {
   /** REBUILD the BM25 index from its own persisted state with REFRESHED
     * ranking statistics (r20, verdict ask #1 — the retrain step of the
     * search family's maintenance loop, [[Similarity.rebuildIvfIndex]]'s
-    * shape): re-derive `_df` from every stored posting row and
-    * `_stats` from the doclens relation, and publish all four siblings
-    * as the next generation. Reads ONLY the artifact — never the raw
+    * shape): re-derive `df` from every stored posting row and
+    * `stats` from the doclens relation, and publish all four parts
+    * as the next generation, in one manifest. Reads ONLY the artifact — never the raw
     * corpus (the index IS the corpus of record for a streaming
     * maintenance job); since [[appendToBm25Index]] derives postings
     * per-doc independently, the rebuilt artifact's CONTENT equals a
@@ -94,7 +94,7 @@ object TextAnalysis {
     * full-corpus stats). Crash-window duplicate posting rows (see
     * [[graft.sources.BmIndex.append]]) are collapsed by the per-
     * (term, doc) max — the consumers' convention, applied once at the
-    * rebuild so `_df` never counts a doc twice. Safe under live
+    * rebuild so `df` never counts a doc twice. Safe under live
     * READERS (generation layout, `retain` = the snapshot-expiry dial);
     * WRITERS must be serialized, which [[graft.streaming.IndexIngest
     * .bm25Maintained]] guarantees by running this inside
@@ -299,8 +299,8 @@ object TextAnalysis {
 
   /** The REGIME-ROUTED batch BM25 serving surface (r19, verdict ask
     * #1): [[bm25BatchRel]]'s relation-native contract, with the
-    * plain-vs-pruned choice made PER BATCH from the frozen `_df`
-    * sibling — the production entry a batch search server calls when
+    * plain-vs-pruned choice made PER BATCH from the frozen `df`
+    * part — the production entry a batch search server calls when
     * the workload mix is not known in advance. Output is identical
     * either way (the prune is lossless — Bm25PruneSpec/t19's gate);
     * the router can only change SPEED, which is exactly what makes it
@@ -345,7 +345,7 @@ object TextAnalysis {
     totDf.toDouble >= Bm25RouteSkew * math.max(seedDf, 1L).toDouble
 
   /** The router's batch statistic, one tiny aggregation job over the
-    * query relation joined to the frozen df sibling (query-relation-
+    * query relation joined to the frozen df part (query-relation-
     * sized — never corpus-sized): (Σ_q Σ_t df(t), Σ_q df(seed_q)),
     * seed_q = the query's min-df term AMONG df > 0 terms (r20, ADVICE:
     * an out-of-vocabulary term has df = 0 — its seed pass reads empty
@@ -502,8 +502,8 @@ object TextAnalysis {
     *
     *  1. SEED θ: each query's highest-ub term (ub = idf(df_frozen) ·
     *     2.2, the k1-saturated ceiling of t14's tscore as tf → ∞ —
-    *     derived from the frozen `_df`/`_stats` siblings, NOT
-    *     materialized: ub is a pure function of state those siblings
+    *     derived from the frozen `df`/`stats` parts, NOT
+    *     materialized: ub is a pure function of state those parts
     *     already determine, so persisting it would duplicate frozen
     *     state). Its postings — the RAREST list, so the shortest —
     *     score their single-term partial through the verbatim
@@ -522,7 +522,7 @@ object TextAnalysis {
     *     it cannot enter the top-k even on the doc_id tiebreak.
     *     Candidates = docs matching ≥1 essential term.
     *
-    * Losslessness guards: a term absent from the frozen `_df` (df = 0
+    * Losslessness guards: a term absent from the frozen `df` (df = 0
     * — appended-vocabulary postings still exist for it) gets the df=0
     * idf ceiling, making it effectively always essential; fewer than k
     * seed partials → θ = −∞ → nothing prunes (the plain plan plus
@@ -1101,7 +1101,7 @@ object TextAnalysis {
     // (T16Batch + a single-term query + a rare-seed/common-context
     // query) is persisted as a query table and served through
     // [[bm25Serve]], which picks plain vs max-score-pruned PER BATCH
-    // from the frozen df sibling's skew statistic. The gate hashes the
+    // from the frozen df part's skew statistic. The gate hashes the
     // generated oracle for the batch, so it is green WHICHEVER path
     // the router picks — the router is a speed dial, provably unable
     // to change answers (the prune's losslessness gate t19 + this).
@@ -1183,7 +1183,7 @@ object TextAnalysis {
         val cut = docs.agg(expr("percentile(doc_id, 0.5)"))
           .head().getDouble(0).toLong
         buildBm25IndexOver(s, docs.filter(col("doc_id") <= cut), p)
-        // pinned reader: file lists (all four siblings) resolve HERE —
+        // pinned reader: file lists (all four parts) resolve HERE —
         // raw score bits collected pre-stream are the expectation
         val pinned = bm25Indexed(s, p, Seq("dup", "vector", "spark"))
         def bits(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>

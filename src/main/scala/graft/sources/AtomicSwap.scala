@@ -10,10 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * below). It is the one way the engine replaces persisted state:
   * every parquet index family, the weather locations snapshot
   * ([[TableStore.replaceSnapshot]]) and the four state stores of
-  * [[graft.streaming.DocPipeline]] write through [[writeGen]] and
-  * [[commitAppend]], and [[PpIndex]] runs its catalog-table
-  * generations on the same [[currentGen]]/[[publish]] pointer
-  * mechanics.
+  * [[graft.streaming.DocPipeline]] write through [[writeParts]] (or
+  * its one-part form [[writeGen]]) and [[commitAppend]], and
+  * [[PpIndex]] runs its catalog-table generations on the same
+  * [[current]]/[[publish]] pointer mechanics.
   *
   * Lineage of the mechanism, because each step closed a real hazard:
   *
@@ -31,6 +31,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    manifest. Nothing a reader has resolved is ever moved or
   *    deleted until a full compaction cycle later. A pre-r17 artifact
   *    is not migrated: rebuild it.
+  *  - One manifest per artifact: sibling roots (`<path>_doclens`, …),
+  *    each published on its own, let a crash or a reader between two
+  *    publishes pair new data with old statistics; every part now
+  *    publishes under one manifest. Sibling-root artifacts: rebuild.
   *
   * FENCE (r18, verdict ask #7): [[I8Index]] and [[BandIndex]] are
   * WRITE-ONCE BY CONTRACT — they have no append path and write their
@@ -66,34 +70,49 @@ object AtomicSwap {
   // restriction. The generation layout removes it:
   //
   //   root/
-  //     g0/ g1/ …       full data directories (partitionBy layout and
-  //                     `_SUCCESS` inside each), written whole by
-  //                     build/compact; appends add files to the CURRENT
-  //                     generation and never remove any
-  //     mf-1 mf-2 …     tiny numbered manifests; the newest one's
-  //                     content is the name of the current generation.
-  //                     Written tmp-then-rename, so a manifest either
-  //                     exists complete or not at all — the manifest IS
-  //                     the commit: a generation with no manifest
-  //                     naming it is invisible
+  //     g0/ g1/ …       the MAIN part's full data directories
+  //                     (partitionBy layout and `_SUCCESS` inside
+  //                     each), written whole by build/compact; appends
+  //                     add files to the CURRENT generation and never
+  //                     remove any
+  //     _p/g0/ …        named part `p`'s generations (a codebook,
+  //                     statistics, …): hidden from a read of the root,
+  //                     outside every `gN`
+  //     mf-1 mf-2 …     tiny numbered manifests; the newest one is the
+  //                     artifact's table of contents: the main
+  //                     generation `gN` plus `p=gK` for each named
+  //                     part (a single-part artifact's manifest is the
+  //                     bare `gN`). Written tmp-then-rename, so a
+  //                     manifest either exists complete or not at all
+  //                     — the manifest IS the commit: a generation
+  //                     with no manifest naming it is invisible
   //
-  // Readers resolve the current data directory through the newest
+  // Readers resolve a part's current data directory through the newest
   // manifest ([[dataDir]]) instead of trusting the artifact path
-  // itself. Compact ([[writeGen]]) writes generation N+1 beside the
-  // live N, publishes a manifest naming it, and prunes only
-  // generations OLDER than N — so a reader that resolved N before the
-  // swap keeps a complete, untouched directory until the NEXT compact.
-  // The concurrency contract is therefore "a plan survives one
-  // compaction cycle" (the Iceberg/Delta snapshot-expiry shape), not
-  // "no reader during compact".
+  // itself. A build, rebuild or compact ([[writeParts]]) writes the
+  // next generation of every part it rewrites beside the live ones,
+  // then publishes ONE manifest naming them (and the live generations
+  // of the parts it did not rewrite), so a reader sees every part of
+  // one commit or every part of the previous one, never a mix. Only
+  // generations older than the superseded ones are pruned, so a reader
+  // that resolved the old manifest keeps complete, untouched
+  // directories until the NEXT compact. The concurrency contract is
+  // therefore "a plan survives one compaction cycle" (the
+  // Iceberg/Delta snapshot-expiry shape), not "no reader during
+  // compact".
   //
   // Crash windows: data written but manifest not published → readers
-  // stay on the old generation, the stray directory is pruned by the
-  // next writeGen; crash mid-manifest-write → only a dot-prefixed tmp
-  // file, never resolved. There is no window in which a reader can
-  // observe a half-written generation.
+  // stay on the old generations, the stray directories are pruned by
+  // the next write of their part; crash mid-manifest-write → only a
+  // dot-prefixed tmp file, never resolved. There is no window in which
+  // a reader can observe a half-written generation or a half-published
+  // artifact. A root whose first build crashed before its publish has
+  // no manifest and reads as the bare root.
   // -------------------------------------------------------------------
   private val MfPrefix = "mf-"
+
+  /** The name of an artifact's main part in its manifest. */
+  val Main = ""
 
   private def numsOf(fs: FileSystem, root: Path, prefix: String,
       dirs: Boolean): Seq[Int] =
@@ -102,14 +121,19 @@ object AtomicSwap {
       .filter(s => s.isDirectory == dirs && s.getPath.getName.startsWith(prefix))
       .flatMap(s => s.getPath.getName.stripPrefix(prefix).toIntOption)
 
-  /** The name ("gN") of the current committed generation, if the
-    * artifact uses the manifest layout: the content of the
-    * newest-numbered manifest file. `private[sources]` so
-    * [[PpIndex]] reuses the same pointer mechanics for its bucketed
-    * TABLE generations (the manifest value there is a table name).
+  /** The directory holding `part`'s generations. */
+  private def partRoot(root: Path, part: String): Path =
+    if (part == Main) root else new Path(root, "_" + part)
+
+  /** The current manifest of the artifact at `root`, part → generation
+    * name: the content of the newest-numbered manifest file. `private
+    * [sources]` so [[PpIndex]] reuses the same pointer mechanics for
+    * its bucketed TABLE generations (the values there are table
+    * names).
     */
-  private[sources] def currentGen(fs: FileSystem, root: Path): Option[String] = {
-    def once(): Option[String] = {
+  private[sources] def current(fs: FileSystem, root: Path)
+      : Option[Map[String, String]] = {
+    def once(): Option[Map[String, String]] = {
       val ns = numsOf(fs, root, MfPrefix, dirs = false)
       if (ns.isEmpty) None
       else {
@@ -117,7 +141,11 @@ object AtomicSwap {
         try {
           val buf = new java.io.ByteArrayOutputStream()
           org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          Some(new String(buf.toByteArray, StandardCharsets.UTF_8).trim)
+          Some(new String(buf.toByteArray, StandardCharsets.UTF_8)
+            .split("\\s+").filter(_.nonEmpty).map { t =>
+              val i = t.indexOf('=')
+              if (i < 0) Main -> t else t.take(i) -> t.drop(i + 1)
+            }.toMap)
         } finally in.close()
       }
     }
@@ -142,50 +170,57 @@ object AtomicSwap {
     None // unreachable
   }
 
-  /** Publish `gen` as the current generation: write the next-numbered
-    * manifest via tmp-write + rename (the commit point), then thin old
-    * manifests to the newest two (audit trail without unbounded
-    * accretion under long append streams).
+  /** Publish `manifest` as the artifact's current one: write the
+    * next-numbered manifest via tmp-write + rename (the commit point),
+    * then thin old manifests to the newest two (audit trail without
+    * unbounded accretion under long append streams).
     */
-  private[sources] def publish(fs: FileSystem, root: Path, gen: String): Unit = {
+  private[sources] def publish(fs: FileSystem, root: Path,
+      manifest: Map[String, String]): Unit = {
+    val text = (manifest.get(Main).toSeq ++
+      (manifest - Main).toSeq.sorted.map { case (p, g) => s"$p=$g" }).mkString("\n")
     val n = (numsOf(fs, root, MfPrefix, dirs = false) :+ 0).max + 1
     val tmp = new Path(root, s".$MfPrefix$n.tmp")
     val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
     renameOrDie(fs, tmp, new Path(root, MfPrefix + n))
     numsOf(fs, root, MfPrefix, dirs = false).sorted.dropRight(2)
       .foreach(k => fs.delete(new Path(root, MfPrefix + k), false))
   }
 
-  /** The current generation of `root`, after finishing an interrupted
-    * FIRST build: with no manifest, the newest `_SUCCESS`-committed
-    * generation is published (the crash fell between the data commit
-    * and the first publish). A half-written generation has no
-    * `_SUCCESS` and stays invisible, and a root with a manifest is
-    * never touched. Idempotent.
-    */
-  private def heal(fs: FileSystem, rp: Path): Option[String] =
-    currentGen(fs, rp).orElse(
-      numsOf(fs, rp, "g", dirs = true).sorted.reverse
-        .find(k => fs.exists(new Path(rp, s"g$k/_SUCCESS")))
-        .map { k => publish(fs, rp, s"g$k"); s"g$k" })
-
-  /** Resolve the artifact at `root` to its current committed data
-    * directory: heal, then follow the newest manifest. A root with no
-    * manifest resolves to itself — an unmanifested directory (the
+  /** The current data directory of `part` of the artifact at `root`,
+    * followed through the newest manifest. A root with no manifest
+    * resolves to the part's bare directory — an unmanifested root (the
     * weather facts table, which only ever appends) reads as it is, and
     * a root with no data at all fails the downstream read as loudly as
-    * it always did.
+    * it always did. A manifest that names no generation of `part` fails
+    * here.
     */
-  def dataDir(spark: SparkSession, root: String): String = {
+  def dataDir(spark: SparkSession, root: String, part: String = Main): String = {
     val rp = new Path(root)
-    heal(fsOf(spark, root), rp).map(g => new Path(rp, g).toString).getOrElse(root)
+    current(fsOf(spark, root), rp) match {
+      case None => partRoot(rp, part).toString
+      case Some(m) => new Path(partRoot(rp, part), m.getOrElse(part,
+        throw new IllegalStateException(s"AtomicSwap: the manifest of $root " +
+          s"names no part '$part' (it has ${m.keys.mkString(", ")})"))).toString
+    }
   }
 
-  /** Write a NEW GENERATION of the artifact at `root` and make it
-    * current. `write` receives `root/g<next>` and must commit a
-    * complete data directory there; the manifest publish afterwards is
-    * the commit point. The `retain` newest superseded generations
+  /** [[writeParts]] for the main part alone. */
+  def writeGen(spark: SparkSession, root: String, retain: Int = 1)(
+      write: String => Unit): Unit =
+    writeParts(spark, root, retain)(Main -> write)
+
+  /** Write a NEW GENERATION of each of `parts` of the artifact at `root`
+    * and make them current together. Each writer receives its part's
+    * next generation directory and must commit a complete data
+    * directory there; the ONE manifest publish afterwards is the commit
+    * point. It names the new generations of `parts` and the current
+    * ones of every part not rewritten, so a compact copies nothing it
+    * does not rewrite. A writer that throws leaves the published
+    * manifest, and so every reader, on the old generations.
+    *
+    * Per rewritten part, the `retain` newest superseded generations
     * survive — a reader that resolved one of them before the publish
     * keeps complete, untouched files for that many further compaction
     * cycles (the snapshot-expiry dial, r18 verdict stretch #8: the
@@ -198,24 +233,32 @@ object AtomicSwap {
     * is unobservable). Serves build (first generation), compact and
     * rebuild (next generation) alike.
     */
-  def writeGen(spark: SparkSession, root: String, retain: Int = 1)(
-      write: String => Unit): Unit = {
-    require(retain >= 1, s"writeGen($root): retain must be >= 1, got $retain")
+  def writeParts(spark: SparkSession, root: String, retain: Int = 1)(
+      parts: (String, String => Unit)*): Unit = {
+    require(retain >= 1, s"writeParts($root): retain must be >= 1, got $retain")
     val fs = fsOf(spark, root)
     val rp = new Path(root)
-    val cur = heal(fs, rp)
-    val curNum = cur.flatMap(_.stripPrefix("g").toIntOption)
-    val next = (numsOf(fs, rp, "g", dirs = true) ++ curNum :+ -1).max + 1
-    write(new Path(rp, s"g$next").toString)
-    publish(fs, rp, s"g$next")
-    // keep the new generation plus the `retain` newest COMMITTED ones
-    // (numbers <= current — anything between current and next is a
-    // stray from a crashed write, never published, pruned regardless)
-    val committed = numsOf(fs, rp, "g", dirs = true)
-      .filter(k => curNum.exists(k <= _)).sorted.reverse.take(retain)
-    val keep = Set(next) ++ committed
-    numsOf(fs, rp, "g", dirs = true).filterNot(keep)
-      .foreach(k => fs.delete(new Path(rp, s"g$k"), true))
+    val cur = current(fs, rp).getOrElse(Map.empty)
+    def curNum(part: String) = cur.get(part).flatMap(_.stripPrefix("g").toIntOption)
+    val next = parts.map { case (part, write) =>
+      val pr = partRoot(rp, part)
+      val n = (numsOf(fs, pr, "g", dirs = true) ++ curNum(part) :+ -1).max + 1
+      write(new Path(pr, s"g$n").toString)
+      part -> n
+    }
+    publish(fs, rp, cur ++ next.map { case (part, n) => part -> s"g$n" })
+    // per part, keep the new generation plus the `retain` newest
+    // COMMITTED ones (numbers <= current — anything between current and
+    // next is a stray from a crashed write, never published, pruned
+    // regardless)
+    for ((part, n) <- next) {
+      val pr = partRoot(rp, part)
+      val committed = numsOf(fs, pr, "g", dirs = true)
+        .filter(k => curNum(part).exists(k <= _)).sorted.reverse.take(retain)
+      val keep = Set(n) ++ committed
+      numsOf(fs, pr, "g", dirs = true).filterNot(keep)
+        .foreach(k => fs.delete(new Path(pr, s"g$k"), true))
+    }
   }
 
   /** The batch appends' disjointness guard, shared by every index
@@ -233,46 +276,49 @@ object AtomicSwap {
       s"indexed at $at — appended ids must be disjoint; rebuild instead")
   }
 
-  /** Record an append into the current generation — a manifest bump
-    * naming the SAME generation, written as the append's last step.
+  /** Record an append into the current generations — ONE manifest bump
+    * naming the SAME generations, written as the append's last step.
     * Appends only ever ADD files (a reader's resolved snapshot stays
     * correct), so the bump is the durable record that the append
     * committed, not a visibility gate. No-op on a root with no
     * manifest (nothing was ever built there).
     *
-    * `wroteInto` is the data directory the append resolved via
-    * [[dataDir]] BEFORE writing. WRITERS (append vs compact/rebuild)
-    * must be serialized — only readers are safe under a concurrent
-    * compact — and this check is what makes a violation fail loudly
-    * instead of silently (r18, ADVICE): an append that raced a compact
-    * wrote into a generation the compact's snapshot never saw, which
-    * the NEXT compact prunes — the appended rows would vanish while
-    * the manifest bump made the append look committed. On mismatch the
-    * appended files are still on disk in the superseded generation, so
-    * the caller re-runs the append against the new current generation.
+    * `wroteInto` are the data directories of the parts the append
+    * wrote, resolved via [[dataDir]] BEFORE writing; each must still be
+    * current. WRITERS (append vs compact/rebuild) must be serialized —
+    * only readers are safe under a concurrent compact — and this check
+    * is what makes a violation fail loudly instead of silently (r18,
+    * ADVICE): an append that raced a compact wrote into a generation
+    * the compact's snapshot never saw, which the NEXT compact prunes —
+    * the appended rows would vanish while the manifest bump made the
+    * append look committed. On mismatch the appended files are still
+    * on disk in the superseded generation, so the caller re-runs the
+    * append against the new current generation.
     */
   def commitAppend(spark: SparkSession, root: String,
-      wroteInto: String): Unit = {
+      wroteInto: String*): Unit = {
     val fs = fsOf(spark, root)
     val rp = new Path(root)
-    currentGen(fs, rp).foreach { g =>
-      val cur = new Path(rp, g).toString
+    current(fs, rp).foreach { m =>
+      val cur = m.map { case (p, g) => new Path(partRoot(rp, p), g).toString }
       // no `wroteInto == root` escape (r19, ADVICE): dataDir resolves
       // to the bare root only when there is no manifest, and the one
       // way a manifest can exist NOW after the append resolved root
       // THEN is a concurrent first build — exactly the writer race this
       // check exists to fail loudly on (files written at the root are
       // invisible to manifest-resolving readers)
-      require(cur == wroteInto,
+      val stale = wroteInto.filterNot(cur.toSet)
+      require(stale.isEmpty,
         s"AtomicSwap.commitAppend($root): the append wrote into " +
-          s"$wroteInto but the current generation is $cur — a " +
+          s"${stale.mkString(", ")} but the current generations are " +
+          s"${cur.toSeq.sorted.mkString(", ")} — a " +
           "compact/rebuild ran concurrently with this append (or a " +
           "first build raced an append into an empty root; writers " +
           "must be serialized — only readers are compact-safe). The " +
           "appended rows landed outside the current generation and " +
           "would be pruned or stay invisible: re-run the append " +
           "against the current generation.")
-      publish(fs, rp, g)
+      publish(fs, rp, m)
     }
   }
 }

@@ -9,9 +9,10 @@ import graft.functions.Text
   * on-disk artifact instead of two in-query corpus passes: the
   * [[IvfIndex]]/[[PqIndex]] treatment applied to the search family.
   *
-  * Layout under `path`:
+  * One [[AtomicSwap]] artifact at `path`, four parts published under
+  * one manifest:
   *
-  *  - `path` — the postings (term, doc_id, tf), written
+  *  - main — the postings (term, doc_id, tf), written
   *    `partitionBy(pbkt)` where pbkt = charFp(term) mod [[Buckets]]:
   *    a k-term query computes its terms' buckets DRIVER-SIDE (the
   *    portable hash has a Scala twin) and pushes them as an explicit
@@ -21,9 +22,9 @@ import graft.functions.Text
   *    pruning rides the planner's DisableUnnecessaryBucketedScan
   *    mood (observed disabled for filter-only plans), while partition
   *    pruning is structural — the same reasoning as [[IvfIndex]].
-  *  - `path + "_doclens"` — (doc_id, dl): the narrow per-doc length
-  *    relation the scorer joins.
-  *  - `path + "_df"` / `path + "_stats"` — the FROZEN ranking
+  *  - `doclens` — (doc_id, dl): the narrow per-doc length relation
+  *    the scorer joins.
+  *  - `df` / `stats` — the FROZEN ranking
   *    statistics (per-term document frequency; corpus size and total
   *    length). Frozen is load-bearing for [[append]]: BM25's
   *    idf/avgdl are global, so scoring appended docs under build-time
@@ -50,41 +51,34 @@ object BmIndex {
     if (m < 0) m + Buckets else m
   }
 
+  /** Build or rebuild the index: all four parts as new generations,
+    * published once ([[AtomicSwap.writeParts]]), so a rebuild-over-live
+    * never pairs new postings with old statistics. `retain` (r20) is
+    * the snapshot-expiry dial a REBUILD-over-live plumbs through: a
+    * reader pinned before rebuild N survives until its generation falls
+    * off the retain horizon, all four parts aging together.
+    */
   def write(postings: DataFrame, doclens: DataFrame, path: String,
-      retain: Int = 1): Unit = {
-    val spark = postings.sparkSession
-    // repartition on the partition column first — partitionBy alone
-    // fans every task into every directory (the PqIndex 5120-file trap).
-    // Generation-manifest layout (r17): the postings and doclens land
-    // as generation g0 under their roots and the manifest publish is
-    // the commit — see [[AtomicSwap.writeGen]]. `retain` (r20) is the
-    // snapshot-expiry dial a REBUILD-over-live plumbs through: a
-    // reader pinned before rebuild N survives until its generation
-    // falls off the retain horizon, all four siblings aging together.
-    AtomicSwap.writeGen(spark, path, retain) { gen =>
-      postings.select(col("term"), col("doc_id"), col("tf"),
-          pmod(Text.charFp(col("term")), lit(Buckets.toLong)).as("pbkt"))
-        .repartition(col("pbkt"))
-        .write.mode("overwrite").partitionBy("pbkt").parquet(gen)
-    }
-    AtomicSwap.writeGen(spark, path + "_doclens", retain) { gen =>
-      doclens.select("doc_id", "dl")
-        .write.mode("overwrite").parquet(gen)
-    }
-    // the frozen ranking stats go through the generation layer too
-    // (r17): a REBUILD-over-live would otherwise overwrite them in
-    // place under an open reader — with generations, rebuild is as
-    // reader-safe as compact
-    AtomicSwap.writeGen(spark, path + "_df", retain) { gen =>
-      postings.groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(gen)
-    }
-    AtomicSwap.writeGen(spark, path + "_stats", retain) { gen =>
-      doclens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(gen)
-    }
-  }
+      retain: Int = 1): Unit =
+    AtomicSwap.writeParts(postings.sparkSession, path, retain)(
+      AtomicSwap.Main -> (gen => writePostings(postings, gen, "overwrite")),
+      "doclens" -> (gen => doclens.select("doc_id", "dl")
+        .write.mode("overwrite").parquet(gen)),
+      "df" -> (gen => postings.groupBy("term").agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(gen)),
+      "stats" -> (gen => doclens
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .repartition(1).write.mode("overwrite").parquet(gen)))
+
+  /** Write (term, doc_id, tf) rows bucket-partitioned into `dir`,
+    * repartitioned on the partition column first — partitionBy alone
+    * fans every task into every directory (the PqIndex 5120-file trap).
+    */
+  private def writePostings(postings: DataFrame, dir: String, mode: String): Unit =
+    postings.select(col("term"), col("doc_id"), col("tf"),
+        pmod(Text.charFp(col("term")), lit(Buckets.toLong)).as("pbkt"))
+      .repartition(col("pbkt"))
+      .write.mode(mode).partitionBy("pbkt").parquet(dir)
 
   /** The postings restricted to `qterms` — the terms' buckets pushed
     * as a static `isin` (PartitionFilters: read only those
@@ -117,7 +111,7 @@ object BmIndex {
   }
 
   /** The FULL posting relation (term, doc_id, tf) — the rebuild path's
-    * source (r20): a statistics refresh re-derives `_df` from every
+    * source (r20): a statistics refresh re-derives `df` from every
     * posting row, so unlike the serving entries it reads all bucket
     * directories. Crash-window duplicate rows (see [[append]]) are NOT
     * collapsed here — the caller dedups per (term, doc_id), the same
@@ -128,17 +122,17 @@ object BmIndex {
       .select("term", "doc_id", "tf")
 
   def doclens(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_doclens"))
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "doclens"))
 
   def dfRel(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_df"))
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "df"))
 
   def stats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_stats"))
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "stats"))
 
   /** Append new docs' postings + lengths into the partitioned layout;
-    * `_df`/`_stats` stay FROZEN (see the class note). One narrow pass
-    * over the new rows, existing files untouched.
+    * `df`/`stats` stay FROZEN (see the class note). One narrow pass
+    * over the new rows, existing files untouched, one manifest bump.
     *
     * The two writes are separate jobs, NOT atomic together, and replay
     * absorption (the [[graft.streaming.IndexIngest]] anti-join and
@@ -156,22 +150,17 @@ object BmIndex {
   def append(postingsNew: DataFrame, doclensNew: DataFrame,
       path: String): Unit = {
     val spark = postingsNew.sparkSession
-    // resolve each root's generation ONCE and commit against it —
+    // resolve each part's generation ONCE and commit against them —
     // commitAppend fails loudly if a compact raced the append (r18,
     // ADVICE: writers must be serialized; only readers are compact-safe)
     val postDir = AtomicSwap.dataDir(spark, path)
-    val dlDir = AtomicSwap.dataDir(spark, path + "_doclens")
-    postingsNew.select(col("term"), col("doc_id"), col("tf"),
-        pmod(Text.charFp(col("term")), lit(Buckets.toLong)).as("pbkt"))
-      .repartition(col("pbkt"))
-      .write.mode("append").partitionBy("pbkt")
-      .parquet(postDir)
+    val dlDir = AtomicSwap.dataDir(spark, path, "doclens")
+    writePostings(postingsNew, postDir, "append")
     doclensNew.select("doc_id", "dl")
       .write.mode("append").parquet(dlDir)
     // manifest bump last (r17): the durable record that BOTH halves of
     // the append committed
-    AtomicSwap.commitAppend(spark, path, postDir)
-    AtomicSwap.commitAppend(spark, path + "_doclens", dlDir)
+    AtomicSwap.commitAppend(spark, path, postDir, dlDir)
   }
 
   /** Staleness probe for the frozen ranking statistics (r16, verdict
@@ -183,7 +172,7 @@ object BmIndex {
     * ways: every idf is computed against a smaller N than reality, and
     * dl/avgdl normalizes against the build-time average length. The
     * probe reads ONLY the narrow doclens relation + the one-row stats
-    * sibling — never the postings, never the corpus text.
+    * part — never the postings, never the corpus text.
     */
   def driftProbe(spark: SparkSession, path: String): DataFrame = {
     val cur = doclens(spark, path)
@@ -206,11 +195,12 @@ object BmIndex {
     * .IndexIngest]]): every micro-batch appends up to [[Buckets]] posting
     * files plus one doclens file, so a long-running stream accretes
     * tiny files and the per-query posting fetch opens batches × files.
-    * Rows and the frozen `_df`/`_stats` siblings are untouched
-    * (Bm25IndexSpec pins row identity and the file-count collapse).
-    * Generation-based ([[AtomicSwap.writeGen]], r17): the rewrite
-    * reads the current generation straight from the durable source
-    * into the NEXT generation and publishes a manifest naming it —
+    * Rows are untouched, and the frozen `df`/`stats` parts are not
+    * rewritten: the one manifest publish carries their generations
+    * over (Bm25IndexSpec pins row identity and the file-count
+    * collapse). Generation-based ([[AtomicSwap.writeParts]], r17): the
+    * rewrite reads the current generations straight from the durable
+    * source into the NEXT ones and publishes one manifest naming them —
     * never an overwrite-in-place, and safe to run concurrently with
     * READERS (a reader that resolved the old generation keeps complete
     * files until the compact after this one). WRITERS are not: append
@@ -221,15 +211,12 @@ object BmIndex {
     */
   def compact(spark: SparkSession, path: String, doclensFiles: Int = 8): Unit = {
     val src = spark.read.parquet(AtomicSwap.dataDir(spark, path))
-    AtomicSwap.writeGen(spark, path) { gen =>
-      src.select("term", "doc_id", "tf", "pbkt")
+    val srcDl = doclens(spark, path)
+    AtomicSwap.writeParts(spark, path)(
+      AtomicSwap.Main -> (gen => src.select("term", "doc_id", "tf", "pbkt")
         .repartition(col("pbkt"))
-        .write.mode("overwrite").partitionBy("pbkt").parquet(gen)
-    }
-    val srcDl = spark.read.parquet(AtomicSwap.dataDir(spark, path + "_doclens"))
-    AtomicSwap.writeGen(spark, path + "_doclens") { gen =>
-      srcDl.repartition(doclensFiles)
-        .write.mode("overwrite").parquet(gen)
-    }
+        .write.mode("overwrite").partitionBy("pbkt").parquet(gen)),
+      "doclens" -> (gen => srcDl.repartition(doclensFiles)
+        .write.mode("overwrite").parquet(gen)))
   }
 }

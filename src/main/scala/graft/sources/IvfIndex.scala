@@ -26,72 +26,61 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  /** Persist an assignment relation (must carry a `c_id` column).
-    * Generation-manifest layout (r17, [[AtomicSwap.writeGen]]): the
-    * data lands as a generation under `path` and the manifest publish
-    * is the commit, so readers resolve through [[AtomicSwap.dataDir]]
-    * and survive concurrent compaction.
+  /** Persist an assignment relation (must carry a `c_id` column) as
+    * the artifact's main part alone ([[AtomicSwap.writeGen]]) — also
+    * the IVF and PQ (IVFADC) compact's rewrite.
     */
   def write(assign: DataFrame, path: String, retain: Int = 1): Unit =
-    AtomicSwap.writeGen(assign.sparkSession, path, retain) { gen =>
-      // repartition on the partition column first (r21 — the one
-      // partitionBy write the r20 fan-out sweep missed; BmIndex/
-      // PqIndex/compact/appendToIvfIndex* all already do this): bare
-      // partitionBy opens a writer in every task for every c_id it
-      // touches — input-partitions × nlist tiny files that EVERY later
-      // probe, drift scan, and ingest anti-join re-lists and re-opens.
-      // One shuffle of the assignment at build time (the Iceberg
-      // write.distribution-mode=hash story, guide §6) leaves one
-      // well-formed file per list directory.
-      writeLists(assign, gen)
-    }
+    AtomicSwap.writeGen(assign.sparkSession, path, retain)(writeLists(assign, _))
 
   /** Write `rows` (carrying `c_id`) as a list-partitioned generation
-    * directory: hash-distributed on `c_id` first, so each `c_id=`
-    * directory gets one file instead of one per input partition.
-    * Shared by the IVF and PQ (IVFADC) build and compact paths.
+    * directory: hash-distributed on `c_id` first (r21), so each `c_id=`
+    * directory gets one file instead of one per input partition — bare
+    * partitionBy leaves input-partitions × nlist tiny files that every
+    * later probe, drift scan and ingest anti-join re-lists and
+    * re-opens. Shared by the IVF and PQ (IVFADC) build and compact
+    * paths.
     */
   private[sources] def writeLists(rows: DataFrame, gen: String): Unit =
     rows.repartition(col("c_id"))
       .write.mode("overwrite").partitionBy("c_id").parquet(gen)
 
-  /** One-row list statistics of a list-partitioned relation:
-    * `(n_now, n_lists, max_list, mean_list)` — the routing half of the
-    * IVF and PQ drift probes.
+  /** The drift reading of a list-partitioned relation `rows` against
+    * its one-row frozen count (column `frozenCount` of `frozen`):
+    * `(n_frozen, n_now, appended_frac, n_lists, max_list, mean_list,
+    * list_skew)` — shared by the IVF and PQ (IVFADC) drift probes.
     */
-  private[sources] def listStats(rows: DataFrame): DataFrame =
-    rows.groupBy("c_id").agg(count(lit(1)).as("n"))
-      .agg(sum(col("n")).as("n_now"), count(lit(1)).as("n_lists"),
-        max(col("n")).as("max_list"),
-        (sum(col("n")).cast("double") / count(lit(1))).as("mean_list"))
+  private[sources] def listDrift(frozen: DataFrame, frozenCount: String,
+      rows: DataFrame): DataFrame =
+    frozen.crossJoin(rows.groupBy("c_id").agg(count(lit(1)).as("n"))
+        .agg(sum(col("n")).as("n_now"), count(lit(1)).as("n_lists"),
+          max(col("n")).as("max_list"),
+          (sum(col("n")).cast("double") / count(lit(1))).as("mean_list")))
+      .select(col(frozenCount).as("n_frozen"), col("n_now"),
+        ((col("n_now") - col(frozenCount)).cast("double") / col("n_now"))
+          .as("appended_frac"),
+        col("n_lists"), col("max_list"), col("mean_list"),
+        (col("max_list").cast("double") / col("mean_list")).as("list_skew"))
 
   /** Persist an assignment relation TOGETHER with the codebook that
-    * produced it (r12): the codebook lands as an nlist-row parquet at
-    * the SIBLING path `<path>_codebook` — one logical artifact carrying
-    * both the partitioned vectors and the centroids needed to route new
-    * queries/vectors into them. A sibling, not a subdirectory: an
-    * underscore-prefixed dir inside `path` is invisible even to a
-    * direct read (Hadoop hidden-path filter), and a non-`c_id=` child
-    * would break the scan's partition discovery.
+    * produced it (r12) as one artifact: the partitioned vectors, the
+    * nlist-row `codebook` part needed to route new queries/vectors into
+    * them, and the one-row FROZEN corpus count `stats` (r17 — the
+    * [[driftProbe]] baseline; appends never rewrite it, the BmIndex
+    * convention). One manifest publish commits all three, so a
+    * rebuild-over-live never pairs new lists with an old codebook, and
+    * `retain` ages the parts together (r20, ADVICE): a reader pinned
+    * before rebuild N keeps its codebook and stats as long as its data
+    * files.
     */
   def writeWithCodebook(assign: DataFrame, cents: DataFrame, path: String,
-      retain: Int = 1): Unit = {
-    write(assign, path, retain)
-    // generation layer for the codebook too (r17): rebuild-over-live
-    // must not overwrite it under an open reader. retain plumbs through
-    // to every sibling (r20, ADVICE): a reader pinned before rebuild N
-    // must keep its codebook and stats as long as its data files.
-    AtomicSwap.writeGen(assign.sparkSession, path + "_codebook", retain) { gen =>
-      cents.select("c_id", "cv", "cn").repartition(1)
-        .write.mode("overwrite").parquet(gen)
-    }
-    // one-row FROZEN corpus count (r17) — the [[driftProbe]] baseline;
-    // appends never rewrite it (the BmIndex `_stats` convention)
-    AtomicSwap.writeGen(assign.sparkSession, path + "_stats", retain) { gen =>
-      assign.agg(count(lit(1)).as("n_vecs")).repartition(1)
-        .write.mode("overwrite").parquet(gen)
-    }
-  }
+      retain: Int = 1): Unit =
+    AtomicSwap.writeParts(assign.sparkSession, path, retain)(
+      AtomicSwap.Main -> (gen => writeLists(assign, gen)),
+      "codebook" -> (gen => cents.select("c_id", "cv", "cn").repartition(1)
+        .write.mode("overwrite").parquet(gen)),
+      "stats" -> (gen => assign.agg(count(lit(1)).as("n_vecs")).repartition(1)
+        .write.mode("overwrite").parquet(gen)))
 
   /** Staleness probe for a maintained IVF index (r17 — the
     * [[BmIndex.driftProbe]] companion for the vector family): one row
@@ -107,23 +96,16 @@ object IvfIndex {
     * partition column of the assignment relation plus the one-row
     * frozen count — never the vectors.
     */
-  def driftProbe(spark: SparkSession, path: String): DataFrame = {
-    val lists = listStats(read(spark, path))
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_stats"))
-      .crossJoin(lists)
-      .select(col("n_vecs").as("n_frozen"), col("n_now"),
-        ((col("n_now") - col("n_vecs")).cast("double") / col("n_now"))
-          .as("appended_frac"),
-        col("n_lists"), col("max_list"), col("mean_list"),
-        (col("max_list").cast("double") / col("mean_list")).as("list_skew"))
-  }
+  def driftProbe(spark: SparkSession, path: String): DataFrame =
+    listDrift(spark.read.parquet(AtomicSwap.dataDir(spark, path, "stats")),
+      "n_vecs", read(spark, path))
 
   /** The persisted codebook `(c_id, cv, cn)` — parquet doubles
     * round-trip bit-exact, so assignment against a loaded codebook
     * reproduces the build's assignment (IvfPersistSpec).
     */
   def codebook(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_codebook"))
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "codebook"))
 
   /** The full persisted assignment relation. Partition-directory type
     * inference parses `c_id=N` as INT; cast back to the relation's
@@ -137,18 +119,14 @@ object IvfIndex {
   def probe(spark: SparkSession, path: String, centroidIds: Seq[Long]): DataFrame =
     read(spark, path).filter(col("c_id").isin(centroidIds: _*))
 
-  /** Persist the TWO-LEVEL layout (r13): the fine codebook tagged with
-    * its shard id, written `partitionBy(s_id)` at `<path>_fine` — a
-    * probe of `w` shards reads only those shards' directories, the
-    * same pruning story the single-level index gets from c_id — plus
-    * the nSup-row super layer at `<path>_supers`. Sibling paths for
-    * the same reason as [[writeWithCodebook]]: underscore-prefixed
-    * children are invisible to Hadoop listings and a non-partition
-    * child would break partition discovery.
+  /** Persist the TWO-LEVEL layout (r13) as one artifact of two parts:
+    * `fine`, the fine codebook tagged with its shard id and written
+    * `partitionBy(s_id)` — a probe of `w` shards reads only those
+    * shards' directories, the same pruning story the single-level index
+    * gets from c_id — and `supers`, the nSup-row super layer.
     */
-  def writeTwoLevel(fine: DataFrame, supers: DataFrame, path: String): Unit = {
-    val spark = fine.sparkSession
-    AtomicSwap.writeGen(spark, path + "_fine") { gen =>
+  def writeTwoLevel(fine: DataFrame, supers: DataFrame, path: String): Unit =
+    AtomicSwap.writeParts(fine.sparkSession, path)(
       // ONE file per shard directory (r20, optimization guide §6): the
       // fine codebook is nlist rows — without the repartition every
       // input partition opened a dynamic-partition writer per shard it
@@ -157,47 +135,32 @@ object IvfIndex {
       // wait for a 16-row relation). Probes read whole shards, so one
       // sorted file per `s_id=` directory is the layout they want at
       // any scale.
-      fine.select("c_id", "cv", "cn", "s_id").repartition(col("s_id"))
-        .write.mode("overwrite")
-        .partitionBy("s_id").parquet(gen)
-    }
-    AtomicSwap.writeGen(spark, path + "_supers") { gen =>
-      supers.select("s_id", "sv", "sn").repartition(1)
-        .write.mode("overwrite").parquet(gen)
-    }
-  }
+      "fine" -> (gen => fine.select("c_id", "cv", "cn", "s_id")
+        .repartition(col("s_id"))
+        .write.mode("overwrite").partitionBy("s_id").parquet(gen)),
+      "supers" -> (gen => supers.select("s_id", "sv", "sn").repartition(1)
+        .write.mode("overwrite").parquet(gen)))
 
   /** The persisted super layer `(s_id, sv, sn)` — √nlist rows. */
   def supers(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_supers"))
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "supers"))
 
   /** The persisted sharded fine codebook `(c_id, cv, cn, s_id)`;
     * partition-directory inference parses `s_id=N` as INT — cast back.
     */
   def fineShards(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(AtomicSwap.dataDir(spark, path + "_fine"))
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "fine"))
       .withColumn("s_id", col("s_id").cast("long"))
 
   /** Rewrite the assignment relation back to one file per `c_id=`
     * directory (r16, verdict ask #2 — the missing half of the
     * maintenance story behind `appendToIvfIndex`: every append adds a
     * file into each touched list directory, so after many deltas a
-    * probe opens nprobe × appends files instead of nprobe). Rows and
-    * the codebook sibling are untouched (IvfPersistSpec pins row
-    * identity and the file-count collapse). Generation-based
-    * ([[AtomicSwap.writeGen]], r17): the rewrite reads the current
-    * generation straight from the durable source into the NEXT
-    * generation and publishes a manifest naming it — never an
-    * overwrite-in-place, and safe to run concurrently with READERS
-    * (a reader that resolved the old generation keeps complete files
-    * until the compact after this one). WRITERS are not: append and
-    * compact must still be serialized — a racing append writes into a
-    * generation this rewrite's snapshot never saw, which the next
-    * compact prunes. [[AtomicSwap.commitAppend]] detects that race and
-    * fails the append loudly (r18, ADVICE).
+    * probe opens nprobe × appends files instead of nprobe). Rows are
+    * untouched and the codebook part is carried over, not rewritten
+    * (IvfPersistSpec pins row identity and the file-count collapse).
+    * Reader-safe and writer-serialized like [[BmIndex.compact]].
     */
-  def compact(spark: SparkSession, path: String, retain: Int = 1): Unit = {
-    val src = spark.read.parquet(AtomicSwap.dataDir(spark, path))
-    AtomicSwap.writeGen(spark, path, retain)(gen => writeLists(src, gen))
-  }
+  def compact(spark: SparkSession, path: String, retain: Int = 1): Unit =
+    write(read(spark, path), path, retain)
 }

@@ -21,16 +21,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * proportional to candidates, not the corpus.)
   *
   * r15: the index is MAINTAINABLE, not rebuild-only — [[append]] adds
-  * new docs' rows into the bucketed layout, and the [[writeDf]]
-  * sibling freezes the build-time document frequencies so appended
-  * docs rank under the build's prefix order (the correctness of that
-  * contract lives in [[graft.queries.Dedup.appendToPpIndex]]).
+  * new docs' rows into the bucketed layout, and the `df` part written
+  * by [[writeWithDf]] freezes the build-time document frequencies so
+  * appended docs rank under the build's prefix order (the correctness
+  * of that contract lives in [[graft.queries.Dedup.appendToPpIndex]]).
   *
   * r17: reader-safe maintenance — the [[AtomicSwap]] generation-
   * manifest pattern applied to a CATALOG artifact. The live data is a
-  * generation TABLE `<table>_gN`; a tiny rename-committed pointer
-  * (`<warehouse>/<table>_ptr/mf-K`, content = the live table name) is
-  * the commit. Compact builds `_g(N+1)` beside the live table,
+  * generation TABLE per part — `<table>_gN` for the base, `<table>_<part>_gK`
+  * for a named part — and ONE tiny rename-committed pointer
+  * (`<warehouse>/<table>_ptr/mf-K`, content = the live table of each
+  * part) is the commit, so a build publishes its base and df tables
+  * together. Compact builds `_g(N+1)` beside the live table,
   * publishes the pointer, and drops only generations OLDER than N —
   * so a reader that resolved the pre-compact table keeps complete,
   * untouched files for one full compaction cycle (the same
@@ -44,72 +46,83 @@ object PpIndex {
   private def ptrRoot(spark: SparkSession, table: String): Path =
     new Path(spark.conf.get("spark.sql.warehouse.dir"), table + "_ptr")
 
-  /** The live generation table's name, if the pointer layout is in
-    * use (the newest committed pointer file's content).
+  /** The live generation table of each part, if the pointer layout is
+    * in use (the newest committed pointer file's content).
     */
-  private def currentTable(spark: SparkSession, table: String): Option[String] = {
+  private def current(spark: SparkSession, table: String): Option[Map[String, String]] = {
     val root = ptrRoot(spark, table)
-    AtomicSwap.currentGen(AtomicSwap.fsOf(spark, root.toString), root)
+    AtomicSwap.current(AtomicSwap.fsOf(spark, root.toString), root)
   }
 
-  private def genNum(table: String, name: String): Option[Int] =
-    if (name.startsWith(table + "_g"))
-      name.stripPrefix(table + "_g").toIntOption
-    else None
+  /** The name prefix of `part`'s generation tables. */
+  private def genPrefix(table: String, part: String): String =
+    if (part == AtomicSwap.Main) s"${table}_g" else s"${table}_${part}_g"
 
-  /** Generation numbers of `table` that have a warehouse directory
-    * (strays from crashed builds included — a fresh JVM's in-memory
-    * catalog forgets tables, their dirs don't).
+  private def genNum(prefix: String, name: String): Option[Int] =
+    if (name.startsWith(prefix)) name.stripPrefix(prefix).toIntOption else None
+
+  /** Generation numbers of the tables named `prefix<N>` that have a
+    * warehouse directory (strays from crashed builds included — a
+    * fresh JVM's in-memory catalog forgets tables, their dirs don't).
     */
-  private def genDirs(spark: SparkSession, table: String): Seq[Int] = {
+  private def genDirs(spark: SparkSession, prefix: String): Seq[Int] = {
     val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
     val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(wh)) fs.listStatus(wh).toSeq.filter(_.isDirectory)
-      .flatMap(s => genNum(table, s.getPath.getName))
+      .flatMap(s => genNum(prefix, s.getPath.getName))
     else Seq.empty
   }
 
-  /** Publish `liveName` as the pointer's target — the commit point of
-    * build/append/compact (tmp-write + rename, via the AtomicSwap
-    * manifest mechanics).
+  /** Publish `live` (part → table) as the pointer's content — the
+    * commit point of build/append/compact (tmp-write + rename, via the
+    * AtomicSwap manifest mechanics).
     */
-  private def publish(spark: SparkSession, table: String, liveName: String): Unit = {
+  private def publish(spark: SparkSession, table: String,
+      live: Map[String, String]): Unit = {
     val root = ptrRoot(spark, table)
     val fs = AtomicSwap.fsOf(spark, root.toString)
     fs.mkdirs(root)
-    AtomicSwap.publish(fs, root, liveName)
+    AtomicSwap.publish(fs, root, live)
   }
 
-  /** The catalog twin of [[AtomicSwap.writeGen]]: write a NEW
-    * generation of the logical artifact `logical` and make it live.
-    * `write` receives the next free generation table name
-    * `<logical>_gN` (one past every generation directory and the
-    * pointer) and must save a complete table there; the pointer
-    * publish is the commit. The previous generation survives one cycle
-    * for open readers; older ones and crash strays (catalog entry AND
-    * warehouse dir — strays may have either without the other) are
-    * dropped.
+  /** The catalog twin of [[AtomicSwap.writeParts]]: write a NEW
+    * generation table of each of `parts` of the logical artifact
+    * `logical` and make them live together. `write` receives the next
+    * free table name of each part (one past every generation directory
+    * and the pointer) and must save a complete table under each; the
+    * ONE pointer publish is the commit, and it carries the live tables
+    * of the parts not rewritten. Per rewritten part, the previous
+    * generation survives one cycle for open readers; older ones and
+    * crash strays (catalog entry AND warehouse dir — strays may have
+    * either without the other) are dropped.
     */
-  private def writeGen(spark: SparkSession, logical: String)(
-      write: String => Unit): Unit = {
-    val prev = currentTable(spark, logical).flatMap(genNum(logical, _))
-    val k = (genDirs(spark, logical) ++ prev :+ -1).max + 1
-    val gt = s"${logical}_g$k"
-    resetTable(spark, gt) // stray from a crashed build
-    write(gt)
-    publish(spark, logical, gt)
-    (genDirs(spark, logical).toSet -- prev - k)
-      .foreach(g => resetTable(spark, s"${logical}_g$g"))
+  private def writeGen(spark: SparkSession, logical: String, parts: String*)(
+      write: Map[String, String] => Unit): Unit = {
+    val prev = current(spark, logical).getOrElse(Map.empty)
+    // per part: table-name prefix, live generation, next generation
+    val gens = parts.map { part =>
+      val prefix = genPrefix(logical, part)
+      val live = prev.get(part).flatMap(genNum(prefix, _))
+      (part, prefix, live, (genDirs(spark, prefix) ++ live :+ -1).max + 1)
+    }
+    val names = gens.map { case (part, prefix, _, k) => part -> s"$prefix$k" }.toMap
+    names.values.foreach(resetTable(spark, _)) // strays from a crashed build
+    write(names)
+    publish(spark, logical, prev ++ names)
+    for ((_, prefix, live, k) <- gens; g <- genDirs(spark, prefix).toSet -- live - k)
+      resetTable(spark, s"$prefix$g")
   }
 
-  /** The live generation table of the logical artifact `table`. With
-    * no pointer nothing was ever built there: fail loudly rather than
-    * serve, or append into, a pointer-less table.
+  /** The live generation table of `part` of the logical artifact
+    * `table`. With no pointer nothing was ever built there: fail loudly
+    * rather than serve, or append into, a pointer-less table.
     */
-  private def liveTable(spark: SparkSession, table: String): String =
-    currentTable(spark, table).getOrElse(throw new IllegalStateException(
-      s"PpIndex: no generation of $table is published at " +
-        s"${ptrRoot(spark, table)} — build it with write/writeDf first"))
+  private def liveTable(spark: SparkSession, table: String,
+      part: String = AtomicSwap.Main): String =
+    current(spark, table).flatMap(_.get(part)).getOrElse(
+      throw new IllegalStateException(s"PpIndex: no generation of $table " +
+        s"(part '$part') is published at ${ptrRoot(spark, table)} — build " +
+        "it with write/writeWithDf first"))
 
   /** Bucket count for a NEW layout (a [[write]] without `buckets`):
     * the session's shuffle-partition dial (r20, optimization guide §2
@@ -165,8 +178,36 @@ object PpIndex {
     */
   def write(base: DataFrame, table: String, buckets: Int = 0): Unit = {
     val n = if (buckets > 0) buckets else sessionBuckets(base.sparkSession)
-    writeGen(base.sparkSession, table)(gt =>
-      Bucketing.writeBucketed(base.select("doc_id", "s", "rk", "n"), gt, "s", n))
+    writeGen(base.sparkSession, table, AtomicSwap.Main)(names =>
+      writeBase(base, names(AtomicSwap.Main), n))
+  }
+
+  private def writeBase(base: DataFrame, name: String, buckets: Int): Unit =
+    Bucketing.writeBucketed(base.select("doc_id", "s", "rk", "n"), name, "s", buckets)
+
+  /** Persist a base TOGETHER with the BUILD-time per-fingerprint
+    * document frequency `dfAll` — every fp seen at build, capped and
+    * uncapped alike (the base alone can't recover the dropped fps, and
+    * appends must keep dropping them) — as one generation published
+    * once: the df part is frozen across appends, and a rebuild replaces
+    * both or neither. The df table is written first: the base's exact
+    * row count is Σ df over df ≤ `maxDf` (exactly the rows the capped
+    * ranking writes), so one aggregate over the just-written,
+    * unpublished two-column table sizes the bucketed layout from the
+    * DATA (r21, r20 ADVICE — [[adaptiveBuckets]]) with zero extra
+    * passes over the heavy exploded relation `base` derives from.
+    */
+  def writeWithDf(base: DataFrame, dfAll: DataFrame, table: String,
+      maxDf: Long): Unit = {
+    import org.apache.spark.sql.functions._
+    val spark = base.sparkSession
+    writeGen(spark, table, AtomicSwap.Main, "df") { names =>
+      dfAll.select("s", "df").write.mode("overwrite")
+        .format("parquet").saveAsTable(names("df"))
+      val kept = spark.table(names("df")).filter(col("df") <= maxDf)
+        .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0)
+      writeBase(base, names(AtomicSwap.Main), adaptiveBuckets(spark, kept))
+    }
   }
 
   /** Drop `table` AND delete its leftover warehouse directory — an
@@ -184,20 +225,8 @@ object PpIndex {
   def read(spark: SparkSession, table: String): DataFrame =
     spark.table(liveTable(spark, table))
 
-  /** Persist the BUILD-time per-fingerprint document frequency —
-    * every fp seen at build, capped and uncapped alike (the base alone
-    * can't recover the dropped fps, and appends must keep dropping
-    * them). Frozen across appends; REBUILDS replace it — so it rides
-    * the same pointer-generation mechanics as the base (r17): a
-    * rebuild-over-live must not drop the table under an open reader.
-    */
-  def writeDf(dfAll: DataFrame, table: String): Unit =
-    writeGen(dfAll.sparkSession, table + "_df")(gt =>
-      dfAll.select("s", "df").write.mode("overwrite")
-        .format("parquet").saveAsTable(gt))
-
   def readDf(spark: SparkSession, table: String): DataFrame =
-    spark.table(liveTable(spark, table + "_df"))
+    spark.table(liveTable(spark, table, "df"))
 
   /** Staleness probe for a maintained PPJoin index (r20, verdict ask
     * #3 — the one-row health reading every other persisted family
@@ -209,7 +238,7 @@ object PpIndex {
     *
     *  - `n_rows_frozen` / `n_rows_now` / `appended_frac` — appended
     *    shingle MASS vs the build: the build-time base size is
-    *    recoverable from the frozen `_df` sibling alone
+    *    recoverable from the frozen `df` part alone
     *    (Σ df over df ≤ `maxDf` — exactly the rows the capped build
     *    wrote), so the volume reading needs no build-time snapshot.
     *  - `new_fp_frac` — the fraction of current base rows whose
@@ -217,7 +246,7 @@ object PpIndex {
     *    slot, always in prefixes): appended-vocabulary drift, the
     *    sliver where the frozen order is blindest.
     *  - `dropped_mass_frac_frozen` — the df-cap's BUILD-time coverage:
-    *    Σ df over df > `maxDf` / Σ df, from the frozen sibling. Cap
+    *    Σ df over df > `maxDf` / Σ df, from the frozen part. Cap
     *    behavior is corpus-shaped (measured 1.0% of shingle mass
     *    dropped on the synthetic-dup corpus vs 30.9% on 600-token
     *    Zipf text — BENCHNOTES r19 longsalt), so the probe reports it
@@ -231,7 +260,7 @@ object PpIndex {
     *    per-FINGERPRINT; this is the row-mass view).
     *
     * Reads only the base's `s` column (one aggregation) and the
-    * two-column `_df` sibling — never shingles, never the corpus.
+    * two-column `df` part — never shingles, never the corpus.
     */
   def driftProbe(spark: SparkSession, table: String, maxDf: Long): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -281,6 +310,7 @@ object PpIndex {
     * (PpAppendSpec).
     */
   def append(rows: DataFrame, spark: SparkSession, table: String): Unit = {
+    val resolved = current(spark, table)
     val live = liveTable(spark, table)
     // the LIVE layout's count (r20): an append must match the build's
     // spec whatever dial the build ran under
@@ -299,13 +329,14 @@ object PpIndex {
     // appended rows silently; writers (append vs compact) must be
     // serialized, and a violation fails loudly here (r18, ADVICE —
     // the BmIndex/commitAppend contract applied to the catalog tier)
-    val cur = liveTable(spark, table)
-    require(cur == live,
+    val cur = current(spark, table)
+    require(cur == resolved,
       s"PpIndex.append($table): appended into $live but the live " +
-        s"generation is now $cur — a compact/rebuild ran concurrently " +
+        s"generation is now ${cur.getOrElse(Map.empty).values.mkString(", ")} — " +
+        "a compact/rebuild ran concurrently " +
         "(writers must be serialized; only readers are compact-safe). " +
         "Re-run the append against the current generation.")
-    publish(spark, table, cur)
+    publish(spark, table, cur.get)
   }
 
   /** Rewrite the index back to one sorted file per bucket — the
@@ -326,7 +357,7 @@ object PpIndex {
   def compact(spark: SparkSession, table: String): Unit = {
     val src = liveTable(spark, table)
     val n = liveBuckets(spark, src)
-    writeGen(spark, table)(gt => Bucketing.writeBucketed(
-      spark.table(src).select("doc_id", "s", "rk", "n"), gt, "s", n))
+    writeGen(spark, table, AtomicSwap.Main)(names =>
+      writeBase(spark.table(src), names(AtomicSwap.Main), n))
   }
 }

@@ -18,27 +18,30 @@ import org.apache.spark.sql.functions._
   * relation carries a coarse-list column (the IVFADC form: a probe of
   * `nprobe` lists then reads only those directories, the
   * [[IvfIndex]] pruning story at PQ-code granularity), plain parquet
-  * otherwise (the flat v11 form). The codebook lands as a single-row
-  * parquet at the SIBLING `<path>_codebook` (same rationale as
-  * [[IvfIndex.writeWithCodebook]]: an underscore-prefixed child would
-  * be invisible to Hadoop listings, a non-partition child would break
-  * partition discovery) carrying `(m, k, cb, cents)` — `cents` is the
-  * flat unit coarse-centroid array for residual (IVFADC) codebooks,
-  * empty for direct ones. Parquet doubles round-trip bit-exact, so
+  * otherwise (the flat v11 form). The same artifact carries, under one
+  * manifest ([[AtomicSwap.writeParts]]), a single-row `codebook` part
+  * `(m, k, cb, cents, cids)` — `cents` is the flat unit coarse-centroid
+  * array for residual (IVFADC) codebooks, empty for direct ones — the
+  * one-row frozen count `stats`, and for IVFADC builds the raw coarse
+  * book `coarse`. Parquet doubles round-trip bit-exact, so
   * encoding against a LOADED codebook reproduces the build's codes
   * (PqIndexSpec pins the round-trip and loaded-vs-fresh row equality).
   */
 object PqIndex {
 
-  /** Persist a code relation together with its codebook and params.
-    * `cents`/`cids` (the flat unit coarse-centroid array and the c_ids
-    * in the same dense order) are carried for IVFADC indexes so the
-    * SERVING path can route queries without touching the embeddings'
-    * own centroid derivation; both empty for direct (flat) indexes.
+  /** Persist a code relation together with its codebook and params,
+    * published once. `cents`/`cids` (the flat unit coarse-centroid
+    * array and the c_ids in the same dense order) are carried for
+    * IVFADC indexes so the SERVING path can route queries without
+    * touching the embeddings' own centroid derivation; both empty for
+    * direct (flat) indexes. `coarse`, the raw coarse book `(c_id, cv,
+    * cn)` — not just the unit form the serving LUTs need — lets
+    * INCREMENTAL ADDS reproduce the build's assignment argmax
+    * bit-for-bit (same IEEE sequence as the build: dot(v, cv)/(nrm·cn)).
     */
   def write(codes: DataFrame, cb: Array[Double], m: Int, k: Int,
       path: String, cents: Array[Double] = Array.empty,
-      cids: Array[Long] = Array.empty): Unit = {
+      cids: Array[Long] = Array.empty, coarse: Option[DataFrame] = None): Unit = {
     require(m > 0 && k > 0 && cb.length % (m * k) == 0,
       s"PqIndex.write: codebook shape mismatch (${cb.length} values, m=$m, k=$k)")
     require(cids.isEmpty == cents.isEmpty,
@@ -49,27 +52,21 @@ object PqIndex {
     // list); repartitioning on the partition column first costs one
     // build-time shuffle and leaves ONE well-formed file per list, so
     // a probe opens nprobe files instead of nprobe × tasks
-    // generation-manifest layout (r17, [[AtomicSwap.writeGen]]): data
-    // lands as a generation under `path`, the manifest publish is the
-    // commit, readers resolve through [[AtomicSwap.dataDir]]
-    AtomicSwap.writeGen(spark, path) { gen =>
-      if (codes.columns.contains("c_id")) IvfIndex.writeLists(codes, gen)
-      else codes.write.mode("overwrite").parquet(gen)
-    }
     import spark.implicits._
-    // codebook through the generation layer too (r17): rebuild-over-
-    // live must not overwrite it under an open reader
-    AtomicSwap.writeGen(spark, path + "_codebook") { gen =>
-      Seq((m, k, cb.toSeq, cents.toSeq, cids.toSeq))
+    val parts = Seq[(String, String => Unit)](
+      AtomicSwap.Main -> (gen =>
+        if (codes.columns.contains("c_id")) IvfIndex.writeLists(codes, gen)
+        else codes.write.mode("overwrite").parquet(gen)),
+      "codebook" -> (gen => Seq((m, k, cb.toSeq, cents.toSeq, cids.toSeq))
         .toDF("m", "k", "cb", "cents", "cids")
-        .repartition(1).write.mode("overwrite").parquet(gen)
-    }
-    // one-row FROZEN code count (r17) — the [[driftProbe]] baseline;
-    // appends never rewrite it (the BmIndex `_stats` convention)
-    AtomicSwap.writeGen(spark, path + "_stats") { gen =>
-      codes.agg(count(lit(1)).as("n_codes")).repartition(1)
-        .write.mode("overwrite").parquet(gen)
-    }
+        .repartition(1).write.mode("overwrite").parquet(gen)),
+      // one-row FROZEN code count (r17) — the [[driftProbe]] baseline;
+      // appends never rewrite it (the BmIndex `stats` convention)
+      "stats" -> (gen => codes.agg(count(lit(1)).as("n_codes"))
+        .repartition(1).write.mode("overwrite").parquet(gen))) ++
+      coarse.map(c => "coarse" -> ((gen: String) => c.select("c_id", "cv", "cn")
+        .repartition(1).write.mode("overwrite").parquet(gen)))
+    AtomicSwap.writeParts(spark, path)(parts: _*)
   }
 
   /** Staleness probe for a maintained PQ/IVFADC index (r17 —
@@ -85,15 +82,9 @@ object PqIndex {
     */
   def driftProbe(spark: SparkSession, path: String): DataFrame = {
     val codes = read(spark, path)
-    val frozen = spark.read.parquet(AtomicSwap.dataDir(spark, path + "_stats"))
-    if (codes.columns.contains("c_id")) {
-      frozen.crossJoin(IvfIndex.listStats(codes))
-        .select(col("n_codes").as("n_frozen"), col("n_now"),
-          ((col("n_now") - col("n_codes")).cast("double") / col("n_now"))
-            .as("appended_frac"),
-          col("n_lists"), col("max_list"), col("mean_list"),
-          (col("max_list").cast("double") / col("mean_list")).as("list_skew"))
-    } else {
+    val frozen = spark.read.parquet(AtomicSwap.dataDir(spark, path, "stats"))
+    if (codes.columns.contains("c_id")) IvfIndex.listDrift(frozen, "n_codes", codes)
+    else {
       frozen.crossJoin(codes.agg(count(lit(1)).as("n_now")))
         .select(col("n_codes").as("n_frozen"), col("n_now"),
           ((col("n_now") - col("n_codes")).cast("double") / col("n_now"))
@@ -113,32 +104,26 @@ object PqIndex {
   /** The persisted codebook: (cb, m, k, cents, cids). */
   def codebook(spark: SparkSession, path: String)
       : (Array[Double], Int, Int, Array[Double], Array[Long]) = {
-    val r = spark.read.parquet(AtomicSwap.dataDir(spark, path + "_codebook")).head()
+    val r = spark.read.parquet(AtomicSwap.dataDir(spark, path, "codebook")).head()
     (r.getAs[Seq[Double]]("cb").toArray, r.getAs[Int]("m"), r.getAs[Int]("k"),
       r.getAs[Seq[Double]]("cents").toArray, r.getAs[Seq[Long]]("cids").toArray)
   }
+
+  /** The raw coarse routing book `(c_id, cv, cn)` of an IVFADC index. */
+  def coarse(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(AtomicSwap.dataDir(spark, path, "coarse"))
 
   /** Rewrite the code relation back to one file per list (r15 — the
     * maintenance companion to `appendToIvfAdcIndex`, PpIndex.compact's
     * story for the partitioned tier): every append adds a file into
     * each touched `c_id=` directory, so after many deltas a probe
-    * opens nprobe × appends files instead of nprobe. Rows and the
-    * codebook sibling are untouched. r17: generation-based
-    * ([[AtomicSwap.writeGen]]) — the rewrite reads the current
-    * generation straight from the durable source into the NEXT
-    * generation and publishes a manifest naming it, never an
-    * overwrite-in-place, and safe to run concurrently with READERS
-    * (a reader that resolved the old generation keeps complete files
-    * until the compact after this one). WRITERS are not: append and
-    * compact must still be serialized — [[AtomicSwap.commitAppend]]
-    * fails a racing append loudly (r18, ADVICE).
+    * opens nprobe × appends files instead of nprobe. Rows are
+    * untouched and the other parts are carried over. Reader-safe and
+    * writer-serialized like [[BmIndex.compact]].
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val snap = spark.read.parquet(AtomicSwap.dataDir(spark, path))
-    AtomicSwap.writeGen(spark, path) { gen =>
-      if (snap.columns.contains("c_id"))
-        IvfIndex.writeLists(snap.withColumn("c_id", col("c_id").cast("long")), gen)
-      else snap.write.mode("overwrite").parquet(gen)
-    }
+    val snap = read(spark, path)
+    if (snap.columns.contains("c_id")) IvfIndex.write(snap, path)
+    else AtomicSwap.writeGen(spark, path)(snap.write.mode("overwrite").parquet(_))
   }
 }

@@ -160,7 +160,7 @@ object IndexIngest {
   /** [[bm25]], maintained: when `appended_frac` exceeds `threshold` OR
     * `avgdl_drift` exceeds `avgdlThreshold` — the
     * [[BmIndex.driftProbe]] expressions, evaluated on tracked counts —
-    * rebuild with REFRESHED `_df`/`_stats` through
+    * rebuild with REFRESHED `df`/`stats` through
     * [[TextAnalysis.rebuildBm25Index]]. The two dials cover the two ways
     * frozen stats go stale: volume (idf's N lags reality) and shape
     * (appended lengths move the true avgdl off the frozen normalizer).
@@ -220,7 +220,7 @@ object IndexIngest {
   /** PPJoin ([[Dedup.buildPpIndex]]): (doc_id, text) rows shingle and
     * rank under the BUILD-FROZEN df order, loaded once per stream
     * ([[Dedup.rankUnderFrozenOrder]], the batch append's ranking). The
-    * frozen `_df` sibling is never touched, so the candidate join stays
+    * frozen `df` part is never touched, so the candidate join stays
     * exact below the df cap.
     *
     * Replay absorption keys on (doc_id, s) — fingerprint rows, not docs.

@@ -133,7 +133,7 @@ class Bm25IndexSpec extends SparkSpec {
     assert(filesPerDir(cur, "pbkt=").values.forall(_ == 1),
       "compact should leave one file per bucket directory")
     val dlFiles = new java.io.File(
-        graft.sources.AtomicSwap.dataDir(spark, path + "_doclens")).listFiles()
+        graft.sources.AtomicSwap.dataDir(spark, path, "doclens")).listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     assert(dlFiles <= 8, s"doclens should collapse to <= 8 files, got $dlFiles")
   }

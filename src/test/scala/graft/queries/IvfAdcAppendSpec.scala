@@ -50,7 +50,7 @@ class IvfAdcAppendSpec extends SparkSpec {
     // recomputed independently here from the persisted artifacts)
     val (cb, m, k, centsFlat, cids) = PqIndex.codebook(spark, idx)
     val rawBook = spark.read.parquet(
-      graft.sources.AtomicSwap.dataDir(spark, idx + "_coarse"))
+      graft.sources.AtomicSwap.dataDir(spark, idx, "coarse"))
     val e2 = Similarity.emb(spark, dir).filter(col("vec_id") > cut)
     import spark.implicits._
     val cIdxDf = broadcast(cids.zipWithIndex.toSeq.toDF("c_id", "c_idx"))

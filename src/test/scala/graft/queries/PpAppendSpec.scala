@@ -22,21 +22,13 @@ class PpAppendSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.01"
 
-  private def resetTable(table: String): Unit =
-    for (t <- Seq(table, table + "_df")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-    }
-
   private def pmap(df: org.apache.spark.sql.DataFrame) =
     df.select("a_id", "b_id", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
   test("append == rebuild on the fixture corpus (df far under the cap)") {
     val table = "ppjoin_append_spec"
-    resetTable(table)
+    wipeTables(table)
     val docs = Dedup.shingleDocs(spark, dir).localCheckpoint(eager = false)
     val cut = docs.agg(expr("percentile(doc_id, 0.75)")).head().getDouble(0).toLong
     Dedup.buildPpIndexOver(spark, docs.filter(col("doc_id") <= cut), table)
@@ -66,7 +58,7 @@ class PpAppendSpec extends SparkSpec {
 
   test("compact restores single-file buckets and the sort-free plan; rows untouched") {
     val table = "ppjoin_compact_spec"
-    resetTable(table)
+    wipeTables(table)
     val docs = Dedup.shingleDocs(spark, dir).localCheckpoint(eager = false)
     val cut = docs.agg(expr("percentile(doc_id, 0.75)")).head().getDouble(0).toLong
     Dedup.buildPpIndexOver(spark, docs.filter(col("doc_id") <= cut), table)
@@ -95,7 +87,7 @@ class PpAppendSpec extends SparkSpec {
 
   test("re-appending an indexed doc_id fails loudly") {
     val table = "ppjoin_append_dup_spec"
-    resetTable(table)
+    wipeTables(table)
     val docs = Dedup.shingleDocs(spark, dir)
     Dedup.buildPpIndexOver(spark, docs, table)
     val e = intercept[IllegalArgumentException] {
@@ -106,7 +98,7 @@ class PpAppendSpec extends SparkSpec {
 
   test("cap boundary: frozen universe keeps judging, rebuild re-caps (documented divergence)") {
     val table = "ppjoin_append_cap_spec"
-    resetTable(table)
+    wipeTables(table)
     import spark.implicits._
     // 49 build docs share fp "hot" (df_build = 49 <= MaxDf = 50, kept);
     // two appended docs push its full-corpus df to 51 (> cap)

@@ -20,12 +20,7 @@ class PpIndexSpec extends SparkSpec {
     // leaves the directory behind with no entry in THIS session's
     // in-memory catalog, and saveAsTable refuses an existing location
     // (the BandIndexSpec reset)
-    for (t <- Seq(table, table + "_df")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-    }
+    wipeTables(table)
     Dedup.buildPpIndex(spark, dir, table)
 
     def pmap(df: org.apache.spark.sql.DataFrame) =
@@ -46,29 +41,10 @@ class PpIndexSpec extends SparkSpec {
       s"candidate self-join against the bucketed base must not shuffle:\n$plan")
   }
 
-  private def wipe(table: String, extra: String*): Unit = {
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    // generation tables + the pointer dir from prior JVM runs
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    if (fs.exists(whPath))
-      fs.listStatus(whPath).map(_.getPath.getName)
-        .filter(n => n == table || n.startsWith(table + "_"))
-        .foreach { n =>
-          spark.sql(s"DROP TABLE IF EXISTS $n")
-          fs.delete(new org.apache.hadoop.fs.Path(wh, n), true)
-        }
-    extra.foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      fs.delete(new org.apache.hadoop.fs.Path(wh, n), true)
-    }
-  }
-
   test("a reader pinned pre-compact survives the swap; fresh reads see the new generation") {
     import spark.implicits._
     val table = "ppjoin_reader_spec"
-    wipe(table)
+    wipeTables(table)
     val base = Seq((1L, 10L, 1, 2), (1L, 11L, 2, 2), (2L, 10L, 1, 1))
       .toDF("doc_id", "s", "rk", "n")
     graft.sources.PpIndex.write(base, table)

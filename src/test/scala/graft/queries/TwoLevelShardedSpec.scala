@@ -45,10 +45,10 @@ class TwoLevelShardedSpec extends SparkSpec {
     assert(collectAssign(Similarity.twoLevelAssignSharded(spark, dir, path, 8)) === single,
       "sharded path at full width diverged from the single-level argmax")
 
-    // layout: one s_id= directory per shard, supers as a sibling; the
+    // layout: one s_id= directory per shard, supers a separate part; the
     // fine scan never touches the super files
     val shardDirs = new java.io.File(
-        graft.sources.AtomicSwap.dataDir(spark, path + "_fine")).listFiles()
+        graft.sources.AtomicSwap.dataDir(spark, path, "fine")).listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("s_id=")).toSeq
     assert(shardDirs.size === 8, s"expected 8 shard dirs, got $shardDirs")
     assert(!IvfIndex.fineShards(spark, path).inputFiles.exists(_.contains("_supers")),

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
@@ -83,18 +84,79 @@ class ManifestSpec extends SparkSpec {
       .as[Long].collect().toSeq === Seq(2L))
 
     // a FIRST build that crashed between its data commit and its first
-    // publish: with no manifest at all, the committed g0 is published
-    // on the next resolve …
+    // publish leaves no manifest: the root resolves to itself, and the
+    // next build skips the stray number and prunes it
     val first = tmp("mffirst")
     Seq(3L).toDF("x").write.parquet(first + "/g0")
-    assert(AtomicSwap.dataDir(spark, first).endsWith("g0"))
-    assert(spark.read.parquet(AtomicSwap.dataDir(spark, first))
-      .as[Long].collect().toSeq === Seq(3L))
-    // … while a g0 that never committed (no _SUCCESS) stays invisible
+    assert(AtomicSwap.dataDir(spark, first) === first)
+    AtomicSwap.writeGen(spark, first)(Seq(4L).toDF("x").write.parquet(_))
+    assert(AtomicSwap.dataDir(spark, first).endsWith("g1"))
+    assert(!fs.exists(new Path(first, "g0")), "unpublished first build pruned")
+    // … and so does one whose data job never committed (no _SUCCESS)
     val half = tmp("mfhalf")
     Seq(3L).toDF("x").write.parquet(half + "/g0")
     assert(fs.delete(new Path(half, "g0/_SUCCESS"), false))
     assert(AtomicSwap.dataDir(spark, half) === half)
+  }
+
+  test("a rebuild whose second part fails leaves every part, and what " +
+      "is served, on the old generation") {
+    def boom(c: String) = raise_error(lit(s"$c write fails")).cast("long")
+    def dirs(root: String, parts: String*) =
+      parts.map(AtomicSwap.dataDir(spark, root, _))
+
+    // BmIndex: postings are written, then the doclens part raises
+    val bm = tmp("mfbm")
+    val postings = Seq(("a", 1L, 2), ("b", 1L, 1), ("a", 2L, 1))
+      .toDF("term", "doc_id", "tf")
+    val doclens = Seq((1L, 3), (2L, 1)).toDF("doc_id", "dl")
+    BmIndex.write(postings, doclens, bm)
+    val bmParts = Seq(AtomicSwap.Main, "doclens", "df", "stats")
+    def bmServe = graft.queries.TextAnalysis.bm25Indexed(spark, bm, Seq("a", "b"))
+      .collect().toSeq
+    val (bmDirs, bmServed) = (dirs(bm, bmParts: _*), bmServe)
+    intercept[Exception] {
+      BmIndex.write(postings.union(Seq(("c", 3L, 1)).toDF("term", "doc_id", "tf")),
+        doclens.withColumn("dl", col("dl") + boom("doclens")), bm)
+    }
+    assert(dirs(bm, bmParts: _*) === bmDirs)
+    assert(bmServe === bmServed)
+
+    // IvfIndex: the lists are written, then the codebook part raises
+    val ivf = tmp("mfivf")
+    val assign = Seq((1L, 0L), (2L, 1L)).toDF("vec_id", "c_id")
+    val book = Seq((0L, Seq(1.0, 0.0), 1.0), (1L, Seq(0.0, 1.0), 1.0))
+      .toDF("c_id", "cv", "cn")
+    IvfIndex.writeWithCodebook(assign, book, ivf)
+    val ivfParts = Seq(AtomicSwap.Main, "codebook", "stats")
+    def ivfServe = (IvfIndex.read(spark, ivf).collect().toSeq.map(_.toString).sorted,
+      IvfIndex.codebook(spark, ivf).collect().toSeq.map(_.toString).sorted)
+    val (ivfDirs, ivfServed) = (dirs(ivf, ivfParts: _*), ivfServe)
+    intercept[Exception] {
+      IvfIndex.writeWithCodebook(assign.union(Seq((3L, 0L)).toDF("vec_id", "c_id")),
+        book.withColumn("c_id", col("c_id") + boom("codebook")), ivf)
+    }
+    assert(dirs(ivf, ivfParts: _*) === ivfDirs)
+    assert(ivfServe === ivfServed)
+
+    // PpIndex: the df table is written, then the base raises
+    val table = "mf_pp_atomic"
+    wipeTables(table)
+    val base = Seq((1L, 10L, 1, 2), (1L, 11L, 2, 2), (2L, 10L, 1, 2),
+      (2L, 11L, 2, 2)).toDF("doc_id", "s", "rk", "n")
+    val dfAll = Seq((10L, 2L), (11L, 2L)).toDF("s", "df")
+    PpIndex.writeWithDf(base, dfAll, table, maxDf = 50)
+    def ppServe = (graft.queries.Dedup.jaccardPairsIndexed(spark, table)
+        .collect().toSeq.map(_.toString).sorted,
+      PpIndex.readDf(spark, table).collect().toSeq.map(_.toString).sorted,
+      PpIndex.read(spark, table).inputFiles.toSeq.sorted,
+      PpIndex.readDf(spark, table).inputFiles.toSeq.sorted)
+    val ppServed = ppServe
+    intercept[Exception] {
+      PpIndex.writeWithDf(base.withColumn("rk", col("rk") + boom("base")),
+        dfAll.withColumn("df", col("df") + 1), table, maxDf = 50)
+    }
+    assert(ppServe === ppServed)
   }
 
   test("commitAppend bumps the manifest without changing the generation") {

@@ -17,14 +17,6 @@ class PpProbeSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def resetTable(table: String): Unit =
-    for (t <- Seq(table, table + "_df")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-    }
-
   // cap is MaxDf = 50. Build: "stop" in 60 docs (dropped), "mid" in 30
   // (kept), one unique per doc. Frozen mass 150, kept (= base rows) 90.
   private def buildDocs = (0L until 60L).map { i =>
@@ -40,7 +32,7 @@ class PpProbeSpec extends SparkSpec {
   test("fresh build: appended/new/crossed all zero; build-time cap " +
       "coverage and row mass recovered from the _df sibling alone") {
     val table = "pp_probe_fresh"
-    resetTable(table)
+    wipeTables(table)
     Dedup.buildPpIndexOver(spark, buildDocs, table)
     val r = Dedup.ppArtifactProbe(spark, table).head()
     assert(r.getAs[Long]("n_rows_frozen") === 90L)
@@ -56,7 +48,7 @@ class PpProbeSpec extends SparkSpec {
   test("after appends: appended mass, append-only vocabulary, and " +
       "cap-crossing row mass are the planted exact fractions") {
     val table = "pp_probe_app"
-    resetTable(table)
+    wipeTables(table)
     Dedup.buildPpIndexOver(spark, buildDocs, table)
     Dedup.appendToPpIndex(spark, table, appendDocs)
     val r = Dedup.ppArtifactProbe(spark, table).head()

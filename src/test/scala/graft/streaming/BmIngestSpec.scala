@@ -67,13 +67,24 @@ class BmIngestSpec extends SparkSpec {
 
     val crashed = s"$base/crashed"
     TextAnalysis.buildBm25IndexOver(spark, prefix, crashed)
-    // append, then roll back ONLY the doclens half = the crash state
-    val dlDir = new java.io.File(crashed + "_doclens")
+    // append, then roll back ONLY the doclens half = the crash state:
+    // delete the data files the append added to the doclens part
+    val dlDir = new java.io.File(
+      graft.sources.AtomicSwap.dataDir(spark, crashed, "doclens"))
     val beforeFiles = dlDir.listFiles().map(_.getName).toSet
     TextAnalysis.appendToBm25Index(spark, crashed, rest)
-    dlDir.listFiles().filterNot(f => beforeFiles(f.getName)).foreach(_.delete())
+    val added = dlDir.listFiles().filterNot(f => beforeFiles(f.getName))
+    assert(added.exists(_.getName.endsWith(".parquet")),
+      "the append must have added doclens data files to roll back")
+    added.foreach(_.delete())
     // replay the whole batch, as at-least-once foreachBatch would
     IndexIngest.processBatch(rest, IndexIngest.bm25(crashed))
+    // the crash state was reached: the replay re-appended postings the
+    // first append had already made durable
+    assert(graft.sources.BmIndex.postingsAll(spark, crashed)
+        .groupBy("term", "doc_id").count().filter(col("count") > 1)
+        .limit(1).count() === 1,
+      "the replay must leave duplicate (term, doc_id) posting rows")
 
     def serve(p: String) = TextAnalysis.bm25Indexed(spark, p, qterms, k = 1 << 20)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
