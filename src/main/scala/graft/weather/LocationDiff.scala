@@ -11,26 +11,31 @@ import org.apache.spark.sql.functions._
   * NULL SEMANTICS (SURVEY.md §7.4 hard-part #1): pandas merge matches
   * NaN == NaN on join keys — `oldName` is null for 143/146 rows in the
   * real snapshot, so plain `===` would flag every row as changed.
-  * `exceptAll` compares rows null-safely, which is exactly the pandas
-  * behavior; the two anti-directions together are the symmetric
-  * difference the reference filters out of the indicator join.
+  * Grouping compares keys null-safely, which is exactly the pandas
+  * behavior.
   *
-  * Scale: exceptAll plans as a hash anti-aggregation — one shuffle on all
-  * compare columns, no row-by-row driver work. The empty-diff gate
-  * (`:389,:399`) stays an application-level `isEmpty` on this result
-  * (cheap: limit-1 scan after the aggregation).
+  * Scale: one signed multiset count — fresh rows +1, old rows −1, summed
+  * per distinct row in one shuffle on all compare columns; a non-zero
+  * sum is the row's surplus on one side (the symmetric difference
+  * `exceptAll` both ways gives, at half the shuffles). The empty-diff
+  * gate (`:389,:399`) stays an application-level `isEmpty` on this
+  * result (cheap: limit-1 scan after the aggregation).
   */
 object LocationDiff {
 
   /** Rows of `fresh` not present in `old` plus rows of `old` not present
-    * in `fresh` (on `cols`), tagged with a `side` indicator
-    * ("left_only" / "right_only" — pandas' indicator vocabulary).
+    * in `fresh` (on `cols`, with multiplicity), tagged with a `side`
+    * indicator ("left_only" / "right_only" — pandas' indicator vocabulary).
     */
   def symmetricDiff(fresh: DataFrame, old: DataFrame, cols: Seq[String]): DataFrame = {
-    val f = fresh.select(cols.map(col): _*)
-    val o = old.select(cols.map(col): _*)
-    f.exceptAll(o).withColumn("side", lit("left_only"))
-      .union(o.exceptAll(f).withColumn("side", lit("right_only")))
+    def signed(df: DataFrame, sign: Int) = df.select(cols.map(col) :+ lit(sign).as("_sign"): _*)
+    signed(fresh, 1).union(signed(old, -1))
+      .groupBy(cols.map(col): _*).agg(sum(col("_sign")).as("_surplus"))
+      .filter(col("_surplus") =!= 0)
+      // one output row per unit of surplus, as exceptAll keeps multiplicity
+      .withColumn("_copy", explode(sequence(lit(1L), abs(col("_surplus")))))
+      .select(cols.map(col) :+
+        when(col("_surplus") > 0, "left_only").otherwise("right_only").as("side"): _*)
   }
 
   /** The incremental-skip gate (`weather_data_fetcher.py:383-399`). */

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * The geocoder is injected (`geocode: name → candidates`) so tests and
   * offline runs use fixtures; a production connector wraps the HTTP call
   * with throttling. Geocoding runs as a typed map over the changed rows
-  * only — at 146 rows (or 146k) it distributes across partitions instead
-  * of the reference's serial 1 s/row loop (`:419`).
+  * only, spread over `defaultParallelism` partitions — at 146 rows (or
+  * 146k) the calls overlap across the cores instead of the reference's
+  * serial 1 s/row loop (`:419`).
   */
 object LocationRefresh {
 
@@ -60,7 +61,12 @@ object LocationRefresh {
     // typed map over ONLY the changed rows; the resolver is a pure Scala
     // fallback chain (GeocodeMatcher.resolve), no per-row SQL round trips
     val geocoded = changed
-      .select(col("name"), col("province_name")).distinct()
+      .select(col("name"), col("province_name"))
+      // a fixed partition count, which AQE does not coalesce into the one
+      // task a few distinct rows would get, so the latency-bound calls
+      // overlap; the distinct reuses this shuffle
+      .repartition(spark.sparkContext.defaultParallelism, col("name"), col("province_name"))
+      .distinct()
       .as[(String, Option[String])]
       .map { case (name, prov) =>
         val c = GeocodeMatcher.resolve(name, prov, geocode)

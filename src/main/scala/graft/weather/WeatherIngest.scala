@@ -9,14 +9,17 @@ import org.apache.spark.sql.functions._
   *
   * The reference does all of this in a serial per-row loop with two DB
   * round trips per row (`:285,:296`); here it is two distributed stages:
-  * (1) fetch+shred as a typed map over snapshot partitions, (2) one
-  * broadcast equi-join against the locations dim to resolve location_id
-  * (J3 — the per-row point SELECT `:286-293` becomes a shuffle-free
-  * broadcast join; misses become a left_anti audit instead of a log line).
+  * (1) fetch+shred as a typed map over the coordinates, spread over
+  * `defaultParallelism` partitions so the latency-bound fetch spans the
+  * cores, (2) one broadcast left join against the locations dim to
+  * resolve location_id (J3 — the per-row point SELECT `:286-293` becomes
+  * a shuffle-free broadcast join; a miss becomes a null `location_id`
+  * row in an audit relation instead of a log line).
   *
   * `fetchJson: (lat, lon) => json` is the injected connector; a real one
-  * wraps HTTP with per-partition throttling (`mapPartitions` + token
-  * bucket), tests inject fixtures.
+  * wraps HTTP behind [[graft.sources.Throttle.acquire]]'s per-JVM token
+  * bucket, which the task threads share, so the fan-out does not change
+  * the request rate; tests inject fixtures.
   */
 object WeatherIngest {
 
@@ -50,19 +53,43 @@ object WeatherIngest {
   }
 
   /** Full ingest pass. Returns (facts ready to append, missed-lookup
-    * audit). `now` is injected for determinism (SURVEY.md §7.4 #3).
+    * audit): the rows of [[resolve]] with and without a `location_id`,
+    * both over its one persisted relation, which stays cached (a tick
+    * goes through [[WeatherMain.appendTick]], which releases it). `now`
+    * is injected for determinism (SURVEY.md §7.4 #3).
     */
   def ingest(
       spark: SparkSession,
       snapshot: DataFrame,
       fetchJson: (Double, Double) => String,
       now: java.sql.Timestamp): (DataFrame, DataFrame) = {
+    val joined = resolve(spark, snapshot, fetchJson, now)
+    (joined.filter(col("location_id").isNotNull),
+      joined.filter(col("location_id").isNull)
+        .select(col("location_name"), col("province_name")))
+  }
+
+  /** The fetched, shredded rows left-joined to the snapshot's dim: a null
+    * `location_id` marks a missed lookup. The relation is persisted, so
+    * the connector fires exactly once per row however many outputs read
+    * it (a lazy recompute would double-spend the API quota); the caller
+    * owns it and must `unpersist` it once done — Spark's CacheManager
+    * keeps a persisted relation until then.
+    */
+  private[weather] def resolve(
+      spark: SparkSession,
+      snapshot: DataFrame,
+      fetchJson: (Double, Double) => String,
+      now: java.sql.Timestamp): DataFrame = {
     import spark.implicits._
 
     val coords = snapshot
       .filter(col("latitude").isNotNull && col("longitude").isNotNull) // F3 (:450)
       .select(col("name").as("location_name"), col("province_name"),
         col("latitude"), col("longitude"))
+      // a snapshot is one small file: without this the fetch is one task
+      // and every request waits on the one before it
+      .repartition(spark.sparkContext.defaultParallelism)
 
     val fetched = coords
       .as[(String, Option[String], Double, Double)]
@@ -73,30 +100,20 @@ object WeatherIngest {
       // (`:334-335` logs the error and skips). Fixture connectors always
       // return a body, so this filter is a no-op in offline runs.
       .filter(col("raw").isNotNull)
-      // Both outputs (facts, missed audit) consume this relation; persist
-      // so the connector fires exactly once per row per pass no matter
-      // how many outputs the caller evaluates — a lazy recompute would
-      // double-spend the API quota. ContextCleaner unpersists it once
-      // the frames are unreachable.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val shredded = shred(fetched)
       .withColumn("data_datetime", lit(now)) // ingestion time (:282)
       .withColumn("inserted_at", lit(now))   // GETDATE() default (:96)
 
     // J3: point lookup → broadcast equi-join on (location_name, province_name);
-    // dim keys renamed so the joined schema stays duplicate-free
+    // dim keys renamed so the joined schema stays duplicate-free. A left
+    // join, so the reference's log-on-miss (:292-293) is a null id row.
     val dim = snapshot.select(
       col("location_id"), col("name").as("dim_name"), col("province_name").as("dim_prov"))
-    def cond(left: DataFrame) =
-      left("location_name") === dim("dim_name") && left("province_name") <=> dim("dim_prov")
-    val facts = shredded.join(broadcast(dim), cond(shredded), "inner")
+    shredded.join(broadcast(dim),
+        shredded("location_name") === dim("dim_name") && shredded("province_name") <=> dim("dim_prov"),
+        "left")
       .drop("dim_name", "dim_prov")
-
-    // the reference's log-on-miss (:292-293) as a left_anti audit relation
-    val missed = shredded.join(broadcast(dim), cond(shredded), "left_anti")
-      .select(col("location_name"), col("province_name"))
-
-    (facts, missed)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 }

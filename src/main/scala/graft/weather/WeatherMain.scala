@@ -2,12 +2,15 @@ package graft.weather
 
 import java.net.URLEncoder
 import java.sql.Timestamp
+import java.util.concurrent.TimeoutException
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,7 +26,9 @@ import graft.sources.{Http, JsonSource, TableStore, Throttle}
   *   incremental-skip gate (F2, `:389-399`) →
   *   geocode changed rows, throttled (U1-U3, `:405-419`) →
   *   snapshot replace (K2/K3, `:426-430`) →
-  *   weather fetch + shred + id lookup + append (S4/J3/K4, `:436-453`).
+  *   weather fetch + shred + id lookup + append (S4/J3/K4, `:436-453`),
+  *   the fetch spread across the cores and the report's fact and miss
+  *   counts observed on the append itself.
   *
   * Every seam is the library piece the jobs already expose —
   * [[graft.sources.Http]] for transport, [[graft.sources.JsonSource]]
@@ -78,13 +83,20 @@ object WeatherMain {
       weatherPerSecCluster: Option[Double] = None,
       executorJvms: Option[Int] = None)
 
-  /** What one run did — the reference's log lines as data. */
+  /** What one run did — the reference's log lines as data — and the
+    * driver-side wall seconds of its phases: the change gate (feed check
+    * and diff), the refresh (geocode and snapshot replace; 0 when
+    * skipped) and stage C (fetch and append).
+    */
   final case class Report(
       refreshed: Boolean,
       locations: Long,
       resolved: Long,
       factsAppended: Long,
-      missedLookups: Long)
+      missedLookups: Long,
+      diffSeconds: Double = 0.0,
+      refreshSeconds: Double = 0.0,
+      appendSeconds: Double = 0.0)
 
   private lazy val mapper = new ObjectMapper()
 
@@ -151,28 +163,59 @@ object WeatherMain {
         .map(Throttle.perJvmShare(_, jvms)).getOrElse(cfg.weatherPerSec))
   }
 
+  /** How long [[appendTick]] waits for its append's observed counts
+    * once the append has returned. The listener bus delivers them
+    * asynchronously, a few milliseconds after the job ends; a result
+    * still missing after this fails the tick instead of hanging it.
+    */
+  private[weather] val ObservedCountsWait = 30.seconds
+
   /** Stage C of a tick (`:436-453`): fetch+shred on executors,
     * broadcast id lookup, IDENTITY-continuing `weather_id`,
-    * day-partitioned bulk append to `factsPath`. Returns the appended
-    * facts and the miss audit. [[run]] and the streaming tick
-    * ([[WeatherStream.ingestStream]]) both append through it, so every
-    * fact row carries a dense id.
+    * day-partitioned bulk append to `factsPath`. Returns (facts
+    * appended, missed lookups), both counted by the append job itself
+    * (an `Observation` on the resolved rows, the write's side output)
+    * instead of by re-running the fetch's lineage. [[run]] and the
+    * streaming tick ([[WeatherStream.ingestStream]]) both append
+    * through it, so every fact row carries a dense id.
     */
   private[weather] def appendTick(spark: SparkSession, snapshot: DataFrame,
       fetchJson: (Double, Double) => String, factsPath: String,
-      now: Timestamp): (DataFrame, DataFrame) = {
-    val (facts, missed) = WeatherIngest.ingest(spark, snapshot, fetchJson, now)
-    val baseId = TableStore.readSnapshot(spark, factsPath, Schemas.weatherData)
-      .agg(coalesce(max(col("weather_id")), lit(0L))).head().getLong(0)
-    // reference-scale id assignment (one window over a 146-row batch);
-    // a fact-scale batch would use the overwriteSnapshotLarge pattern
-    val ordered = facts.withColumn("weather_id",
-      (row_number().over(Window.orderBy(col("location_name"), col("province_name")))
-        .cast("long")) + lit(baseId))
-      .select(Schemas.weatherData.fieldNames.map(col).toSeq: _*)
-    TableStore.appendFacts(
-      ordered.withColumn("day", to_date(col("data_datetime"))), factsPath, Seq("day"))
-    (ordered, missed)
+      now: Timestamp): (Long, Long) = {
+    val joined = WeatherIngest.resolve(spark, snapshot, fetchJson, now)
+    try {
+      val baseId = TableStore.readSnapshot(spark, factsPath, Schemas.weatherData)
+        .agg(coalesce(max(col("weather_id")), lit(0L))).head().getLong(0)
+      val (factsCount, missedCount) =
+        (count(col("location_id")).as("facts"), count_if(col("location_id").isNull).as("missed"))
+      val obs = Observation()
+      val facts = joined.observe(obs, factsCount, missedCount)
+        .filter(col("location_id").isNotNull)
+      // reference-scale id assignment (one window over a 146-row batch);
+      // a fact-scale batch would use the overwriteSnapshotLarge pattern
+      val ordered = facts.withColumn("weather_id",
+        (row_number().over(Window.orderBy(col("location_name"), col("province_name")))
+          .cast("long")) + lit(baseId))
+        .select(Schemas.weatherData.fieldNames.map(col).toSeq: _*)
+      TableStore.appendFacts(
+        ordered.withColumn("day", to_date(col("data_datetime"))), factsPath, Seq("day"))
+      val observed = try Await.result(obs.future, ObservedCountsWait) catch {
+        case e: TimeoutException => throw new IllegalStateException(
+          s"the append's observed counts did not arrive within $ObservedCountsWait", e)
+      }
+      // an empty observed input (no row with coordinates) can complete
+      // the observation with an EMPTY row rather than zeros; count the
+      // still-persisted relation exactly then (it is empty or cached)
+      val row = if (observed.length == 2) observed
+        else joined.agg(factsCount, missedCount).head()
+      (row.getLong(0), row.getLong(1))
+    } finally joined.unpersist()
+  }
+
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
   }
 
   /** One full pipeline run (the reference's `main`). `now` is injected
@@ -199,28 +242,27 @@ object WeatherMain {
     // J2 + F2: refresh only when the compare columns changed
     // (`:383-399`) AND the feed actually delivered rows (outage guard —
     // fix-forward, see object doc).
-    val feedUp = !cities.isEmpty
-    val refreshed = feedUp &&
-      LocationDiff.hasChanges(fresh, old, Schemas.compareColumns)
-    if (refreshed) {
+    val (refreshed, diffSeconds) = timed(!cities.isEmpty &&
+      LocationDiff.hasChanges(fresh, old, Schemas.compareColumns))
+    val (_, refreshSeconds) = timed(if (refreshed) {
       val snap = LocationRefresh.refresh(spark, cities, provinces, old, geocoder(cfg))
       // K2/K3: full replace with dense ids reseeded over the stable key
       // — a new generation, because the refresh's carry-forward lineage
       // reads the snapshot being replaced.
       TableStore.replaceSnapshot(snap.drop("location_id"), cfg.snapshotPath,
         "location_id", Seq("name", "province_name"))
-    }
+    })
 
     // C: ingest weather over the (possibly refreshed) snapshot
     val snapshot = TableStore.readSnapshot(spark, cfg.snapshotPath, Schemas.locationsSnapshot)
-    val (ordered, missed) = appendTick(spark, snapshot, weatherFetcher(cfg), cfg.factsPath, now)
+    val ((factsAppended, missedLookups), appendSeconds) =
+      timed(appendTick(spark, snapshot, weatherFetcher(cfg), cfg.factsPath, now))
+    // a dim-scale table: one task aggregates it, no exchange, one job
+    val sizes = snapshot.coalesce(1).agg(count(lit(1)),
+      count_if(col("latitude").isNotNull && col("longitude").isNotNull)).head()
 
-    Report(
-      refreshed = refreshed,
-      locations = snapshot.count(),
-      resolved = snapshot.filter(col("latitude").isNotNull && col("longitude").isNotNull).count(),
-      factsAppended = ordered.count(),
-      missedLookups = missed.count())
+    Report(refreshed, locations = sizes.getLong(0), resolved = sizes.getLong(1),
+      factsAppended, missedLookups, diffSeconds, refreshSeconds, appendSeconds)
   }
 
   // ---- spark-submit entry (the reference's `__main__` guard,
@@ -314,7 +356,9 @@ object WeatherMain {
             // the reference's end-of-run log lines as one parseable line
             println(s"[weather] refreshed=${r.refreshed} locations=${r.locations} " +
               s"resolved=${r.resolved} factsAppended=${r.factsAppended} " +
-              s"missedLookups=${r.missedLookups}")
+              s"missedLookups=${r.missedLookups} " +
+              f"diff_s=${r.diffSeconds}%.3f refresh_s=${r.refreshSeconds}%.3f " +
+              f"append_s=${r.appendSeconds}%.3f")
             0
           case scala.util.Failure(e) =>
             System.err.println(s"[weather] run failed: $e"); 1

@@ -1,6 +1,7 @@
 package graft.weather
 
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -143,4 +144,67 @@ class JobsSpec extends SparkSpec {
       new Timestamp(1700000000L * 1000)) // epoch→UTC ts (C5)
     assert(r.getAs[Long]("location_id") === 1L)
   }
+
+  test("weather fetch fans out across the cores and fetches each resolved row once") {
+    val snapshot = ((1L to 16L).map(i =>
+        (i, s"Town $i", Some("Cebu"), Some(10.0 + i / 100.0), Some(123.0))) :+
+      ((17L, "NoCoords", Some("Cebu"), None: Option[Double], None: Option[Double])))
+      .toDF("location_id", "name", "province_name", "latitude", "longitude")
+      .coalesce(1) // one partition, as a one-file snapshot reads
+    val json =
+      """{"weather":[{"main":"Clear","description":"clear sky"}],"main":{"temp":30.0},
+        |"sys":{"sunrise":1700000000,"sunset":1700043200}}""".stripMargin.replaceAll("\n", "")
+    JobsSpec.fetches.reset()
+    val slowFetch: (Double, Double) => String =
+      (_, _) => JobsSpec.fetches.track { Thread.sleep(20); json }
+    val (facts, missed) = WeatherIngest.ingest(spark, snapshot, slowFetch,
+      Timestamp.valueOf("2024-12-20 00:00:00"))
+    assert(facts.count() === 16)
+    assert(missed.isEmpty)
+    assert(JobsSpec.fetches.calls.get() === 16) // resolved rows, each fetched once
+    assert(JobsSpec.fetches.peak.get() >= 2, "the fetch ran one call at a time")
+  }
+
+  test("geocoding fans out across the cores and geocodes each changed row once") {
+    val towns = (1 to 16).map(i =>
+        (f"$i%04d", s"Town $i", None: Option[String], false, "p1", "d1", "r1", "luzon", f"$i%010d"))
+      .toDF("code", "name", "oldName", "isCapital", "provinceCode",
+        "districtCode", "regionCode", "islandGroupCode", "psgc10DigitCode")
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      LocationRefresh.mergeCitiesProvinces(towns, provinces).schema
+        .add("latitude", "double").add("longitude", "double"))
+    JobsSpec.geocodes.reset()
+    // a candidate without a state is accepted as is: the first name variant resolves
+    val slowGeocoder: String => Seq[GeoCandidate] = q => JobsSpec.geocodes.track {
+      Thread.sleep(20); Seq(GeoCandidate(q, 14.0, 121.0, "PH", None))
+    }
+    val snap = LocationRefresh.refresh(spark, towns, provinces, empty, slowGeocoder).collect()
+    assert(snap.length === 16)
+    assert(JobsSpec.geocodes.calls.get() === 16) // resolved rows, each geocoded once
+    assert(JobsSpec.geocodes.peak.get() >= 2, "the geocode ran one call at a time")
+  }
+}
+
+object JobsSpec {
+
+  /** Counts the calls of a connector and the most of them in flight at
+    * once across task threads. Lives in an object so the connector
+    * closures reach one JVM-wide copy instead of a deserialised one.
+    */
+  final class Concurrency {
+    val calls = new AtomicInteger
+    val peak = new AtomicInteger
+    private val inflight = new AtomicInteger
+
+    def reset(): Unit = { calls.set(0); peak.set(0); inflight.set(0) }
+
+    def track[A](body: => A): A = {
+      calls.incrementAndGet()
+      peak.accumulateAndGet(inflight.incrementAndGet(), math.max)
+      try body finally inflight.decrementAndGet()
+    }
+  }
+
+  val fetches = new Concurrency
+  val geocodes = new Concurrency
 }
