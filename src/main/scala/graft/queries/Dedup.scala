@@ -697,12 +697,15 @@ object Dedup {
         val docs = shingleDocs(s, dir)
         val cut = docs.agg(expr("percentile(doc_id, 0.75)"))
           .head().getDouble(0).toLong
-        buildPpIndexOver(s, docs.filter(col("doc_id") <= cut), t)
         // stage the upper quarter as (doc_id, text) — the ingest owns
-        // the shingling, exactly as a production stream would
+        // the shingling, exactly as a production stream would. The
+        // staging write reads nothing the bootstrap build writes, so
+        // the two overlap.
         val raw = Tables(s, dir, "documents").select("doc_id", "text")
-        raw.filter(col("doc_id") > cut).repartition(3)
-          .write.mode("overwrite").parquet(stage)
+        graft.Overlap.both(s)(
+          buildPpIndexOver(s, docs.filter(col("doc_id") <= cut), t),
+          raw.filter(col("doc_id") > cut).repartition(3)
+            .write.mode("overwrite").parquet(stage))
         val q = graft.streaming.IndexIngest.start(
           s.readStream.schema(raw.schema)
             .option("maxFilesPerTrigger", "1").parquet(stage),

@@ -179,10 +179,19 @@ object Similarity {
     * (the streaming maintenance loop appends under a frozen book every
     * micro-batch) pay it once instead of once per call.
     */
-  private[graft] def collectBook(cents: DataFrame): Seq[(Long, Seq[Double], Double)] =
-    cents.select(col("c_id"), col("cv"), col("cn"))
-      .orderBy("c_id").collect()
+  private[graft] def collectBook(cents: DataFrame): Seq[(Long, Seq[Double], Double)] = {
+    // sorted on the driver: a range sort of an nlist-row relation costs
+    // a sampling job plus a sort job per call for nothing
+    val book = cents.select(col("c_id"), col("cv"), col("cn")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
+      .sortBy(_._1)
+    // the strictly-greater tie-break (and every c_id-keyed lookup)
+    // assumes one centroid per id: a duplicate would be served silently
+    val dup = book.map(_._1).sliding(2).collectFirst { case Seq(a, b) if a == b => a }
+    require(dup.isEmpty, s"collectBook: c_id ${dup.get} appears more than " +
+      "once in the codebook — centroid ids must be distinct")
+    book
+  }
 
   /** [[assignTo]] against an already-collected book. */
   private[graft] def assignToBook(e: DataFrame,
@@ -192,16 +201,20 @@ object Similarity {
         col("nc.c_cos").as("c_cos"))
 
   /** Lloyd-trained IVF centroids: start from the deterministic
-    * first-`nlist` seed and run `iters` refinement steps, each one
-    * shuffle — assign every vector to its nearest centroid (broadcast
-    * argmax, the ivfAssign shape), then recompute each centroid as its
-    * cluster's MEAN vector via a mergeable per-(c_id, dim) sum/count
-    * aggregate (posexplode → partial+final agg; at 100 TB this is the
-    * classic distributed k-means step: shuffle rows ≈ nlist·dim, not
-    * corpus size, thanks to map-side combine). Spherical k-means on
-    * unit-normalized data: the mean maximizes within-cluster cosine,
-    * and cosPre's norm division makes explicit renormalization
-    * unnecessary. An emptied cluster keeps its previous centroid.
+    * first-`nlist` seed and run `iters` refinement steps, each ONE
+    * aggregate job — assign every vector to its nearest centroid
+    * (the broadcast argmax kernel, the ivfAssign shape), then recompute
+    * each centroid as its cluster's MEAN vector via a mergeable
+    * per-(c_id, dim) sum/count aggregate (posexplode → partial+final
+    * agg; at 100 TB this is the classic distributed k-means step:
+    * shuffle rows ≈ nlist·dim, not corpus size, thanks to map-side
+    * combine), collected as the book's nlist·dim values. Spherical
+    * k-means on unit-normalized data: the mean maximizes
+    * within-cluster cosine, and cosPre's norm division makes explicit
+    * renormalization unnecessary. An emptied cluster keeps its
+    * previous centroid. The book travels between steps as a driver
+    * `Seq` — the k-means codebook sync every distributed Lloyd pays,
+    * and nothing more.
     *
     * r17 (verdict ask #3): training is DETERMINISTIC GIVEN THE CORPUS
     * — bit-stable across partitionings, executor counts, and task
@@ -216,10 +229,11 @@ object Similarity {
     * cluster before overflow (a 100 TB corpus is ~1e11 vectors).
     * Determinism is what makes trained codebooks REUSABLE artifacts:
     * a rebuild reproduces the book bit-for-bit (IvfTrainSpec pins
-    * bit-equality across repartitionings), so suite sessions share one
-    * build (v10d/v12b) and production caches books by corpus version.
-    * Downstream, a SAVED centroid relation keeps assignment
-    * deterministic exactly as before (the v02/v08 contract).
+    * bit-equality across repartitionings, and the bits themselves), so
+    * suite sessions share one build (v10d/v12b) and production caches
+    * books by corpus version. Downstream, a SAVED centroid relation
+    * keeps assignment deterministic exactly as before (the v02/v08
+    * contract).
     */
   def ivfTrain(s: SparkSession, dir: String, nlist: Int = 16,
       iters: Int = 3): DataFrame = ivfTrainOver(s, emb(s, dir), nlist, iters)
@@ -230,38 +244,34 @@ object Similarity {
     */
   private[queries] def ivfTrainOver(s: SparkSession, e: DataFrame,
       nlist: Int = 16, iters: Int = 3): DataFrame = {
-    var cents = centroids(e, nlist)
+    val seed = centroids(e, nlist)
+    if (iters <= 0) return seed
+    var book = collectBook(seed)
     for (_ <- 0 until iters) {
-      val assigned = assignTo(e, cents).select(col("c_id"), col("v"), col("nrm"))
       // spherical: average the UNIT vectors (a raw mean would weight
       // long vectors and void the cosine-objective ascent guarantee);
-      // decimal sum = add-order-insensitive (see the class note)
-      val means = assigned
+      // decimal sum = add-order-insensitive (see the class note). One
+      // narrow sum per (c_id, pos), not a row of dim sums per c_id: the
+      // dim-wide decimal aggregate yields the same bits but took about
+      // 1.7 s longer on a fresh JVM (4-core VM, sf0.01, nlist 16, 3
+      // steps): its generated code is that large.
+      val means = assignToBook(e, book)
         .select(col("c_id"), col("nrm"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy("c_id", "pos").agg(
           (sum((col("x") / col("nrm")).cast("decimal(28,20)")) /
             count(lit(1))).cast("double").as("m"))
-        .groupBy("c_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("c_id"),
-          expr("transform(pm, p -> p.m)").as("cv"))
-        .withColumn("cn", norm(col("cv")))
-        .filter(col("cn") > 0)
-      // emptied (or degenerate) clusters keep their previous centroid
-      val next = means.unionByName(
-        cents.join(means.select("c_id"), Seq("c_id"), "left_anti"))
-      // MATERIALIZE each iteration (ADVICE r10): `next` references the
-      // previous cents ~3× (assignTo's crossJoin, means, the left_anti
-      // branch), so an unpersisted loop grows the plan ~3^iters and
-      // recomputes every prior assignment pass. The centroid relation
-      // is nlist rows — collect-and-parallelize truncates the lineage
-      // to a LocalRelation at the cost of one nlist-row collect per
-      // iteration, exactly the k-means driver-sync every distributed
-      // Lloyd implementation pays.
-      cents = s.createDataFrame(
-        java.util.Arrays.asList(next.collect(): _*), next.schema)
+        .collect()
+        .groupBy(_.getLong(0)).map { case (id, rs) =>
+          val cv = rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
+          // norm(cv): the DotProduct kernel's left fold, then sqrt
+          id -> (id, cv, math.sqrt(cv.foldLeft(0.0)((acc, x) => acc + x * x)))
+        }
+      // emptied (or degenerate) clusters keep their previous centroid;
+      // the book stays in ascending c_id order
+      book = book.map(c => means.get(c._1).filter(_._3 > 0).getOrElse(c))
     }
-    cents
+    s.createDataFrame(java.util.Arrays.asList(book.map { case (id, cv, cn) =>
+      org.apache.spark.sql.Row(id, cv, cn) }: _*), seed.schema)
   }
 
   /** Mean best-centroid cosine over the corpus — the spherical k-means
@@ -336,25 +346,27 @@ object Similarity {
 
   /** [[appendToIvfIndex]]'s write half, for rows already disjoint from
     * the store: assign under the collected codebook `book` and append.
-    * The streaming ingest ([[graft.streaming.IndexIngest]]) collects the
-    * frozen book once per stream and calls this every micro-batch.
+    * Returns the number of rows appended, counted by the write itself
+    * ([[graft.sources.AtomicSwap.countedWrite]]). The streaming ingest
+    * ([[graft.streaming.IndexIngest]]) collects the frozen book once
+    * per stream and calls this every micro-batch.
     */
   private[graft] def writeIvfAppend(s: SparkSession,
       newVecs: DataFrame, path: String,
-      book: Seq[(Long, Seq[Double], Double)]): Unit = {
+      book: Seq[(Long, Seq[Double], Double)]): Long = {
     val e = newVecs
       .select(col("vec_id"), col("label"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
     // generation resolved ONCE; commitAppend fails loudly if a compact
     // raced the append (r18, ADVICE: writers serialized, readers safe)
     val intoDir = graft.sources.AtomicSwap.dataDir(s, path)
-    assignToBook(e, book)
-      .select("vec_id", "c_id", "v", "nrm")
-      .repartition(col("c_id"))
-      .write.mode("append").partitionBy("c_id")
-      .parquet(intoDir)
-    // manifest bump last — the durable record that the append committed
-    graft.sources.AtomicSwap.commitAppend(s, path, intoDir)
+    val n = graft.sources.AtomicSwap.countedWrite(assignToBook(e, book)
+        .select("vec_id", "c_id", "v", "nrm").repartition(col("c_id")))(
+      _.write.mode("append").partitionBy("c_id").parquet(intoDir))
+    // manifest bump last — the durable record that the append
+    // committed; an empty append wrote no file and records nothing
+    if (n > 0) graft.sources.AtomicSwap.commitAppend(s, path, intoDir)
+    n
   }
 
   /** REBUILD the float IVF index from its own persisted state under a
@@ -408,9 +420,7 @@ object Similarity {
     */
   def twoLevelAssign(s: SparkSession, dir: String, fine: DataFrame,
       w: Int, trainedRouter: Boolean = false): DataFrame = {
-    val book = fine.select(col("c_id"), col("cv"), col("cn"))
-      .orderBy("c_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
+    val book = collectBook(fine)
     val nSup = math.ceil(math.sqrt(book.size.toDouble)).toInt
     val supers =
       if (trainedRouter) trainSupers(book, nSup) else book.take(nSup)
@@ -567,9 +577,7 @@ object Similarity {
   def buildTwoLevelIndex(s: SparkSession, dir: String, path: String,
       nlist: Int): Unit = {
     val e = emb(s, dir)
-    val book = centroids(e, nlist).select(col("c_id"), col("cv"), col("cn"))
-      .orderBy("c_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
+    val book = collectBook(centroids(e, nlist))
     writeTwoLevelOf(s, book, path)
   }
 
@@ -591,10 +599,7 @@ object Similarity {
     */
   def buildTwoLevelIndexTrained(s: SparkSession, dir: String, path: String,
       nlist: Int, iters: Int = 3): Unit = {
-    val book = ivfTrain(s, dir, nlist, iters)
-      .select(col("c_id"), col("cv"), col("cn"))
-      .orderBy("c_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
+    val book = collectBook(ivfTrain(s, dir, nlist, iters))
     writeTwoLevelOf(s, book, path)
   }
 
@@ -967,12 +972,14 @@ object Similarity {
 
   /** [[appendToIvfAdcIndex]]'s write half: load the append's FROZEN
     * inputs — PQ codebook, coarse routing book — once, and return the
-    * encode-and-append for rows already disjoint from the store. The
-    * streaming ingest ([[graft.streaming.IndexIngest]]) builds it once
-    * per stream and calls it every micro-batch.
+    * encode-and-append for rows already disjoint from the store, which
+    * returns the number of rows it appended ([[writeIvfAppend]]'s
+    * counted write). The streaming ingest
+    * ([[graft.streaming.IndexIngest]]) builds it once per stream and
+    * calls it every micro-batch.
     */
   private[graft] def ivfAdcAppendWriter(s: SparkSession,
-      path: String): DataFrame => Unit = {
+      path: String): DataFrame => Long = {
     val (cb, m, k, centsFlat, cids) = graft.sources.PqIndex.codebook(s, path)
     require(centsFlat.nonEmpty,
       s"appendToIvfAdcIndex: $path is a flat PQ index, not IVFADC")
@@ -987,15 +994,16 @@ object Similarity {
       // generation resolved ONCE; commitAppend fails loudly if a compact
       // raced the append (r18, ADVICE: writers serialized, readers safe)
       val intoDir = graft.sources.AtomicSwap.dataDir(s, path)
-      assign.join(cIdxDf, "c_id")
-        .select(col("vec_id"), col("c_id"),
-          pqEncodeResidual(col("v"), col("nrm"), col("c_idx"),
-            cb, centsFlat, m, k).as("pq"))
-        .repartition(col("c_id"))
-        .write.mode("append").partitionBy("c_id")
-        .parquet(intoDir)
-      // manifest bump last — the durable record that the append committed
-      graft.sources.AtomicSwap.commitAppend(s, path, intoDir)
+      val n = graft.sources.AtomicSwap.countedWrite(assign.join(cIdxDf, "c_id")
+          .select(col("vec_id"), col("c_id"),
+            pqEncodeResidual(col("v"), col("nrm"), col("c_idx"),
+              cb, centsFlat, m, k).as("pq"))
+          .repartition(col("c_id")))(
+        _.write.mode("append").partitionBy("c_id").parquet(intoDir))
+      // manifest bump last — the durable record that the append
+      // committed; an empty append wrote no file and records nothing
+      if (n > 0) graft.sources.AtomicSwap.commitAppend(s, path, intoDir)
+      n
     }
   }
 
@@ -1012,10 +1020,7 @@ object Similarity {
       residual: Boolean, nlist: Int, coarse: Option[DataFrame] = None)
       : (DataFrame, Array[Double], Array[Array[Double]], Seq[Long]) = {
     val e = emb(s, dir)
-    val book = coarse.getOrElse(centroids(e, nlist))
-      .select(col("c_id"), col("cv"), col("cn"))
-      .orderBy("c_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
+    val book = collectBook(coarse.getOrElse(centroids(e, nlist)))
     val centsUnit = book.map { case (_, cv, cn) => cv.map(_ / cn).toArray }.toArray
     val centsFlat: Array[Double] = centsUnit.flatten
     // residual training sample: each hash-stratified row reduced
@@ -2042,23 +2047,26 @@ object Similarity {
       val e = emb(s, dir)
       val eb = e.filter(col("vec_id") <= cut)
       val book0 = centroids(eb, 16)
-      graft.sources.IvfIndex.writeWithCodebook(
-        graft.SharedProjections.reuse("v15_boot_assign", dir)(
-          assignTo(eb, book0).select("vec_id", "c_id", "v", "nrm")),
-        book0, path)
+      val upper = raw.filter(col("vec_id") > cut)
+        .select("vec_id", "label", "embedding")
+      // the bootstrap build and the upper slice's staging write read
+      // neither's output, so they overlap
+      val (_, stage) = graft.Overlap.both(s)(
+        graft.sources.IvfIndex.writeWithCodebook(
+          graft.SharedProjections.reuse("v15_boot_assign", dir)(
+            assignTo(eb, book0).select("vec_id", "c_id", "v", "nrm")),
+          book0, path),
+        graft.SharedProjections.reuseArtifact("v15_stage", dir) {
+          val d = scratchPath("v15-stage", dir)
+          val hp = new org.apache.hadoop.fs.Path(d)
+          hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+          upper.repartition(3).write.mode("overwrite").parquet(d)
+          d
+        })
       // pinned reader: file lists (index + codebook) resolve HERE
       val qPred = col("vec_id") >= 100 && col("vec_id") < 110
       val pinned = knnIvfOver(e, graft.sources.IvfIndex.codebook(s, path),
         graft.sources.IvfIndex.read(s, path), qPred, 2)
-      val upper = raw.filter(col("vec_id") > cut)
-        .select("vec_id", "label", "embedding")
-      val stage = graft.SharedProjections.reuseArtifact("v15_stage", dir) {
-        val d = scratchPath("v15-stage", dir)
-        val hp = new org.apache.hadoop.fs.Path(d)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-        upper.repartition(3).write.mode("overwrite").parquet(d)
-        d
-      }
       val rebuilds = new java.util.concurrent.atomic.AtomicInteger(0)
       val q = graft.streaming.IndexIngest.start(
         s.readStream.schema(upper.schema)

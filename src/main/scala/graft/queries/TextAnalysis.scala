@@ -412,19 +412,12 @@ object TextAnalysis {
     else if (plainIds.isEmpty) half(prunedIds, prune = true)
     else {
       // the two halves are independent plans over disjoint q_ids; their
-      // bounded term-collects are the serial driver cost here, so run
-      // them on two threads (optimization guide §2.6 — overlap
-      // independent jobs; job groups/descriptions are thread-local and
-      // DataFrame construction is thread-safe). Same two actions, same
-      // results — they just no longer wait on each other.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fPruned = Future(half(prunedIds, prune = true))
-      val fPlain = Future(half(plainIds, prune = false))
-      Await.result(fPruned, Duration.Inf)
-        .unionByName(Await.result(fPlain, Duration.Inf))
-        .orderBy("q_id", "rank")
+      // bounded term-collects are the serial driver cost here, so they
+      // overlap. Same two actions, same results — they just no longer
+      // wait on each other.
+      val (pruned, plain) = graft.Overlap.both(s)(
+        half(prunedIds, prune = true), half(plainIds, prune = false))
+      pruned.unionByName(plain).orderBy("q_id", "rank")
     }
   }
 

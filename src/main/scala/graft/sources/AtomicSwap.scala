@@ -214,11 +214,15 @@ object AtomicSwap {
   /** Write a NEW GENERATION of each of `parts` of the artifact at `root`
     * and make them current together. Each writer receives its part's
     * next generation directory and must commit a complete data
-    * directory there; the ONE manifest publish afterwards is the commit
+    * directory there. The writers run concurrently ([[graft.Overlap]]:
+    * their directories are disjoint), a single part inline; the ONE
+    * manifest publish after every writer has finished is the commit
     * point. It names the new generations of `parts` and the current
     * ones of every part not rewritten, so a compact copies nothing it
-    * does not rewrite. A writer that throws leaves the published
-    * manifest, and so every reader, on the old generations.
+    * does not rewrite. A writer that throws — the first failure is
+    * rethrown once all have finished — leaves the published manifest,
+    * and so every reader, on the old generations; the other parts'
+    * finished directories are strays the next write prunes.
     *
     * Per rewritten part, the `retain` newest superseded generations
     * survive — a reader that resolved one of them before the publish
@@ -240,12 +244,15 @@ object AtomicSwap {
     val rp = new Path(root)
     val cur = current(fs, rp).getOrElse(Map.empty)
     def curNum(part: String) = cur.get(part).flatMap(_.stripPrefix("g").toIntOption)
-    val next = parts.map { case (part, write) =>
-      val pr = partRoot(rp, part)
-      val n = (numsOf(fs, pr, "g", dirs = true) ++ curNum(part) :+ -1).max + 1
-      write(new Path(pr, s"g$n").toString)
-      part -> n
+    val next = parts.map { case (part, _) =>
+      part -> ((numsOf(fs, partRoot(rp, part), "g", dirs = true) ++
+        curNum(part) :+ -1).max + 1)
     }
+    // the parts write disjoint directories, so they run at the same
+    // time; publish waits for every one and runs only if all succeeded
+    graft.Overlap.all(spark)(parts.zip(next).map { case ((part, write), (_, n)) =>
+      () => write(new Path(partRoot(rp, part), s"g$n").toString)
+    }: _*)
     publish(fs, rp, cur ++ next.map { case (part, n) => part -> s"g$n" })
     // per part, keep the new generation plus the `retain` newest
     // COMMITTED ones (numbers <= current — anything between current and
@@ -274,6 +281,33 @@ object AtomicSwap {
       .limit(1).collect()
     require(dup.isEmpty, s"$op: $key ${dup.head.get(0)} is already " +
       s"indexed at $at — appended ids must be disjoint; rebuild instead")
+  }
+
+  /** How long an append waits for its write's observed count: the
+    * observation completes on the listener bus right after the write
+    * job, so hitting this bound means the bus is stuck.
+    */
+  private val ObservedCountWait = scala.concurrent.duration.Duration(30, "s")
+
+  /** Run an append's `write` over `rows` and return the number of rows
+    * it wrote, counted by the write job itself (an `Observation`, the
+    * write's side output) instead of by a separate count job over the
+    * same lineage. `rows` must be the write's input after its last
+    * repartition: the count then lives in the result stage, whose
+    * accumulator updates Spark applies once per partition, so a retried
+    * map task cannot count twice. An empty input can complete the
+    * observation with an EMPTY row rather than a zero; that row is
+    * never read as 0 — one exact count of `rows` decides instead.
+    */
+  def countedWrite(rows: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(rows.observe(obs, org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)).as("n")))
+    val r = try scala.concurrent.Await.result(obs.future, ObservedCountWait) catch {
+      case e: java.util.concurrent.TimeoutException => throw new IllegalStateException(
+        s"the append's observed count did not arrive within $ObservedCountWait", e)
+    }
+    if (r.length == 1) r.getLong(0) else rows.count()
   }
 
   /** Record an append into the current generations — ONE manifest bump

@@ -302,14 +302,16 @@ object PpIndex {
   /** Append pre-ranked base rows into the live generation with the
     * SAME bucket spec as [[write]] — each append adds one file per
     * touched bucket, then bumps the pointer (the durable record that
-    * the append committed). Bucket pruning and the exchange-free
-    * candidate self-join survive appends (bucket membership is a
-    * function of `s` alone); per-bucket SORTEDNESS does not (Spark
-    * only claims sort order for single-file buckets), so post-append
-    * plans carry in-partition Sorts — still zero shuffle
-    * (PpAppendSpec).
+    * the append committed). Returns the number of rows appended,
+    * counted by the write itself ([[AtomicSwap.countedWrite]]); an
+    * empty append writes no file and bumps nothing. Bucket pruning and
+    * the exchange-free candidate self-join survive appends (bucket
+    * membership is a function of `s` alone); per-bucket SORTEDNESS
+    * does not (Spark only claims sort order for single-file buckets),
+    * so post-append plans carry in-partition Sorts — still zero
+    * shuffle (PpAppendSpec).
     */
-  def append(rows: DataFrame, spark: SparkSession, table: String): Unit = {
+  def append(rows: DataFrame, spark: SparkSession, table: String): Long = {
     val resolved = current(spark, table)
     val live = liveTable(spark, table)
     // the LIVE layout's count (r20): an append must match the build's
@@ -318,25 +320,28 @@ object PpIndex {
     // repartition on the bucket key (r20, the writeBucketed argument):
     // one file per TOUCHED bucket per append, instead of one per
     // (input partition × touched bucket)
-    rows.select("doc_id", "s", "rk", "n")
-      .repartition(n, org.apache.spark.sql.functions.col("s"))
-      .write.mode("append")
-      .format("parquet").bucketBy(n, "s").sortBy("s")
-      .saveAsTable(live)
-    // the pointer bump commits against the generation the append wrote
-    // into — a compact that raced this append would have snapshotted
-    // the pre-append table and the NEXT compact drops it, losing the
-    // appended rows silently; writers (append vs compact) must be
-    // serialized, and a violation fails loudly here (r18, ADVICE —
-    // the BmIndex/commitAppend contract applied to the catalog tier)
-    val cur = current(spark, table)
-    require(cur == resolved,
-      s"PpIndex.append($table): appended into $live but the live " +
-        s"generation is now ${cur.getOrElse(Map.empty).values.mkString(", ")} — " +
-        "a compact/rebuild ran concurrently " +
-        "(writers must be serialized; only readers are compact-safe). " +
-        "Re-run the append against the current generation.")
-    publish(spark, table, cur.get)
+    val wrote = AtomicSwap.countedWrite(rows.select("doc_id", "s", "rk", "n")
+        .repartition(n, org.apache.spark.sql.functions.col("s")))(
+      _.write.mode("append")
+        .format("parquet").bucketBy(n, "s").sortBy("s")
+        .saveAsTable(live))
+    if (wrote > 0) {
+      // the pointer bump commits against the generation the append wrote
+      // into — a compact that raced this append would have snapshotted
+      // the pre-append table and the NEXT compact drops it, losing the
+      // appended rows silently; writers (append vs compact) must be
+      // serialized, and a violation fails loudly here (r18, ADVICE —
+      // the BmIndex/commitAppend contract applied to the catalog tier)
+      val cur = current(spark, table)
+      require(cur == resolved,
+        s"PpIndex.append($table): appended into $live but the live " +
+          s"generation is now ${cur.getOrElse(Map.empty).values.mkString(", ")} — " +
+          "a compact/rebuild ran concurrently " +
+          "(writers must be serialized; only readers are compact-safe). " +
+          "Re-run the append against the current generation.")
+      publish(spark, table, cur.get)
+    }
+    wrote
   }
 
   /** Rewrite the index back to one sorted file per bucket — the

@@ -12,9 +12,14 @@ import graft.sources.{BmIndex, IvfIndex, PpIndex, PqIndex}
   * DocPipeline pattern with one `foreachBatch` loop for all of them.
   * Rows arrive as a stream; each micro-batch is prepared into the
   * store's shape, anti-joined on the family's key against the live
-  * store, `localCheckpoint`ed, and appended through the same write half
-  * the family's batch append runs (so placement is exactly a batch
-  * append's: the ingest specs pin stream == batch append). A
+  * store, and appended through the same write half the family's batch
+  * append runs (so placement is exactly a batch append's: the ingest
+  * specs pin stream == batch append). The write is the batch's one job:
+  * the write half counts the rows it wrote as a side output of that
+  * write ([[graft.sources.AtomicSwap.countedWrite]]) instead of running
+  * a count or an emptiness probe first, and records the append only
+  * when rows landed — a batch whose rows all anti-join away writes no
+  * file and bumps no manifest or pointer. A
   * [[Target]] holds only what differs between families; the loop never
   * asks which family it serves. The index must exist before the stream
   * starts: its frozen inputs (codebooks, BM25 ranking statistics,
@@ -56,22 +61,25 @@ object IndexIngest {
     def live(s: SparkSession): DataFrame
     /** Load the write half's frozen inputs (and drift state). */
     def open(s: SparkSession): Unit
-    /** The write half, for rows whose keys the loop proved new. */
-    def append(fresh: DataFrame): Unit
+    /** The write half, for rows whose keys the loop proved new;
+      * returns how many rows it appended.
+      */
+    def append(fresh: DataFrame): Long
     /** Whether the drift policy calls for a rebuild now. */
     def due: Boolean = false
     def rebuild(s: SparkSession): Unit = ()
   }
 
-  /** One micro-batch — the body [[start]] runs for every batch. */
-  def processBatch(batch: DataFrame, t: Target): Unit = {
+  /** One micro-batch — the body [[start]] runs for every batch.
+    * Returns the number of rows it appended.
+    */
+  def processBatch(batch: DataFrame, t: Target): Long = {
     val s = batch.sparkSession
     if (!t.opened) { t.open(s); t.opened = true }
-    val fresh = t.prepare(batch)
-      .join(t.live(s).select(t.key.map(col): _*), t.key, "left_anti")
-      .localCheckpoint(eager = false)
-    t.append(fresh)
+    val n = t.append(t.prepare(batch)
+      .join(t.live(s).select(t.key.map(col): _*), t.key, "left_anti"))
     if (t.due) t.rebuild(s)
+    n
   }
 
   /** Start the ingest of `stream` into `t`. Pass `checkpointDir` to make
@@ -83,7 +91,7 @@ object IndexIngest {
       checkpointDir: Option[String] = None): StreamingQuery = {
     val w = stream.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => processBatch(batch, t) }
+      .foreachBatch { (batch: DataFrame, _: Long) => processBatch(batch, t); () }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
     w.start()
   }
@@ -93,10 +101,10 @@ object IndexIngest {
     * are collected once per stream.
     */
   def ivfAdc(path: String): Target = new Target("vec_id") {
-    private var write: DataFrame => Unit = _
+    private var write: DataFrame => Long = _
     def live(s: SparkSession): DataFrame = PqIndex.read(s, path)
     def open(s: SparkSession): Unit = write = Similarity.ivfAdcAppendWriter(s, path)
-    def append(fresh: DataFrame): Unit = if (fresh.count() > 0) write(fresh)
+    def append(fresh: DataFrame): Long = write(fresh)
   }
 
   /** Float IVF ([[IvfIndex.writeWithCodebook]]), maintained: rows of
@@ -111,7 +119,13 @@ object IndexIngest {
     */
   def ivfMaintained(path: String, threshold: Double,
       retrain: SparkSession => DataFrame,
-      onRebuild: () => Unit = () => ()): Target = new Target("vec_id") {
+      onRebuild: () => Unit = () => ()): IvfMaintained =
+    new IvfMaintained(path, threshold, retrain, onRebuild)
+
+  /** The [[ivfMaintained]] target. */
+  final class IvfMaintained private[IndexIngest] (path: String,
+      threshold: Double, retrain: SparkSession => DataFrame,
+      onRebuild: () => Unit) extends Target("vec_id") {
     private var book: Seq[(Long, Seq[Double], Double)] = _
     // (n_frozen, n_now − n_frozen): appended/(frozen+appended) is the
     // drift probe's (n_now − n_frozen)/n_now exactly
@@ -132,11 +146,15 @@ object IndexIngest {
           "non-empty baseline)")
       book = Similarity.collectBook(IvfIndex.codebook(s, path))
     }
-    def append(fresh: DataFrame): Unit = {
-      val n = fresh.count()
-      if (n > 0) Similarity.writeIvfAppend(fresh.sparkSession, fresh, path, book)
+    def append(fresh: DataFrame): Long = {
+      val n = Similarity.writeIvfAppend(fresh.sparkSession, fresh, path, book)
       appended += n
+      n
     }
+    /** The tracked drift state: (rows frozen at the last build, rows
+      * appended since).
+      */
+    private[streaming] def drift: (Long, Long) = (frozen, appended)
     override def due: Boolean = appended.toDouble / (frozen + appended) > threshold
     override def rebuild(s: SparkSession): Unit = {
       Similarity.rebuildIvfIndex(s, path, retrain(s))
@@ -211,9 +229,10 @@ object IndexIngest {
     protected var sumDlNow = 0L
     def live(s: SparkSession): DataFrame = BmIndex.doclens(s, path)
     def open(s: SparkSession): Unit = ()
-    def append(fresh: DataFrame): Unit = {
+    def append(fresh: DataFrame): Long = {
       val (n, sumDl) = TextAnalysis.writeBm25Append(path, fresh)
       nNow += n; sumDlNow += sumDl
+      n
     }
   }
 
@@ -242,7 +261,7 @@ object IndexIngest {
         Text.distinctShingles(col("text")).as("sh")))
     def live(s: SparkSession): DataFrame = PpIndex.read(s, table)
     def open(s: SparkSession): Unit = frozen = PpIndex.readDf(s, table)
-    def append(fresh: DataFrame): Unit =
-      if (!fresh.isEmpty) PpIndex.append(fresh, fresh.sparkSession, table)
+    def append(fresh: DataFrame): Long =
+      PpIndex.append(fresh, fresh.sparkSession, table)
   }
 }

@@ -16,4 +16,15 @@ object GraftSqlBridge {
     */
   def registerFunctions(ext: SparkSessionExtensions, session: SparkSession): Unit =
     ext.registerFunctions(session.sessionState.functionRegistry)
+
+  /** Run `body` on `exec` with the CALLER's Spark thread context — its
+    * local properties (job description, job group, scheduler pool, SQL
+    * execution id) and active session — the way Spark runs its own
+    * broadcast and subquery work off-thread.
+    */
+  def withThreadLocalCaptured[T](session: SparkSession,
+      exec: java.util.concurrent.ExecutorService)(
+      body: => T): java.util.concurrent.CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      session.asInstanceOf[classic.SparkSession], exec)(body)
 }

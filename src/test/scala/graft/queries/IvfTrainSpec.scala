@@ -6,8 +6,8 @@ import graft.SparkSpec
   * k-means objective (mean best-centroid cosine) must improve over the
   * deterministic first-nlist seed, and training must never LOSE probe
   * quality — trained centroids partition the space at least as well at
-  * the same nprobe. Float-sum order makes trained values non-bit-pinned
-  * (documented); these are the invariants that hold regardless.
+  * the same nprobe. The decimal-sum means (r17) make the trained book
+  * bit-stable, and its bits are pinned.
   */
 class IvfTrainSpec extends SparkSpec {
 
@@ -46,6 +46,37 @@ class IvfTrainSpec extends SparkSpec {
     val a = book(3)
     val b = book(29)
     assert(a === b, "trained centroids changed under a different partitioning")
+  }
+
+  test("the trained book's bits are pinned (sf0.01, nlist 16, iters 3)") {
+    // a digest of every centroid double's raw bits, in c_id order: any
+    // change to Lloyd's arithmetic (expression, rounding, reduction
+    // order) moves it, and every hash-gated output that reads a trained
+    // book (v10d, v12b, v13, v14, v15) would move with it
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def put(l: Long): Unit = { buf.clear(); buf.putLong(l); md.update(buf.array()) }
+    Similarity.ivfTrain(spark, dir, nlist = 16, iters = 3).collect()
+      .sortBy(_.getLong(0)).foreach { r =>
+        put(r.getLong(0))
+        r.getSeq[Double](1).foreach(x => put(java.lang.Double.doubleToRawLongBits(x)))
+        put(java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+      }
+    val digest = md.digest().map("%02x".format(_)).mkString
+    assert(digest ===
+      "74e9abe3f53d0d929a061bd60817870a51dcc6dafb9e216ff153d35348fa3fd4")
+  }
+
+  test("collectBook fails loudly on a duplicate c_id") {
+    // the driver-side sort and the scan kernel's strictly-greater
+    // tie-break both assume distinct ids; a duplicate must not serve
+    import spark.implicits._
+    val book = Seq((1L, Seq(1.0, 0.0), 1.0), (0L, Seq(0.0, 1.0), 1.0),
+      (1L, Seq(0.6, 0.8), 1.0)).toDF("c_id", "cv", "cn")
+    val e = intercept[IllegalArgumentException](Similarity.collectBook(book))
+    assert(e.getMessage.contains("c_id 1 appears more than once"))
+    assert(Similarity.collectBook(book.filter($"cv"(0) =!= 0.6)).map(_._1) === Seq(0L, 1L),
+      "a distinct book comes back in ascending c_id")
   }
 
   test("trained centroids keep every vector assigned and clusters non-degenerate") {

@@ -159,6 +159,46 @@ class ManifestSpec extends SparkSpec {
     assert(ppServe === ppServed)
   }
 
+  test("writeParts writes its parts concurrently and publishes after all") {
+    // each writer arrives at one shared latch and waits for the other:
+    // run one after the other, the first would wait out the bound alone
+    val root = tmp("mfconc")
+    val latch = new java.util.concurrent.CountDownLatch(2)
+    def meet(v: Long)(gen: String): Unit = {
+      latch.countDown()
+      assert(latch.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "the other part never started: parts ran one after the other")
+      Seq(v).toDF("x").write.parquet(gen)
+    }
+    AtomicSwap.writeParts(spark, root)(AtomicSwap.Main -> meet(1L), "b" -> meet(2L))
+    def read(part: String) =
+      spark.read.parquet(AtomicSwap.dataDir(spark, root, part)).as[Long].collect().toSeq
+    assert(read(AtomicSwap.Main) === Seq(1L))
+    assert(read("b") === Seq(2L))
+  }
+
+  test("a build that fails in one part publishes nothing, and the next " +
+      "build prunes its strays") {
+    val root = tmp("mfstray")
+    def ok(v: Long)(gen: String): Unit = Seq(v).toDF("x").write.parquet(gen)
+    AtomicSwap.writeParts(spark, root)(AtomicSwap.Main -> ok(1L), "b" -> ok(2L))
+    val before = Seq(AtomicSwap.Main, "b").map(AtomicSwap.dataDir(spark, root, _))
+    val e = intercept[IllegalStateException] {
+      AtomicSwap.writeParts(spark, root)(AtomicSwap.Main -> ok(3L),
+        "b" -> (_ => throw new IllegalStateException("part b fails")))
+    }
+    assert(e.getMessage === "part b fails")
+    assert(Seq(AtomicSwap.Main, "b").map(AtomicSwap.dataDir(spark, root, _)) === before,
+      "a failed build must leave every part on its published generation")
+    // the main part finished before the failure surfaced: a stray g1
+    assert(fs.exists(new Path(root, "g1/_SUCCESS")))
+    AtomicSwap.writeParts(spark, root)(AtomicSwap.Main -> ok(5L), "b" -> ok(6L))
+    assert(AtomicSwap.dataDir(spark, root).endsWith("g2"))
+    assert(!fs.exists(new Path(root, "g1")), "the failed build's stray is pruned")
+    assert(spark.read.parquet(AtomicSwap.dataDir(spark, root, "b"))
+      .as[Long].collect().toSeq === Seq(6L))
+  }
+
   test("commitAppend bumps the manifest without changing the generation") {
     val root = tmp("mfapp")
     AtomicSwap.writeGen(spark, root) { gen =>

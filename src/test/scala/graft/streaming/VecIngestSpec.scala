@@ -85,6 +85,47 @@ class VecIngestSpec extends SparkSpec {
       "streamed IVF ingest diverged from the batch append")
   }
 
+  test("appends count their own write: a replayed batch writes and records nothing") {
+    val base = java.nio.file.Files.createTempDirectory("vecingestcount").toString
+    val emb = graft.Tables(spark, dir, "embeddings")
+    val cut = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
+    val halfDir = s"$base/halfdata"
+    emb.filter(col("vec_id") <= cut).write.parquet(s"$halfDir/embeddings.parquet")
+    val book = Similarity.ivfTrain(spark, halfDir, nlist = 16, iters = 0)
+    val idx = s"$base/idx"
+    IvfIndex.writeWithCodebook(Similarity.ivfAssignWith(spark, halfDir, book), book, idx)
+    val t = IndexIngest.ivfMaintained(idx, threshold = 1.0,
+      retrain = _ => fail("the rebuild policy must not fire"))
+    def ids(lo: Long, hi: Long) = emb.filter(col("vec_id") > cut + lo &&
+      col("vec_id") <= cut + hi).select("vec_id", "label", "embedding")
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listing(): (Seq[String], Seq[String]) = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(idx), true)
+      val all = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .toSeq
+      (all.filter(_.getName.startsWith("part-")).map(_.toString).sorted,
+        all.filter(_.getName.startsWith("mf-")).map(_.getName).sorted)
+    }
+
+    val first = ids(0, 10)
+    assert(IndexIngest.processBatch(first, t) === first.count())
+    val (files, manifests) = listing()
+    val drift = t.drift
+    // the replay: every row is already in the store
+    assert(IndexIngest.processBatch(first, t) === 0L)
+    assert(listing() === (files, manifests),
+      "an empty append must leave no data file and no manifest bump")
+    assert(t.drift === drift, "an empty append must not move the drift state")
+    // half present: only the new half is written and counted
+    val newRows = ids(10, 17).count()
+    assert(IndexIngest.processBatch(ids(5, 17), t) === newRows)
+    assert(t.drift === (drift._1, drift._2 + newRows))
+    assert(listing()._2 !== manifests, "a non-empty append bumps the manifest")
+    assert(IvfIndex.read(spark, idx).count() ===
+      emb.filter(col("vec_id") <= cut + 17).count())
+  }
+
   test("kill mid-stream, resume from checkpoint: index converges to the batch append") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
